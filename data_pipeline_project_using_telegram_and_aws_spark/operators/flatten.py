@@ -12,17 +12,10 @@ Semantics reproduced exactly:
   other field in the update is dropped.
 - null default: messages without ``text`` (stickers, photos) still produce
   a row with ``text IS NULL`` (ipynb:645-646).
-
-``flatten_updates_pandas_udf`` is a semantically identical Arrow-batched
-Pandas-UDF variant: the reference's ``parse_data`` is the moral equivalent
-of a row UDF (SURVEY §2.10), so it doubles as the canonical exercise of the
-engine's Python UDF surface. Production code should use the native variant
-(consistently ~an order of magnitude faster — no serialization boundary).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 # (enriched column, nested source field) in DDL order (ipynb:732-740)
@@ -44,61 +37,3 @@ def flatten_updates(updates: DataFrame) -> DataFrame:
         *[F.col(src).alias(dst) for dst, src in _FLATTEN_MAPPING]
     )
 
-
-def flatten_updates_pandas_udf(updates: DataFrame) -> DataFrame:
-    """Same operator through the Arrow/Pandas UDF path (SURVEY §2.10).
-
-    Serializes the ``message`` struct through Arrow, flattens in pandas,
-    returns the identical schema. Exists to keep the Python-UDF surface
-    exercised and benchmarked against the native path.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
-    out_type = T.StructType(
-        [
-            T.StructField("message_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("user_is_bot", T.BooleanType()),
-            T.StructField("user_first_name", T.StringType()),
-            T.StructField("chat_id", T.LongType()),
-            T.StructField("chat_type", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("date", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_type)
-    def _flatten(message: pd.Series) -> pd.DataFrame:
-        # Arrow hands a struct argument to the worker as a pd.DataFrame
-        # (one column per field); the annotation must still say Series —
-        # Spark's typehint checker only accepts Series inputs.
-        def field(name: str) -> pd.Series:
-            if isinstance(message, pd.DataFrame):
-                if name in message.columns:
-                    return message[name]
-                return pd.Series([None] * len(message), index=message.index)
-            return message.map(
-                lambda v: v.get(name) if isinstance(v, dict) else None
-            )
-
-        def sub(parent: pd.Series, key: str) -> pd.Series:
-            return parent.map(
-                lambda v: v.get(key) if isinstance(v, dict) else None
-            )
-
-        frm, chat = field("from"), field("chat")
-        return pd.DataFrame(
-            {
-                "message_id": field("message_id"),
-                "user_id": sub(frm, "id"),
-                "user_is_bot": sub(frm, "is_bot"),
-                "user_first_name": sub(frm, "first_name"),
-                "chat_id": sub(chat, "id"),
-                "chat_type": sub(chat, "type"),
-                "text": field("text"),
-                "date": field("date"),
-            }
-        )
-
-    return updates.select(_flatten(F.col("message")).alias("m")).select("m.*")

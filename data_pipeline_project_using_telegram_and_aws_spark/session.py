@@ -17,10 +17,24 @@ and we mark them explicitly with ``broadcast()`` anyway.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "data-pipeline-spark-engine"
+
+
+def spark_cpus(default: str = "*") -> str:
+    """``$SPARK_GRAFT_CPUS`` (``default`` when unset), checked to be a
+    positive integer or ``*`` — the forms ``local[N]`` accepts. An empty
+    value, ``0`` or anything else raises instead of building a master
+    such as ``local[]`` or ``local[0]``."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", default)
+    if cpus != "*" and not (re.fullmatch(r"[0-9]+", cpus) and int(cpus) > 0):
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer or '*', got {cpus!r}"
+        )
+    return cpus
 
 
 def get_spark(
@@ -32,13 +46,16 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's tuning profile.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
-    ``local[*]``) when no active session exists.
+    ``local[*]``) when no active session exists; the variable is read,
+    and validated by :func:`spark_cpus`, only when ``master`` or
+    ``shuffle_partitions`` is left to default.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    if master is None or shuffle_partitions is None:
+        cpus = spark_cpus()
+        if master is None:
+            master = f"local[{cpus}]"
+        if shuffle_partitions is None:
+            shuffle_partitions = int(cpus) if cpus != "*" else 32
 
     builder = (
         SparkSession.builder.appName(app_name)

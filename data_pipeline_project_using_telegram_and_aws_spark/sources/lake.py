@@ -52,7 +52,7 @@ import datetime as dt
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..schemas import RAW_UPDATE_SCHEMA
+from ..schemas import ENRICHED_SCHEMA, RAW_UPDATE_SCHEMA
 
 # The reference pins the pipeline clock to UTC-3 (ipynb:310:
 # ``timezone(offset=timedelta(hours=-3))``): partition values are the
@@ -171,7 +171,10 @@ class TelegramLake:
         (ipynb:596: one compacted Parquet per partition). At 100 TB a single
         file per day serializes the write, so callers pass a
         ``files_per_partition`` sized from input bytes (SURVEY §7 risk 2).
-        Dynamic partition overwrite makes day re-runs idempotent.
+        Dynamic partition overwrite makes day re-runs idempotent. The write
+        is the only Spark action here: views registered through
+        :meth:`register_table` are re-registered afterwards under the
+        declared schema, which lists files but runs no job.
         """
         from ..operators.compaction import compact_by_partition
 
@@ -195,25 +198,34 @@ class TelegramLake:
     def read_enriched(
         self, spark: SparkSession, merge_schema: bool = False
     ) -> DataFrame:
-        """Read the enriched zone. ``merge_schema=True`` unions the
-        footer schemas across partitions — the day the pipeline grows a
-        column, partitions written before it lack the field, and the
-        default single-footer read would either miss the new column or
-        fail depending on which file Spark samples; merged reads return
-        the union schema with NULLs for pre-evolution days (pinned in
-        tests/test_etl_pipeline.py). Costs one footer read per file, so
-        keep it off for schema-stable zones and on during migrations."""
-        reader = spark.read
+        """Read the enriched zone with Athena's semantics: the declared
+        DDL schema (``ENRICHED_SCHEMA``, ipynb:732-750 — the same columns
+        :meth:`register_persistent_table` creates), in DDL order. No
+        footer is sampled, so the read runs no Spark job; a column a file
+        holds but the DDL does not declare is not read, and a declared
+        column a file lacks reads as NULL. An enriched root with no
+        partition yet reads as an empty table with the DDL columns.
+
+        ``merge_schema=True`` is for migrations: it infers and unions the
+        footer schemas across partitions instead, so a column the pipeline
+        grew shows up before the DDL declares it, with NULLs for
+        pre-evolution days (pinned in tests/test_etl_pipeline.py). It
+        costs one footer read per file."""
         if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(self.enriched_path)
+            return spark.read.option("mergeSchema", "true").parquet(
+                self.enriched_path
+            )
+        return spark.read.schema(ENRICHED_SCHEMA).parquet(self.enriched_path)
 
     def register_table(self, spark: SparkSession, name: str = "telegram") -> None:
         """Catalog layer (SURVEY §2.1 S9): expose the enriched zone as the
         ``telegram`` table — the Athena ``CREATE EXTERNAL TABLE`` +
-        partition-discovery analogue. Partition discovery happens on read
-        (Spark infers ``context_date=`` directories); a view keeps this
-        zero-copy and always-fresh without a metastore dependency."""
+        partition-discovery analogue, over the declared DDL schema of
+        :meth:`read_enriched`. Partition discovery happens on read (Spark
+        lists the ``context_date=`` directories); no Spark job runs, and
+        a view keeps this zero-copy and always-fresh without a metastore
+        dependency. :meth:`write_enriched` re-registers the view after
+        every write."""
         self.read_enriched(spark).createOrReplaceTempView(name)
         self._registered.add(name)
 
@@ -227,8 +239,6 @@ class TelegramLake:
         Unlike a temp view, the table is session-independent: any session
         sharing the catalog (and, with a metastore, any future process)
         sees it without re-registration."""
-        from ..schemas import ENRICHED_SCHEMA
-
         cols = ", ".join(
             f"{f.name} {f.dataType.simpleString().upper()}"
             for f in ENRICHED_SCHEMA.fields

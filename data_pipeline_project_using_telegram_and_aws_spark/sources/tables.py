@@ -12,12 +12,13 @@ which Spark's vectorized reader rejects. We flip the runtime conf
 keeping the fast vectorized path) and rewrite those columns to
 ``TimestampType`` with integer-division truncation to microseconds —
 exactly how DuckDB reads the same files, so oracle comparisons line up.
-The nanos columns are detected once per table from the parquet footer
-(pyarrow, metadata-only read) and cached.
+The nanos columns are detected once per table version from the parquet
+footer (pyarrow, metadata-only read) and cached.
 """
 
 from __future__ import annotations
 
+import os
 from functools import lru_cache
 
 import pyarrow.parquet as pq
@@ -27,22 +28,37 @@ from pyspark.sql import functions as F
 from ..schemas import TESTDATA_TABLES
 
 
-# path -> inferred Spark StructType (r14). Pure METADATA, same class as
-# the pyarrow footer cache below (path-keyed, process-lifetime): repeat
+# path -> (file status, inferred Spark StructType). Pure METADATA: repeat
 # reads pass the schema explicitly, skipping Spark's per-call footer
 # schema inference — measured 0.089 → 0.018 s per read at sf0.1, paid by
 # EVERY query build on EVERY invocation (driver-side plan-build cost,
 # guide §7.3). No data, no plan, no results are cached: the scan still
-# lists, reads, and computes from the parquet files on every run. A
-# file whose schema changes under a running session would need a
-# process restart — the same caveat _nano_timestamp_columns already
-# carries.
+# lists, reads, and computes from the parquet files on every run. An
+# entry is used only while the files' status (names, sizes, mtimes) is
+# the one it was inferred from, so a table rewritten under a running
+# session is re-inferred.
 _SCHEMA_CACHE: dict = {}
 
 
+def _file_status(path: str) -> tuple:
+    """(name, size, mtime) of every file of a local parquet table — the
+    file itself or the files under its directory. Empty for a path this
+    process cannot stat (a remote filesystem), which is never cached."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for base, _dirs, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(base, f))
+            out.append((os.path.join(base, f), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 @lru_cache(maxsize=256)
-def _nano_timestamp_columns(path: str) -> tuple[str, ...]:
-    """Column names stored as timestamp[ns] in the parquet footer."""
+def _nano_timestamp_columns(path: str, status: tuple) -> tuple[str, ...]:
+    """Column names stored as timestamp[ns] in the parquet footer of the
+    table version ``status`` (see :func:`_file_status`)."""
     import pyarrow as pa
     import pyarrow.types as pat
 
@@ -50,7 +66,6 @@ def _nano_timestamp_columns(path: str) -> tuple[str, ...]:
         schema = pq.read_schema(path)
     except Exception:
         import glob
-        import os
 
         files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
         if not files:
@@ -77,15 +92,17 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     nano branch, so TZ invariance silently depended on which table a
     session read first — caught by tests/test_tz_matrix.py.)"""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    nano_cols = _nano_timestamp_columns(path)
+    status = _file_status(path)
+    nano_cols = _nano_timestamp_columns(path, status)
     if nano_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+    cached = _SCHEMA_CACHE.get(path)
+    if status and cached is not None and cached[0] == status:
+        df = spark.read.schema(cached[1]).parquet(path)
     else:
-        df = spark.read.schema(schema).parquet(path)
+        df = spark.read.parquet(path)
+        if status:
+            _SCHEMA_CACHE[path] = (status, df.schema)
     for c in nano_cols:
         # integer division keeps full int64 precision (a double-based
         # divide would corrupt epoch-nano values > 2^53)

@@ -5,11 +5,14 @@ processes the *previous* day's partition (D-1, ipynb:562), flattens each
 update with ``parse_data`` and compacts one day of small JSON files into a
 single Parquet file in the enriched zone.
 
-Spark shape (SURVEY.md §3.2): one declarative job —
+Spark shape (SURVEY.md §3.2): one declarative query —
 partition-pruned JSON read → flatten select → compaction repartition →
-dynamic-partition-overwrite Parquet write. Parallelism, spill, and retry
-come from the engine; re-runs are idempotent (ST4 upgrade over the
-reference's duplicate-on-rerun behavior).
+dynamic-partition-overwrite Parquet write — that scans the raw day once.
+The write is the only Spark action: there is no emptiness probe before
+it, and the row count comes from the footers of the files it wrote.
+Parallelism, spill, and retry come from the engine; re-runs are
+idempotent (ST4 upgrade over the reference's duplicate-on-rerun
+behavior).
 """
 
 from __future__ import annotations
@@ -51,37 +54,39 @@ def run_daily_etl(
         "context_date", F.lit(str(context_date)).cast("date")
     )
     partition_dir = f"{lake.enriched_path}/context_date={context_date}"
-    # Dynamic partition overwrite only replaces partitions PRESENT in the
-    # incoming data: a re-run whose input flattened to zero rows writes
-    # nothing, the previous run's files survive, and a footer count would
-    # report the stale number as this run's output. Probe emptiness first
-    # (a limit-1 job, negligible next to the write) and report honestly 0;
-    # whether the stale partition is also deleted is the caller's call
-    # (overwrite_on_empty) — never a silent default.
-    if flat.isEmpty():
-        existing = _partition_row_count(spark, partition_dir)
-        if existing > 0:
-            if overwrite_on_empty:
-                _log.warning(
-                    "run_daily_etl: empty input for %s; deleting the "
-                    "existing %d-row partition (overwrite_on_empty=True)",
-                    context_date, existing,
-                )
-                _delete_path(spark, partition_dir)
-            else:
-                _log.warning(
-                    "run_daily_etl: empty input for %s but the target "
-                    "partition holds %d rows from a previous load; "
-                    "keeping it (pass overwrite_on_empty=True to delete)",
-                    context_date, existing,
-                )
-        return 0
-    # ONE full-scan action: write, then report the row count from the
-    # written partition's parquet FOOTERS — a metadata-only read, no
-    # second scan and no cache (the previous cache+count shape cost an
-    # extra action per day-partition job).
+    # ONE full-scan action: the write. Dynamic partition overwrite replaces
+    # a partition only when the input has rows for it, and then always
+    # with newly named files; so an unchanged file set means the input was
+    # empty. The count is read from the footers of the written files —
+    # metadata only, no Spark job. (A pyspark Observation would count
+    # during the scan, but on Spark 4.1 it leaves a non-serializable
+    # ObservationManager on the session, which fails every later task
+    # whose closure captures the session, e.g. Spark ML model transforms.)
+    before = _parquet_files(spark, partition_dir)
     lake.write_enriched(flat, files_per_partition=files_per_partition)
-    return _partition_row_count(spark, partition_dir)
+    after = _parquet_files(spark, partition_dir)
+    if after != before:
+        return _row_count(spark, after)
+    # Empty input: the previous run's files, if any, survive. Report
+    # honestly 0; whether the stale partition is also deleted is the
+    # caller's call (overwrite_on_empty) — never a silent default.
+    existing = _row_count(spark, after)
+    if existing > 0:
+        if overwrite_on_empty:
+            _log.warning(
+                "run_daily_etl: empty input for %s; deleting the "
+                "existing %d-row partition (overwrite_on_empty=True)",
+                context_date, existing,
+            )
+            _delete_path(spark, partition_dir)
+        else:
+            _log.warning(
+                "run_daily_etl: empty input for %s but the target "
+                "partition holds %d rows from a previous load; "
+                "keeping it (pass overwrite_on_empty=True to delete)",
+                context_date, existing,
+            )
+    return 0
 
 
 def _delete_path(spark: SparkSession, directory: str) -> None:
@@ -92,25 +97,30 @@ def _delete_path(spark: SparkSession, directory: str) -> None:
         fs.delete(path, True)
 
 
-def _partition_row_count(spark: SparkSession, partition_dir: str) -> int:
-    """Row count of one written day-partition from parquet footer
-    metadata — files listed and footers read through the Hadoop FS API,
-    so the count works on any Hadoop filesystem (HDFS/S3A/local), not
-    just ``file://`` paths as the previous local-glob + pyarrow version
-    did. Still metadata-only: no data pages are touched."""
+def _parquet_files(spark: SparkSession, directory: str) -> list[str]:
+    """The Parquet files of one day-partition, listed through the Hadoop
+    FS API so it works on any Hadoop filesystem (HDFS/S3A/local)."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(directory)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return []
+    return sorted(
+        status.getPath().toString()
+        for status in fs.listStatus(path)
+        if status.getPath().getName().endswith(".parquet")
+    )
+
+
+def _row_count(spark: SparkSession, files: list[str]) -> int:
+    """Rows in ``files`` from their parquet footers: no data pages are
+    touched."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(partition_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return 0
     total = 0
-    for status in fs.listStatus(path):
-        fpath = status.getPath()
-        if not fpath.getName().endswith(".parquet"):
-            continue
+    for f in files:
         infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            fpath, conf
+            jvm.org.apache.hadoop.fs.Path(f), conf
         )
         reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
         try:

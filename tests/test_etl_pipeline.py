@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
+import itertools
 import json
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +20,10 @@ from pyspark.sql import functions as F
 from data_pipeline_project_using_telegram_and_aws_spark.plans.telegram_queries import (
     run_telegram_query,
 )
-from data_pipeline_project_using_telegram_and_aws_spark.schemas import ENRICHED_COLUMNS
+from data_pipeline_project_using_telegram_and_aws_spark.schemas import (
+    ENRICHED_COLUMNS,
+    ENRICHED_SCHEMA,
+)
 from data_pipeline_project_using_telegram_and_aws_spark.sources.lake import TelegramLake
 from data_pipeline_project_using_telegram_and_aws_spark.streaming.etl_job import run_daily_etl
 from data_pipeline_project_using_telegram_and_aws_spark.streaming.ingest import (
@@ -270,3 +275,106 @@ def test_enriched_schema_evolution_reads_union_with_merge(spark, tmp_path):
     rows = {r.message_id: r for r in merged.collect()}
     assert rows[1].reply_kind is None and rows[2].reply_kind == "reply"
     assert len(rows) == 2
+
+
+_GROUPS = itertools.count()
+
+
+@contextmanager
+def _spark_jobs(spark):
+    """Collect the ids of the Spark jobs the block runs, via a job group
+    and the status tracker. The listener bus is drained first, so every
+    job the block started is visible."""
+    sc = spark.sparkContext
+    group = f"etl-jobs-{next(_GROUPS)}"
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs += sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _raw_day(lk, day, updates):
+    part = f"{lk.raw_path}/context_date={day}"
+    os.makedirs(part)
+    with open(os.path.join(part, "b.json"), "w") as f:
+        for u in updates:
+            f.write(json.dumps(u) + "\n")
+    return part
+
+
+def test_daily_etl_is_one_scan_and_one_write(spark, tmp_path):
+    """The day's ETL is the write alone — its shuffle-map job and its
+    write job. There is no emptiness probe before the write, the count
+    comes from the written footers, and write_enriched re-registers the
+    view without schema inference."""
+    lk = TelegramLake(str(tmp_path), chat_id=CHAT_ID)
+    _raw_day(lk, "2024-03-07", UPDATES[:2])  # a prior day under the view
+    assert run_daily_etl(spark, lk, context_date="2024-03-07") == 2
+    lk.register_table(spark, "telegram_jobs")
+    today = lk.today()
+    _raw_day(lk, today, UPDATES[:4])
+    with _spark_jobs(spark) as jobs:
+        n = run_daily_etl(spark, lk, context_date=today)
+    assert len(jobs) == 2
+    # the returned count is the rows written, and the re-registered view
+    # sees them beside the prior day's
+    assert n == 4
+    assert spark.table("telegram_jobs").count() == 6
+    files = glob.glob(f"{lk.enriched_path}/context_date={today}/*.parquet")
+    assert len(files) == 1
+
+
+def test_etl_leaves_the_session_serializable(spark, tmp_path):
+    """Tasks whose closures capture the session (Spark ML model
+    transforms do) must still serialize after the ETL ran in it."""
+    lk = TelegramLake(str(tmp_path), chat_id=CHAT_ID)
+    today = lk.today()
+    _raw_day(lk, today, UPDATES[:2])
+    assert run_daily_etl(spark, lk, context_date=today) == 2
+    jvm = spark._jvm
+    out = jvm.java.io.ObjectOutputStream(jvm.java.io.ByteArrayOutputStream())
+    out.writeObject(spark._jsparkSession)
+    out.close()
+
+
+def test_register_table_runs_no_spark_job(spark, lake):
+    with _spark_jobs(spark) as jobs:
+        lake.register_table(spark, "telegram_nojob")
+    assert jobs == []
+    assert spark.table("telegram_nojob").count() == 4
+
+
+def test_register_table_over_empty_enriched_root(spark, tmp_path):
+    """Before the first ETL the enriched root holds no partition. Its
+    table is empty with the DDL columns, rather than failing to infer a
+    schema from footers that do not exist."""
+    lk = TelegramLake(str(tmp_path))
+    os.makedirs(lk.enriched_path)
+    lk.register_table(spark, "telegram_empty")
+    df = spark.table("telegram_empty")
+    assert df.schema == ENRICHED_SCHEMA
+    assert df.count() == 0
+
+
+def test_default_read_enriched_is_the_declared_ddl_schema(spark, tmp_path):
+    """The default read has Athena's declared-schema semantics: exactly
+    the DDL columns in DDL order, an undeclared column a file holds is
+    not read, and a declared column a file lacks reads as NULL."""
+    lk = TelegramLake(str(tmp_path))
+    row = spark.createDataFrame(
+        [(7, "hi", "reply", "2024-01-02")],
+        ["message_id", "text", "reply_kind", "context_date"],
+    ).withColumn("context_date", F.to_date("context_date"))
+    row.write.partitionBy("context_date").parquet(lk.enriched_path)
+
+    df = lk.read_enriched(spark)
+    assert df.columns == ENRICHED_COLUMNS + ["context_date"]
+    assert df.schema == ENRICHED_SCHEMA
+    (got,) = df.collect()
+    assert (got.message_id, got.text, got.user_id) == (7, "hi", None)
+    assert got.context_date == dt.date(2024, 1, 2)

@@ -13,7 +13,6 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 from data_pipeline_project_using_telegram_and_aws_spark.operators.flatten import (
     flatten_updates,
-    flatten_updates_pandas_udf,
 )
 from data_pipeline_project_using_telegram_and_aws_spark.schemas import (
     ENRICHED_COLUMNS,
@@ -71,13 +70,6 @@ def test_flatten_missing_structs(spark):
     row = flatten_updates(_updates_df(spark, [bare])).collect()[0]
     assert row.message_id == 12
     assert row.user_id is None and row.chat_id is None and row.text is None
-
-
-def test_pandas_udf_variant_matches_native(spark):
-    df = _updates_df(spark, [FULL_UPDATE, STICKER_UPDATE])
-    native = {tuple(r) for r in flatten_updates(df).collect()}
-    viaudf = {tuple(r) for r in flatten_updates_pandas_udf(df).collect()}
-    assert native == viaudf
 
 
 _messages = st.fixed_dictionaries(

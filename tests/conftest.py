@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -87,3 +89,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` collects the ids of the Spark jobs
+    the block runs, via a job group and the status tracker. The listener
+    bus is drained first, so every job the block started is visible."""
+
+    @contextmanager
+    def collect():
+        sc = spark.sparkContext
+        group = f"test-jobs-{next(_JOB_GROUPS)}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs += sc.statusTracker().getJobIdsForGroup(group)
+
+    return collect

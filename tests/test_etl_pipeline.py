@@ -9,10 +9,8 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
-import itertools
 import json
 import os
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -277,27 +275,6 @@ def test_enriched_schema_evolution_reads_union_with_merge(spark, tmp_path):
     assert len(rows) == 2
 
 
-_GROUPS = itertools.count()
-
-
-@contextmanager
-def _spark_jobs(spark):
-    """Collect the ids of the Spark jobs the block runs, via a job group
-    and the status tracker. The listener bus is drained first, so every
-    job the block started is visible."""
-    sc = spark.sparkContext
-    group = f"etl-jobs-{next(_GROUPS)}"
-    jobs: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs += sc.statusTracker().getJobIdsForGroup(group)
-
-
 def _raw_day(lk, day, updates):
     part = f"{lk.raw_path}/context_date={day}"
     os.makedirs(part)
@@ -307,7 +284,7 @@ def _raw_day(lk, day, updates):
     return part
 
 
-def test_daily_etl_is_one_scan_and_one_write(spark, tmp_path):
+def test_daily_etl_is_one_scan_and_one_write(spark, spark_jobs, tmp_path):
     """The day's ETL is the write alone — its shuffle-map job and its
     write job. There is no emptiness probe before the write, the count
     comes from the written footers, and write_enriched re-registers the
@@ -318,7 +295,7 @@ def test_daily_etl_is_one_scan_and_one_write(spark, tmp_path):
     lk.register_table(spark, "telegram_jobs")
     today = lk.today()
     _raw_day(lk, today, UPDATES[:4])
-    with _spark_jobs(spark) as jobs:
+    with spark_jobs() as jobs:
         n = run_daily_etl(spark, lk, context_date=today)
     assert len(jobs) == 2
     # the returned count is the rows written, and the re-registered view
@@ -342,8 +319,8 @@ def test_etl_leaves_the_session_serializable(spark, tmp_path):
     out.close()
 
 
-def test_register_table_runs_no_spark_job(spark, lake):
-    with _spark_jobs(spark) as jobs:
+def test_register_table_runs_no_spark_job(spark, spark_jobs, lake):
+    with spark_jobs() as jobs:
         lake.register_table(spark, "telegram_nojob")
     assert jobs == []
     assert spark.table("telegram_nojob").count() == 4

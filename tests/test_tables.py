@@ -23,20 +23,15 @@ def test_read_parquet_sees_a_rewritten_table(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [(1, 2)]
 
 
-def test_read_parquet_reuses_the_schema_of_an_unchanged_table(spark, tmp_path):
+def test_read_parquet_reuses_the_schema_of_an_unchanged_table(
+    spark, spark_jobs, tmp_path
+):
     """A second read of the same files takes the cached schema and runs
     no schema-inference job."""
     path = str(tmp_path / "t.parquet")
     spark.createDataFrame([(1, "x")], ["a", "s"]).write.parquet(path)
     first = read_parquet(spark, path)
-
-    sc = spark.sparkContext
-    sc.setJobGroup("tables-cache-hit", "tables-cache-hit")
-    try:
+    with spark_jobs() as jobs:
         again = read_parquet(spark, path)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert sc.statusTracker().getJobIdsForGroup("tables-cache-hit") == []
+    assert jobs == []
     assert again.schema == first.schema

@@ -78,7 +78,6 @@ HEADLINE = [
     "ss3_lsh_bucketed_neardup",
     "ss5_ivf_topk",
     "tx2_quality_scores",
-    "tx6_document_frequency",
     "tx7_repetition_scores",
     "cu1_corpus_curation",
     "pk1_sequence_packing",
@@ -104,6 +103,15 @@ HEADLINE = [
 
 
 N_SWEEPS = 3
+
+
+def headline_names(qs: dict) -> list[str]:
+    """``HEADLINE``, checked against the registry ``qs``: a name that is
+    not registered raises rather than silently shrinking the bench."""
+    unknown = [n for n in HEADLINE if n not in qs]
+    if unknown:
+        raise KeyError(f"bench HEADLINE names unregistered queries: {unknown}")
+    return list(HEADLINE)
 
 
 def _timed_once(spark, fn, warmup: bool) -> float:
@@ -240,7 +248,7 @@ def main() -> None:
     )
 
     qs.setdefault("pk2_materialized_sequences", pk2_materialized_sequences)
-    names = [n for n in HEADLINE if n in qs]
+    names = headline_names(qs)
 
     timings: dict[str, float] = {}
     builds: dict[str, float] = {}

@@ -144,3 +144,51 @@ def test_cast_avg_unparseable_raises_instead_of_mistranslating():
         presto_to_spark_sql("SELECT CAST(AVG(length(text) AS INT FROM t")
     with pytest.raises(ValueError, match="tail"):
         presto_to_spark_sql("SELECT CAST(AVG(x) AS ) FROM t")
+
+
+def test_one_argument_from_unixtime_becomes_timestamp_seconds():
+    # Presto's from_unixtime(x) is a timestamp; Spark's is a string
+    assert presto_to_spark_sql("SELECT from_unixtime(`date`) FROM t") == (
+        "SELECT timestamp_seconds(`date`) FROM t"
+    )
+    assert presto_to_spark_sql("SELECT FROM_UNIXTIME(floor(ms / 1000)) FROM t") == (
+        "SELECT timestamp_seconds(floor(ms / 1000)) FROM t"
+    )
+    for sql in (
+        "SELECT from_unixtime(x, 'yyyy-MM-dd') FROM t",  # Spark's own form
+        "SELECT my_from_unixtime(x) FROM t",
+    ):
+        assert presto_to_spark_sql(sql) == sql
+    # a one-argument call nested in the two-argument form is rewritten
+    assert presto_to_spark_sql("SELECT from_unixtime(from_unixtime(x), 'y') FROM t") == (
+        "SELECT from_unixtime(timestamp_seconds(x), 'y') FROM t"
+    )
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/New_York", "Australia/Lord_Howe"])
+def test_from_unixtime_rewrite_keeps_the_reference_parse(spark, zone):
+    """The reference's parse, ``CAST(date_format(from_unixtime(x), …) AS
+    timestamp)``, gives the same timestamp with the rewritten call,
+    including epochs in the DST gap and on both sides of the overlap."""
+    epochs = [
+        1710054000,  # 2024-03-10 07:00 UTC: New York skips 02:00-03:00
+        1710053999,
+        1730611800,  # 2024-11-03 05:30 UTC = 01:30 EDT
+        1730615400,  # 2024-11-03 06:30 UTC = 01:30 EST, the repeated hour
+        1712414700,  # 2024-04-06 14:45 UTC = 01:45 on Lord Howe, daylight time
+        1712416500,  # 15:15 UTC = 01:45 again: the overlap is half an hour
+        0,
+    ]
+    ref = ("SELECT x, CAST(date_format(from_unixtime(x), '%Y-%m-%d %H:%i:%s') "
+           "AS timestamp) AS p FROM VALUES {} AS v(x) ORDER BY x")
+    values = ", ".join(f"({e}L)" for e in epochs)
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        translated = presto_to_spark_sql(ref.format(values))
+        assert "timestamp_seconds" in translated
+        untranslated_call = translated.replace("timestamp_seconds", "from_unixtime")
+        assert (spark.sql(translated).collect()
+                == spark.sql(untranslated_call).collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)

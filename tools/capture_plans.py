@@ -30,7 +30,7 @@ def main() -> None:
     )
 
     qs.setdefault("pk2_materialized_sequences", pk2_materialized_sequences)
-    names = sys.argv[2:] or [n for n in bench.HEADLINE if n in qs]
+    names = sys.argv[2:] or bench.headline_names(qs)
 
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")

@@ -7,6 +7,13 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``data_pipeline_project_using_telegram_and_aws_spark``
 (see SURVEY.md §2 for the operator inventory each query covers).
+
+Python workers must be able to import that package. Three rows run
+Python UDFs — ``mm2_decode_features``, ``wc1_warc_html_extract`` and
+``dx1_document_extract`` — and their workers import the package by
+name. Run the driver from the repository root, or put the root on
+``PYTHONPATH``; from any other working directory those rows fail in
+the workers with ``ModuleNotFoundError``.
 """
 
 from __future__ import annotations

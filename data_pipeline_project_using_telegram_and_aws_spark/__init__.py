@@ -16,6 +16,11 @@ Layout
 - ``plans``      : named analytical queries (reference five + breadth
   surface over the star schema) with DuckDB oracle SQL.
 - ``streaming``  : Structured Streaming ingestion + daily compaction job.
+
+Modules outside the product surface — not reachable by import from the
+driver contract (``__spark_entry__.py``), ``bench.py``, ``perfbench/``
+or the Telegram pipeline layers — are listed for deletion in
+``tests/test_product_surface.py``; a new one fails that test.
 """
 
 __version__ = "0.1.0"

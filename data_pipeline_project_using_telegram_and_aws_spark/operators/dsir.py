@@ -163,26 +163,6 @@ def dsir_log_ratios(
     )
 
 
-def build_ratio_table(
-    target_profile: DataFrame,
-    raw_profile: DataFrame,
-    table: str,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    smoothing: float = 1.0,
-) -> None:
-    """Persist :func:`dsir_log_ratios` as a saved table — the frozen
-    scoring reference for `streaming/dsir_gate.py` (the
-    `decontamination.build_eval_gram_table` discipline: built once per
-    profile version, broadcast whole by every probe, so a plain
-    unbucketed table is deliberate). Refreshing the raw side (e.g.
-    from `stat_ledgers.profile_so_far`) means a NEW table name — the
-    streaming gate's replay contract pins the table for a checkpoint's
-    life."""
-    dsir_log_ratios(
-        target_profile, raw_profile, n_buckets, smoothing
-    ).write.mode("overwrite").format("parquet").saveAsTable(table)
-
-
 def dsir_importance(
     corpus: DataFrame,
     log_ratios: DataFrame,

@@ -31,8 +31,8 @@ unioned, and every signal here would silently blend them.
 Slices join NULL-SAFELY: group keys ride inside ONE struct column, and
 Spark's struct equality treats NULL fields as equal in joins/groupBy —
 so a NULL slice value is one slice, not a row that full-outer-joins
-past itself every time (the `streaming/ivm.py` null-group lesson,
-applied by construction instead of by eqNullSafe plumbing)."""
+past itself every time (applied by construction instead of by
+eqNullSafe plumbing)."""
 
 from __future__ import annotations
 

@@ -251,207 +251,3 @@ def funnel_report(
         "step int, event_type string, n_users long, "
         "conversion_from_start double, conversion_from_prev double",
     )
-
-
-def funnel_update_state(
-    batch: DataFrame,
-    state_table: str,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    batch_id: int = 0,
-    n_buckets: int = 64,
-    step_within_seconds: int | None = None,
-    max_events_per_user: int | None = None,
-) -> None:
-    """Incremental funnel: continue each user's fold from persisted
-    state — the daily-batch shape, COMPOSED from existing machinery
-    rather than re-built: the per-user accumulator (want,
-    first_ts) is just a keyed row, so persistence is
-    `streaming/upsert.upsert_batch` (bucket-partitioned, replay-
-    convergent, pruned lookups) with ``seq = batch_id``.
-
-    Ordering contract, stated loudly: the fold is order-sensitive, so
-    correctness REQUIRES batches to arrive in per-user event-time
-    order (each batch's events all at-or-after the user's previously
-    folded events — the append-only daily-ingest shape, same caveat
-    the exact-dedup ingest documents for its reject zone). Within a
-    batch, events sort; across batches, the persisted FRONTIER (the
-    last matched event's timestamp) is trusted — and it is also what
-    makes at-least-once replay CONVERGE: a re-folded batch only
-    considers events at-or-after the frontier, all of which already
-    matched on first application (pinned, including the adversarial
-    later-step-before-earlier-step fixture that a frontierless fold
-    double-counts). Out-of-order history needs the batch operator
-    over the full log instead.
-
-    Only ACTIVE users (present in the batch) compute or write
-    anything; the state table stays user-sized and the batch's work
-    batch-sized."""
-    spark = batch.sparkSession
-    from ..streaming.upsert import read_current, upsert_batch
-    import os
-
-    step_idx = F.create_map(
-        *[x for i, s in enumerate(steps) for x in (F.lit(s), F.lit(i))]
-    )
-    slim = (
-        batch.filter(F.col(type_col).isin(*steps))
-        .select(
-            F.col(user_col),
-            F.struct(
-                F.col(ts_col).cast("timestamp").alias("ts"),
-                step_idx[F.col(type_col)].alias("step"),
-            ).alias("__e"),
-        )
-    )
-    slim = (
-        _guard_per_user_collect(
-            slim, user_col, max_events_per_user, "funnel_update_state"
-        )
-        .groupBy(user_col)
-        .agg(F.array_sort(F.collect_list("__e")).alias("__es"))
-    )
-    if os.path.exists(state_table):
-        prior = read_current(spark, state_table).select(
-            F.col(user_col),
-            F.col("want").alias("__w0"),
-            F.col("first_ts").alias("__f0"),
-            F.col("frontier_ts").alias("__t0"),
-        )
-        slim = slim.join(prior, user_col, "left")
-    else:
-        slim = (
-            slim.withColumn("__w0", F.lit(None).cast("long"))
-            .withColumn("__f0", F.lit(None).cast("timestamp"))
-            .withColumn("__t0", F.lit(None).cast("timestamp"))
-        )
-    k = len(steps)
-    zero = F.struct(
-        F.coalesce(F.col("__w0"), F.lit(0)).cast("int").alias("want"),
-        F.col("__f0").alias("first_ts"),
-        F.col("__t0").alias("frontier"),
-    )
-
-    step_horizon = (
-        F.lit(None).cast("double")
-        if step_within_seconds is None
-        else F.lit(float(step_within_seconds))
-    )
-
-    def step_fn(acc, e):
-        # the FRONTIER (last matched event's ts) makes replay converge:
-        # re-folding a delivered batch can only consider events at-or-
-        # after the last match, and — with (ts, step)-sorted scanning —
-        # every such candidate already matched on first application, so
-        # a replayed fold is a no-op instead of illegally matching an
-        # event that TIME-PRECEDES an already-counted one
-        in_step_window = (
-            F.lit(True)
-            if step_within_seconds is None
-            else (
-                # frontier doubles as the previous step's match ts, so
-                # the per-edge dial persists across batches for free;
-                # null frontier = nothing matched yet = no constraint
-                acc["frontier"].isNull()
-                | (
-                    e["ts"].cast("double")
-                    - acc["frontier"].cast("double")
-                    <= step_horizon
-                )
-            )
-        )
-        matches = (
-            (acc["want"] < k)
-            & (e["step"] == acc["want"])
-            & (
-                acc["frontier"].isNull()
-                | (e["ts"] >= acc["frontier"])
-            )
-            & in_step_window
-        )
-        return F.struct(
-            F.when(matches, acc["want"] + 1)
-            .otherwise(acc["want"])
-            .alias("want"),
-            F.when(
-                matches & acc["first_ts"].isNull(), e["ts"]
-            )
-            .otherwise(acc["first_ts"])
-            .alias("first_ts"),
-            F.when(matches, e["ts"])
-            .otherwise(acc["frontier"])
-            .alias("frontier"),
-        )
-
-    folded = F.aggregate(F.col("__es"), zero, step_fn)
-    new_state = slim.select(
-        F.col(user_col),
-        F.lit(int(batch_id)).cast("long").alias("seq"),
-        folded["want"].cast("long").alias("want"),
-        folded["first_ts"].alias("first_ts"),
-        folded["frontier"].alias("frontier_ts"),
-    )
-    upsert_batch(
-        new_state, state_table, [user_col], "seq", n_buckets=n_buckets,
-        batch_id=batch_id,
-    )
-
-
-def funnel_state_report(spark, state_table, n_steps: int) -> DataFrame:
-    """(steps_completed, n_users) over the persisted state — the
-    all-time funnel position distribution, read from the user-sized
-    state table, never the event history."""
-    from ..streaming.upsert import read_current
-
-    return (
-        read_current(spark, state_table)
-        .groupBy(F.col("want").alias("steps_completed"))
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy("steps_completed")
-    )
-
-
-def start_funnel_stream(
-    spark,
-    source_dir: str,
-    schema,
-    state_table: str,
-    steps: list[str],
-    checkpoint_dir: str,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    n_buckets: int = 64,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    step_within_seconds: int | None = None,
-    max_events_per_user: int | None = None,
-):
-    """Structured-Streaming front end for :func:`funnel_update_state`:
-    each micro-batch continues the per-user folds and upserts the
-    state table; the checkpoint carries source progress (restart
-    resumes at the next unprocessed file) and the frontier makes
-    at-least-once re-delivery converge. The ordering contract
-    transfers verbatim: the file source must deliver events in
-    per-user event-time order across batches (append-only ingest)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def sink(batch, batch_id: int) -> None:
-        funnel_update_state(
-            batch, state_table, steps, user_col, type_col, ts_col,
-            batch_id=batch_id, n_buckets=n_buckets,
-            step_within_seconds=step_within_seconds,
-            max_events_per_user=max_events_per_user,
-        )
-
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,9 +1,8 @@
 """Generic two-mode directory commit — the shared primitive behind
 every "replace this directory's content atomically" site that is not a
-partitioned ledger (`streaming/ivm.py` view swaps and
-`streaming/upsert.py`'s per-bucket commits adopt it;
-`sources/bucketing.py` compactions implement the same pointer model
-through the metastore — ``swap="location"`` — since the catalog entry
+partitioned ledger (`operators/webdataset.py`'s ``commit="manifest"``
+shard publishes adopt it; `sources/bucketing.py` compactions
+implement the same pointer model through the metastore — ``swap="location"`` — since the catalog entry
 IS their pointer store). `streaming/ledger_compaction.py`
 implements the same two protocols with ledger-specific reader
 semantics (partition-horizon markers); this module is the

@@ -29,24 +29,11 @@ SF_DIR = "/root/testdata/sf0.001"
 SLOW_MODULES = {
     "test_differential_fuzz",  # 20 oracle fuzz axes, many Spark jobs each
     "test_full_recipe",        # corpus-recipe e2e chains
-    # the streaming-lake e2e family: multi-round foreachBatch streams
-    # with checkpoint resume / crash-replay choreography — measured
-    # ~12 min of the suite (r12 durations report). Sessions touching
-    # streaming/{upsert,ivm,funnel,...} run these files directly.
-    "test_upsert",
-    "test_upsert_manifest",
-    "test_ivm",
+    # multi-round foreachBatch streams with checkpoint resume
+    # choreography (streaming/{contract_gate,dedup_ingest,pack_stream,
+    # sketch_ledger}); sessions touching those run these files directly
     "test_streaming_recipe",
-    "test_dsir_gate",
-    "test_drift_monitor",
-    "test_embedding_drift_monitor",
     "test_sketch_ledger",
-}
-
-# modules that MIX fast batch pins with heavy stream e2e: only the
-# tests matching these name substrings go to the full tier
-SLOW_NAME_PATTERNS = {
-    "test_funnel": ("incremental", "stream"),
 }
 
 
@@ -62,12 +49,7 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         fn = getattr(item, "function", None)
         is_hypothesis = fn is not None and hasattr(fn, "hypothesis")
-        patterns = SLOW_NAME_PATTERNS.get(item.module.__name__, ())
-        if (
-            is_hypothesis
-            or item.module.__name__ in SLOW_MODULES
-            or any(p in item.name for p in patterns)
-        ):
+        if is_hypothesis or item.module.__name__ in SLOW_MODULES:
             item.add_marker(pytest.mark.slow)
 
 

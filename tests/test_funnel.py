@@ -161,21 +161,6 @@ def test_funnel_hot_user_guard_fires(spark):
     assert ok == {1: 1, 2: 2}
 
 
-def test_funnel_incremental_guard_fires(spark, tmp_path):
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.funnel import (
-        funnel_update_state,
-    )
-
-    rows = [
-        (1, "view", _ts(f"2024-01-01 10:00:0{i}")) for i in range(6)
-    ]
-    with pytest.raises(Exception, match="max_events_per_user"):
-        funnel_update_state(
-            _events(spark, rows), str(tmp_path / "s"), STEPS,
-            batch_id=0, n_buckets=4, max_events_per_user=4,
-        )
-
-
 def test_funnel_step_window_vs_whole_window(spark):
     """The fixture where the two window dials disagree: edges of 40 and
     30 minutes, total 70. A 1 h WHOLE-funnel window cuts the purchase
@@ -205,233 +190,6 @@ def test_funnel_step_window_vs_whole_window(spark):
         ).collect()[0]["steps_completed"]
         == 1
     )
-
-
-def test_incremental_step_window_matches_batch_and_replays(spark, tmp_path):
-    """step_within_seconds on the incremental path: time-ordered
-    batches end at the batch operator's positions, and replaying the
-    last batch converges (the frontier doubles as the previous match,
-    so the per-edge dial persists across batches)."""
-    import random
-    from datetime import timedelta
-
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.funnel import (
-        funnel_update_state,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.upsert import (
-        read_current,
-    )
-
-    rng = random.Random(23)
-    t0 = _ts("2024-05-01 00:00:00")
-    rows = [
-        (
-            rng.randrange(20),
-            rng.choice(STEPS + ["noise"]),
-            t0 + timedelta(minutes=3 * m),
-        )
-        for m in range(200)
-    ]
-    ev = _events(spark, rows)
-    state = str(tmp_path / "fsw")
-    for bid in range(2):
-        lo = t0 + timedelta(minutes=300 * bid)
-        hi = t0 + timedelta(minutes=300 * (bid + 1))
-        funnel_update_state(
-            ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
-            state, STEPS, batch_id=bid, n_buckets=8,
-            step_within_seconds=1200,
-        )
-    got = {
-        r["user_id"]: r["want"]
-        for r in read_current(spark, state).collect()
-    }
-    want = {
-        r["user_id"]: r["steps_completed"]
-        for r in funnel(ev, STEPS, step_within_seconds=1200).collect()
-    }
-    for u, w in got.items():
-        assert w == want.get(u, 0), (u, w, want.get(u))
-    assert set(want) <= set(got)
-    # replay the final batch — convergent under the per-edge dial too
-    funnel_update_state(
-        ev.filter(F.col("ts") >= t0 + timedelta(minutes=300)),
-        state, STEPS, batch_id=1, n_buckets=8,
-        step_within_seconds=1200,
-    )
-    again = {
-        r["user_id"]: r["want"]
-        for r in read_current(spark, state).collect()
-    }
-    assert again == got
-
-
-def test_incremental_funnel_matches_batch(spark, tmp_path):
-    """Events split into time-ordered daily batches through
-    funnel_update_state (state persisted via the keyed upsert table)
-    must end at the same per-user position as the batch operator over
-    the full log; the state report aggregates the user-sized table,
-    never the history; replaying the last batch converges."""
-    import random
-
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.funnel import (
-        funnel_state_report,
-        funnel_update_state,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.upsert import (
-        read_current,
-    )
-
-    rng = random.Random(11)
-    rows = []
-    t0 = _ts("2024-03-01 00:00:00")
-    from datetime import timedelta
-
-    for minute in range(300):
-        u = rng.randrange(25)
-        et = rng.choice(STEPS + ["error", "signup"])
-        rows.append((u, et, t0 + timedelta(minutes=minute)))
-    ev = _events(spark, rows)
-    state = str(tmp_path / "fstate")
-
-    # three time-ordered batches (minute 0-99, 100-199, 200-299)
-    for bid in range(3):
-        lo = t0 + timedelta(minutes=100 * bid)
-        hi = t0 + timedelta(minutes=100 * (bid + 1))
-        funnel_update_state(
-            ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
-            state, STEPS, batch_id=bid, n_buckets=8,
-        )
-    got = {
-        r["user_id"]: r["want"]
-        for r in read_current(spark, state).collect()
-    }
-    want = {
-        r["user_id"]: r["steps_completed"]
-        for r in funnel(ev, STEPS).collect()
-    }
-    for u, w in got.items():
-        assert w == want.get(u, 0), (u, w, want.get(u))
-    assert set(want) <= set(got)  # every progressed user has state
-
-    rep = {
-        r["steps_completed"]: r["n_users"]
-        for r in funnel_state_report(spark, state, len(STEPS)).collect()
-    }
-    from collections import Counter
-
-    assert rep == dict(Counter(got.values()))
-
-    # at-least-once replay of the final batch: state converges
-    lo = t0 + timedelta(minutes=200)
-    funnel_update_state(
-        ev.filter(F.col("ts") >= lo), state, STEPS, batch_id=2,
-        n_buckets=8,
-    )
-    again = {
-        r["user_id"]: r["want"]
-        for r in read_current(spark, state).collect()
-    }
-    assert again == got
-
-
-def test_incremental_replay_cannot_time_travel(spark, tmp_path):
-    """Adversarial replay: a batch holding click@t1 then view@t2
-    (later step first IN TIME) folds to want=1 — and replaying it must
-    NOT match the t1 click 'after' the t2 view. A frontierless fold
-    double-counts exactly this; the persisted frontier pins it."""
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.funnel import (
-        funnel_update_state,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.upsert import (
-        read_current,
-    )
-
-    rows = [
-        (1, "click", _ts("2024-01-01 10:00:00")),  # step 2, earlier
-        (1, "view", _ts("2024-01-01 11:00:00")),   # step 1, later
-    ]
-    state = str(tmp_path / "fs")
-    funnel_update_state(
-        _events(spark, rows), state, STEPS, batch_id=0, n_buckets=4
-    )
-    first = read_current(spark, state).collect()[0]
-    assert first["want"] == 1  # the pre-view click never counts
-    # at-least-once re-delivery of the same batch
-    funnel_update_state(
-        _events(spark, rows), state, STEPS, batch_id=0, n_buckets=4
-    )
-    again = read_current(spark, state).collect()[0]
-    assert again["want"] == 1, again  # no time travel
-    assert again["frontier_ts"] == first["frontier_ts"]
-
-
-def test_funnel_stream_matches_batch_and_resumes(spark, tmp_path):
-    """The streamed funnel over time-ordered files ends at the batch
-    operator's positions; a restart with nothing new changes no
-    state."""
-    import random
-    from datetime import timedelta
-
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.funnel import (
-        start_funnel_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.upsert import (
-        read_current,
-    )
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    rng = random.Random(5)
-    t0 = _ts("2024-04-01 00:00:00")
-    rows = [
-        (
-            rng.randrange(15),
-            rng.choice(STEPS + ["error"]),
-            t0 + timedelta(minutes=m),
-        )
-        for m in range(200)
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for b in range(2):
-        _events(spark, rows[b * 100 : (b + 1) * 100]).coalesce(
-            1
-        ).write.parquet(str(src / f"b{b}.parquet"))
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ck")
-    start_funnel_stream(
-        spark, str(src) + "/*", schema, state, STEPS, ckpt,
-        n_buckets=8, max_files_per_trigger=1,
-    ).awaitTermination(180)
-
-    got = {
-        r["user_id"]: r["want"]
-        for r in read_current(spark, state).collect()
-    }
-    want = {
-        r["user_id"]: r["steps_completed"]
-        for r in funnel(_events(spark, rows), STEPS).collect()
-    }
-    for u, w in got.items():
-        assert w == want.get(u, 0), (u, w)
-    assert set(want) <= set(got)
-
-    # restart with nothing new
-    start_funnel_stream(
-        spark, str(src) + "/*", schema, state, STEPS, ckpt, n_buckets=8
-    ).awaitTermination(120)
-    again = {
-        r["user_id"]: r["want"]
-        for r in read_current(spark, state).collect()
-    }
-    assert again == got
 
 
 from hypothesis import HealthCheck, given, settings, strategies as st

@@ -219,354 +219,3 @@ def test_front_door_through_to_packed_sequences(spark, tmp_path):
         1, 2, 5,
     }
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_front_door_with_decontamination_scrub(spark, tmp_path):
-    """The four-stage streaming front door: contract gate -> dedup
-    ingest -> span-level decontamination scrub -> packing. A document
-    quoting a benchmark item is NOT dropped - its quoted span is cut
-    and its clean tokens still reach the packed sequences; no eval
-    n-gram survives into the training artifact; token mass conserves
-    from the scrubbed zone into the sequences."""
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.decontamination import (
-        build_eval_gram_table,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.dedup_ingest import (
-        start_dedup_ingest_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.pack_stream import (
-        read_packed_dataset,
-        start_packing_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.scrub_stream import (
-        start_scrub_stream,
-    )
-
-    table = "front_door_scrub_idx"
-    grams = "front_door_scrub_grams"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    src = tmp_path / "src"
-    src.mkdir()
-    gated = str(tmp_path / "gated")
-    quar = str(tmp_path / "quar")
-    good = str(tmp_path / "good")
-    reject = str(tmp_path / "reject")
-    scrubbed = str(tmp_path / "scrubbed")
-    sstats = str(tmp_path / "scrub_stats")
-    packed = str(tmp_path / "packed")
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    bench = "what is the capital of atlantis"
-    rows = [
-        (1, "en", f"intro words {bench} closing words"),  # quotes eval
-        (2, "en", "totally clean document body"),
-        (3, "en", "totally clean document body"),          # dup
-        (None, "en", "poisoned text"),                     # violation
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(src / "b0.parquet")
-    )
-    build_eval_gram_table(
-        spark.createDataFrame([(100, bench)], ["doc_id", "text"]),
-        grams,
-        n=3,
-    )
-    try:
-        start_contract_gate_stream(
-            spark, str(src) + "/*", schema,
-            [{"rule": "not_null", "col": "doc_id"}],
-            gated, quar, str(tmp_path / "ck1"),
-        ).awaitTermination(120)
-        start_dedup_ingest_stream(
-            spark, gated + "/*", schema, table, good, reject,
-            str(tmp_path / "ck2"), buckets=4,
-        ).awaitTermination(120)
-        good_schema = T.StructType(
-            schema.fields + [T.StructField("ingest_batch", T.LongType())]
-        )
-        start_scrub_stream(
-            spark, good + "/*", good_schema, grams, scrubbed,
-            str(tmp_path / "ck3"), stats_path=sstats, n=3,
-        ).awaitTermination(120)
-        scrub_schema = T.StructType(
-            schema.fields
-            + [
-                T.StructField("n_tokens", T.LongType()),
-                T.StructField("n_scrubbed_tokens", T.LongType()),
-                T.StructField("ingest_batch", T.LongType()),
-            ]
-        )
-        start_packing_stream(
-            spark, scrubbed + "/*", scrub_schema, packed, budget=8,
-            n_shards=2, checkpoint_dir=str(tmp_path / "ck4"),
-        ).awaitTermination(120)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {grams}")
-
-    seqs = read_packed_dataset(spark, packed).collect()
-    all_text = " ".join(r["seq_text"] for r in seqs)
-    # no benchmark n-gram reaches the artifact; the quoting doc's
-    # clean tokens still do
-    assert bench not in all_text
-    assert "capital" not in all_text  # every covered token is gone
-    assert "intro words" in all_text and "closing words" in all_text
-    assert all_text.count("totally clean document body") == 1
-    assert "poisoned" not in all_text
-    # token conservation: scrubbed zone -> sequences
-    sc = spark.read.parquet(scrubbed)
-    scrubbed_tokens = (
-        sc.select(F.size(F.split("text", " ")).alias("tk"))
-        .agg(F.sum("tk")).collect()[0][0]
-    )
-    assert sum(r["seq_tokens"] for r in seqs) == scrubbed_tokens
-    # the stats row says exactly one doc was scrubbed, 5 tokens cut
-    st_row = spark.read.parquet(sstats).collect()[0]
-    # two docs reach the scrub stage (the dup rejected upstream)
-    assert st_row["n_docs"] == 2 and st_row["n_docs_scrubbed"] == 1
-    assert st_row["n_scrubbed_tokens"] == 6  # the whole quoted item
-
-
-def test_scrub_stream_resumes_incrementally(spark, tmp_path):
-    """Checkpoint resume: a second availableNow run under the same
-    checkpoint processes only the newly arrived file; both batches'
-    partitions coexist and earlier output is untouched."""
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.decontamination import (
-        build_eval_gram_table,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.scrub_stream import (
-        start_scrub_stream,
-    )
-
-    grams = "scrub_resume_grams"
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "scrubbed")
-    ck = str(tmp_path / "ck")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    build_eval_gram_table(
-        spark.createDataFrame([(100, "a b c")], ["doc_id", "text"]),
-        grams,
-        n=3,
-    )
-    try:
-        spark.createDataFrame(
-            [(1, "x a b c y"), (2, "clean one")], schema
-        ).coalesce(1).write.parquet(str(src / "f0.parquet"))
-        start_scrub_stream(
-            spark, str(src) + "/*", schema, grams, out, ck, n=3
-        ).awaitTermination(120)
-        first = {
-            (r["doc_id"], r["text"], r["ingest_batch"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert first == {(1, "x y", 0), (2, "clean one", 0)}
-
-        spark.createDataFrame(
-            [(3, "later a b c doc")], schema
-        ).coalesce(1).write.parquet(str(src / "f1.parquet"))
-        start_scrub_stream(
-            spark, str(src) + "/*", schema, grams, out, ck, n=3
-        ).awaitTermination(120)
-        got = {
-            (r["doc_id"], r["text"], r["ingest_batch"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got == first | {(3, "later doc", 1)}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {grams}")
-
-
-def test_five_stage_front_door_with_dsir_gate(spark, tmp_path):
-    """THE full streaming front door, five stages on one stream:
-    contract gate -> exact-dedup ingest -> decontamination scrub ->
-    DSIR importance gate (hard threshold) -> packing. Every input row
-    lands in exactly ONE zone (quarantine / reject / gate-dropped /
-    packed); scrubbed tokens and off-target text never reach the
-    training artifact; a second landing resumes all five checkpoints
-    incrementally."""
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.decontamination import (
-        build_eval_gram_table,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.dsir import (
-        build_ratio_table,
-        hashed_ngram_profile,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.dedup_ingest import (
-        start_dedup_ingest_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.dsir_gate import (
-        start_dsir_gate_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.pack_stream import (
-        read_packed_dataset,
-        start_packing_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.scrub_stream import (
-        start_scrub_stream,
-    )
-
-    table = "five_stage_idx"
-    grams = "five_stage_grams"
-    ratios = "five_stage_ratios"
-    B = 512
-    src = tmp_path / "src"
-    src.mkdir()
-    gated, quar = str(tmp_path / "gated"), str(tmp_path / "quar")
-    good, reject = str(tmp_path / "good"), str(tmp_path / "reject")
-    scrubbed = str(tmp_path / "scrubbed")
-    kept, gstats = str(tmp_path / "kept"), str(tmp_path / "gate_stats")
-    packed = str(tmp_path / "packed")
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    bench = "q r s"  # the eval 3-gram the scrub stage must cut
-    rows = [
-        (1, "alpha beta gamma delta"),            # clean, on-target
-        (2, f"alpha beta gamma {bench} epsilon"), # on-target, quotes eval
-        (3, "alpha beta gamma delta"),            # dup of 1 -> reject
-        (None, "poisoned text"),                  # violation -> quarantine
-        (5, "zzz yyy xxx www vvv uuu"),           # off-target -> gate drop
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(src / "b0.parquet")
-    )
-    build_eval_gram_table(
-        spark.createDataFrame([(100, bench)], ["doc_id", "text"]),
-        grams,
-        n=3,
-    )
-    # frozen scoring reference: target = on-target phrasing; raw = the
-    # mixed feed. Off-target grams appear only in raw -> logw << 0.
-    target = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon")], ["doc_id", "text"]
-    )
-    raw = spark.createDataFrame(
-        [(r[0] or 0, r[1]) for r in rows], ["doc_id", "text"]
-    )
-    # smoothing must stay well under the per-gram counts at this toy
-    # scale or it swamps the signal (B=512 pseudo-counts vs ~30 real
-    # grams would push EVERY doc to the same ~-0.66/gram score)
-    build_ratio_table(
-        hashed_ngram_profile(target, n_buckets=B),
-        hashed_ngram_profile(raw, n_buckets=B),
-        ratios,
-        n_buckets=B,
-        smoothing=0.01,
-    )
-
-    scrub_schema = T.StructType(
-        schema.fields
-        + [
-            T.StructField("n_tokens", T.LongType()),
-            T.StructField("n_scrubbed_tokens", T.LongType()),
-            T.StructField("ingest_batch", T.LongType()),
-        ]
-    )
-    kept_schema = T.StructType(
-        [f for f in scrub_schema.fields if f.name != "ingest_batch"]
-        + [
-            T.StructField("dsir_logw", T.DoubleType()),
-            T.StructField("ingest_batch", T.LongType()),
-        ]
-    )
-
-    def run_all_five():
-        start_contract_gate_stream(
-            spark, str(src) + "/*", schema,
-            [{"rule": "not_null", "col": "doc_id"}],
-            gated, quar, str(tmp_path / "ck1"),
-        ).awaitTermination(120)
-        start_dedup_ingest_stream(
-            spark, gated + "/*", schema, table, good, reject,
-            str(tmp_path / "ck2"), buckets=4,
-        ).awaitTermination(120)
-        good_schema = T.StructType(
-            schema.fields + [T.StructField("ingest_batch", T.LongType())]
-        )
-        start_scrub_stream(
-            spark, good + "/*", good_schema, grams, scrubbed,
-            str(tmp_path / "ck3"), n=3,
-        ).awaitTermination(120)
-        # on-target docs score ~-2 (every gram in the target profile),
-        # off-target ~-50 (raw-only grams at -4.5 each): -10 separates
-        start_dsir_gate_stream(
-            spark, scrubbed + "/*", scrub_schema, ratios, kept,
-            str(tmp_path / "ck4"), stats_path=gstats, threshold=-10.0,
-            n_buckets=B,
-        ).awaitTermination(120)
-        start_packing_stream(
-            spark, kept + "/*", kept_schema, packed, budget=8,
-            n_shards=2, checkpoint_dir=str(tmp_path / "ck5"),
-        ).awaitTermination(120)
-
-    try:
-        run_all_five()
-
-        seqs = read_packed_dataset(spark, packed).collect()
-        all_text = " ".join(r["seq_text"] for r in seqs)
-        assert bench not in all_text          # scrub cut the eval gram
-        assert "zzz" not in all_text          # gate dropped off-target
-        assert "poisoned" not in all_text     # quarantined upstream
-        assert all_text.count("alpha beta gamma delta") == 1  # dup once
-        assert "epsilon" in all_text          # scrubbed doc's clean tail
-
-        # conservation: every input row in exactly one zone
-        n_quar = spark.read.parquet(quar).count()
-        n_reject = spark.read.parquet(reject).count()
-        gate_rows = spark.read.parquet(gstats).collect()
-        n_gate_dropped = sum(
-            r["n_docs"] - r["n_kept"] for r in gate_rows
-        )
-        packed_ids = {r["doc_id"] for r in spark.read.parquet(kept).collect()}
-        assert n_quar == 1 and n_reject == 1 and n_gate_dropped == 1
-        assert packed_ids == {1, 2}
-        assert n_quar + n_reject + n_gate_dropped + len(packed_ids) == len(
-            rows
-        )
-        # token conservation from the kept zone into the sequences
-        kept_tokens = (
-            spark.read.parquet(kept)
-            .select(F.size(F.split("text", " ")).alias("tk"))
-            .agg(F.sum("tk")).collect()[0][0]
-        )
-        assert sum(r["seq_tokens"] for r in seqs) == kept_tokens
-
-        # checkpoint resume: a later landing flows through all five
-        # stages incrementally (one new on-target doc, one off-target)
-        spark.createDataFrame(
-            [(10, "alpha beta gamma delta epsilon extra"),
-             (11, "zzz yyy xxx nothing shared")],
-            schema,
-        ).coalesce(1).write.parquet(str(src / "b1.parquet"))
-        run_all_five()
-        packed_ids2 = {
-            r["doc_id"] for r in spark.read.parquet(kept).collect()
-        }
-        assert packed_ids2 == {1, 2, 10}
-        all_text2 = " ".join(
-            r["seq_text"]
-            for r in read_packed_dataset(spark, packed).collect()
-        )
-        assert "extra" in all_text2 and "nothing" not in all_text2
-        gate_rows2 = spark.read.parquet(gstats).collect()
-        assert sum(r["n_docs"] - r["n_kept"] for r in gate_rows2) == 2
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {grams}")
-        spark.sql(f"DROP TABLE IF EXISTS {ratios}")

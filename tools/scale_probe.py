@@ -383,8 +383,10 @@ def probe_dot_shapes(spark, n_pairs: int, dims: int = 64) -> dict:
       float arrays cross the JVM→Python boundary once per pair through
       Arrow batches, numpy does the row-block dot products. Summation is
       numpy pairwise instead of the fold's sequential order (differs in
-      ULPs; both arms round to 4 dp, same class of gap as the
-      DuckDB-oracle-vs-Spark arithmetic the registry already tolerates).
+      ULPs; every arm rounds to 4 dp with Spark's half-up ``F.round``,
+      so a disagreement is an arithmetic gap, never a rounding-mode
+      one — same class of gap as the DuckDB-oracle-vs-Spark arithmetic
+      the registry already tolerates).
 
     Values: all arms compute the same rounded cosines; the probe asserts
     agreement on a sample."""
@@ -459,15 +461,15 @@ def probe_dot_shapes(spark, n_pairs: int, dims: int = 64) -> dict:
         A = np.vstack(va.to_numpy()).astype("float64")
         B = np.vstack(vb.to_numpy()).astype("float64")
         d = (A * B).sum(axis=1)
-        return pd.Series(
-            np.round(d / (na.to_numpy() * nb.to_numpy()), 4)
-        )
+        return pd.Series(d / (na.to_numpy() * nb.to_numpy()))
 
     def arrow_df():
         return withn.select(
             "pair_id",
-            _arrow_cos(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
+            F.round(
+                _arrow_cos(
+                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
+                ), 4,
             ).alias("cos_sim"),
         )
 
@@ -574,172 +576,6 @@ def _synth_warc_dir(tmp_dir: str, n_records: int, per_file: int = 20) -> None:
         write_warc_responses(
             rows, os.path.join(tmp_dir, f"f{file_no:04d}.warc.gz")
         )
-
-
-def probe_front_door(spark, n_docs: int) -> dict:
-    """The COMPOSED five-stage streaming front door (contract gate →
-    exact-dedup ingest → decontamination scrub → DSIR gate → packing)
-    at ``n_docs`` docs per micro-batch, with per-stage wall
-    attribution — r12 verdict #7: the stages have individual curves,
-    but the serving question is what one production micro-batch pays
-    end-to-end. Corpus model mirrors the five-stage e2e test at
-    scale: 24-token docs; per 20-doc block 4 off-target (DSIR-dropped),
-    2 exact dups of an in-block clean doc (dedup-rejected), 1 quoting
-    the eval 3-gram (scrubbed), 13 clean. Batch 0 is a 1k-doc warmup
-    (checkpoint creation + codegen land there); batch 1 is the
-    measured batch — the steady per-batch cost, each stage resuming
-    its own checkpoint exactly as a continuous front door would."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from data_pipeline_project_using_telegram_and_aws_spark.functions.scale_rules import (
-        packing_n_shards,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.decontamination import (
-        build_eval_gram_table,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.dsir import (
-        build_ratio_table,
-        hashed_ngram_profile,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.contract_gate import (
-        start_contract_gate_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.dedup_ingest import (
-        start_dedup_ingest_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.dsir_gate import (
-        start_dsir_gate_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.pack_stream import (
-        start_packing_stream,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.scrub_stream import (
-        start_scrub_stream,
-    )
-
-    n_tok, B = 24, 10_000
-    base = tempfile.mkdtemp(prefix=f"fd_probe_{n_docs}_")
-    d = {z: f"{base}/{z}" for z in (
-        "src", "gated", "quar", "good", "reject", "scrubbed", "kept",
-        "packed", "ck1", "ck2", "ck3", "ck4", "ck5",
-    )}
-    idx = f"fd_probe_idx_{n_docs}"
-    grams = f"fd_probe_grams_{n_docs}"
-    ratios = f"fd_probe_ratios_{n_docs}"
-
-    def batch(n: int, start_id: int):
-        tok = (
-            f"transform(sequence(0, {n_tok - 1}), i -> "
-            f"CASE WHEN pmod(b, 20) < 4 "
-            f"THEN concat('z', pmod(xxhash64(b * {n_tok} + i, 11), 50)) "
-            f"ELSE concat('w', pmod(xxhash64(b * {n_tok} + i, 5), 200)) "
-            f"END)"
-        )
-        return (
-            spark.range(start_id, start_id + n)
-            .select(
-                F.col("id").alias("doc_id"),
-                F.expr(
-                    "CASE WHEN pmod(id, 20) IN (4, 5) "
-                    "THEN id - pmod(id, 20) + 7 ELSE id END"
-                ).alias("b"),
-            )
-            .select(
-                "doc_id",
-                F.expr(
-                    f"concat(array_join({tok}, ' '), "
-                    f"CASE WHEN pmod(doc_id, 20) = 6 "
-                    f"THEN ' q r s' ELSE '' END)"
-                ).alias("text"),
-            )
-        )
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    good_schema = T.StructType(
-        schema.fields + [T.StructField("ingest_batch", T.LongType())]
-    )
-    scrub_schema = T.StructType(
-        good_schema.fields[:2]
-        + [T.StructField("n_tokens", T.LongType()),
-           T.StructField("n_scrubbed_tokens", T.LongType()),
-           T.StructField("ingest_batch", T.LongType())]
-    )
-    kept_schema = T.StructType(
-        [f for f in scrub_schema.fields if f.name != "ingest_batch"]
-        + [T.StructField("dsir_logw", T.DoubleType()),
-           T.StructField("ingest_batch", T.LongType())]
-    )
-
-    build_eval_gram_table(
-        spark.createDataFrame([(1, "q r s")], ["doc_id", "text"]),
-        grams, n=3,
-    )
-    # frozen scoring reference: target = clean on-target docs; raw =
-    # the mixed feed (z-vocab grams appear only in raw → logw << 0)
-    target = batch(2000, 7_000_000).filter(
-        F.expr("pmod(doc_id, 20) >= 7")
-    )
-    build_ratio_table(
-        hashed_ngram_profile(target, n_buckets=B),
-        hashed_ngram_profile(batch(2000, 8_000_000), n_buckets=B),
-        ratios, n_buckets=B, smoothing=0.01,
-    )
-
-    def run_stage(name, start):
-        t0 = time.time()
-        start().awaitTermination(600)
-        return round(time.time() - t0, 2)
-
-    stages = [
-        ("gate", lambda: start_contract_gate_stream(
-            spark, d["src"] + "/*", schema,
-            [{"rule": "not_null", "col": "doc_id"}],
-            d["gated"], d["quar"], d["ck1"])),
-        ("dedup", lambda: start_dedup_ingest_stream(
-            spark, d["gated"] + "/*", schema, idx, d["good"],
-            d["reject"], d["ck2"], buckets=32)),
-        ("scrub", lambda: start_scrub_stream(
-            spark, d["good"] + "/*", good_schema, grams,
-            d["scrubbed"], d["ck3"], n=3)),
-        ("dsir", lambda: start_dsir_gate_stream(
-            spark, d["scrubbed"] + "/*", scrub_schema, ratios,
-            d["kept"], d["ck4"], threshold=-10.0, n_buckets=B)),
-        ("pack", lambda: start_packing_stream(
-            spark, d["kept"] + "/*", kept_schema, d["packed"],
-            budget=256, n_shards=packing_n_shards(n_docs),
-            checkpoint_dir=d["ck5"])),
-    ]
-    try:
-        # warmup batch: 1k docs through all five stages
-        batch(1000, 0).coalesce(4).write.parquet(
-            d["src"] + "/b0.parquet"
-        )
-        for _name, start in stages:
-            start().awaitTermination(600)
-        # measured batch
-        batch(n_docs, 1_000_000).repartition(32).write.parquet(
-            d["src"] + "/b1.parquet"
-        )
-        per_stage = {name: run_stage(name, start)
-                     for name, start in stages}
-        kept_rows = spark.read.parquet(d["kept"]).count()
-        return {
-            "n_docs_batch": n_docs,
-            "per_stage_sec": per_stage,
-            "total_sec": round(sum(per_stage.values()), 2),
-            "kept_rows": kept_rows,
-            "rejected_dups": spark.read.parquet(d["reject"]).count(),
-        }
-    finally:
-        for t in (idx, grams, ratios):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def probe_crawl(spark, n_records: int) -> dict:
@@ -1247,15 +1083,6 @@ def main() -> None:
                 "fixed_k16": probe_semdedup(spark, n, 16),
                 "rule_k": probe_semdedup(spark, n, ivf_n_centroids(n)),
             }))
-        return
-    if sys.argv[1:2] == ["--front-door"]:
-        sizes = [int(a) for a in sys.argv[2:]] or [5000, 15000, 50000]
-        spark = get_spark("scale-probe")
-        spark.sparkContext.setLogLevel("ERROR")
-        for n in sizes:
-            print(json.dumps(
-                {"family": "front_door", **probe_front_door(spark, n)}
-            ))
         return
     if sys.argv[1:2] == ["--semdedup"]:
         from data_pipeline_project_using_telegram_and_aws_spark.functions.scale_rules import (

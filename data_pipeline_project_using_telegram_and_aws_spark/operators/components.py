@@ -151,22 +151,13 @@ def connected_components(
     )
 
 
-def _driver_union_find(
-    edges: DataFrame, a_col: str, b_col: str
-) -> DataFrame:
-    """Path-halving union-find over a collected candidate-sized edge
-    list; labels = min id per component (exactly the iterative loop's
-    contract). One collect in, one parallelize out — no cluster rounds."""
-    return _driver_union_find_rows(
-        edges.select(a_col, b_col).collect(), edges, a_col, b_col
-    )
-
-
 def _driver_union_find_rows(
     collected: list, edges: DataFrame, a_col: str, b_col: str
 ) -> DataFrame:
-    """Union-find over ALREADY-collected edge rows (the fused-dispatch
-    path above — ``edges`` is only consulted for the output schema)."""
+    """Union-find with path compression over the edge rows the bounded
+    collect in :func:`connected_components` already fetched; labels =
+    min id per component (exactly the iterative loop's contract).
+    ``edges`` is only consulted for the output schema."""
     parent: dict = {}
 
     def find(x):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_pipeline_project_using_telegram_and_aws_spark.operators import components
 from data_pipeline_project_using_telegram_and_aws_spark.operators.components import (
     connected_components,
 )
@@ -57,6 +58,41 @@ def test_components_unconverged_raises(spark):
     with pytest.raises(RuntimeError, match="converge"):
         # force the iterative loop: the driver shortcut has no rounds
         connected_components(edges, max_iters=2, driver_max_edges=0)
+
+
+def test_edges_above_a_small_driver_bound_take_the_cluster_loop(
+    spark, monkeypatch
+):
+    """The driver shortcut collects at most ``driver_max_edges + 1``
+    rows. A graph with more edges than the bound falls through to the
+    cluster loop, and its labels equal the forced loop's
+    (``driver_max_edges=0``) and the driver union-find's."""
+    driver_rows = []
+    real = components._driver_union_find_rows
+
+    def spy(collected, *args):
+        driver_rows.append(len(collected))
+        return real(collected, *args)
+
+    monkeypatch.setattr(components, "_driver_union_find_rows", spy)
+    pairs = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]  # 5 edges
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+
+    def labels(**kw):
+        return sorted(
+            (r.node, r.component)
+            for r in connected_components(edges, **kw).collect()
+        )
+
+    above = labels(driver_max_edges=3)
+    assert driver_rows == []  # the cluster loop, not the driver
+    assert above == labels(driver_max_edges=0)
+    assert above == labels(driver_max_edges=5)  # at the bound: driver
+    assert driver_rows == [5]
+    assert above == [
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
+        (20, 20), (21, 20), (22, 20),
+    ]
 
 
 def test_curation_components_closure_drops_transitive_cluster(spark):

@@ -355,3 +355,37 @@ def test_default_read_enriched_is_the_declared_ddl_schema(spark, tmp_path):
     (got,) = df.collect()
     assert (got.message_id, got.text, got.user_id) == (7, "hi", None)
     assert got.context_date == dt.date(2024, 1, 2)
+
+
+@pytest.mark.parametrize(
+    "quarantine", [False, True], ids=["file_sink", "two_output"]
+)
+def test_ingest_resumes_from_its_checkpoint(spark, tmp_path, quarantine):
+    """A second drain on the same checkpoint reads only the updates that
+    landed since the first, and the raw zone holds each kept update
+    exactly once. Both routes resume from the offsets, commit and
+    source logs written by the session's checkpoint file manager."""
+    lk = TelegramLake(str(tmp_path), chat_id=CHAT_ID)
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+
+    def land(updates):
+        for u in updates:
+            with open(os.path.join(landing, f"u{u['update_id']}.json"), "w") as f:
+                json.dump(u, f)
+
+    def drain():
+        q = start_ingest_stream(
+            spark, lk, landing, str(tmp_path / "ckpt"), available_now=True,
+            quarantine_dir=str(tmp_path / "quar") if quarantine else None,
+        )
+        q.awaitTermination(120)
+        assert not q.isActive and q.exception() is None
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    land(UPDATES[:3])
+    assert drain() == 3
+    land([UPDATES[3], UPDATES[4]])  # UPDATES[4] is from a foreign chat
+    assert drain() == 2
+    ids = sorted(r.update_id for r in lk.read_raw(spark).collect())
+    assert ids == [1, 2, 3, 4]

@@ -9,6 +9,7 @@ import os
 from datetime import datetime
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from data_pipeline_project_using_telegram_and_aws_spark.streaming import windows as W
@@ -34,6 +35,34 @@ def _drain(stream_df, out_dir, checkpoint):
     )
     q.awaitTermination(120)
     assert not q.isActive
+
+
+def test_session_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    """``get_spark`` sessions write checkpoint files with the
+    FileSystem-based manager (``FileSystem.rename``, no forked
+    ``readlink``), and it keeps the guarantee streams rely on: a second
+    ``createAtomic(p, overwriteIfPossible=False)`` fails on close and
+    leaves the first file's bytes in place."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert (
+        manager.getClass().getSimpleName()
+        == "FileSystemBasedCheckpointFileManager"
+    )
+
+    batch = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first = manager.createAtomic(batch, False)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = manager.createAtomic(batch, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
 
 
 def test_windowed_counts_with_watermark(spark, tmp_path):

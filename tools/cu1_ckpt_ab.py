@@ -21,10 +21,11 @@ verifies all variants return IDENTICAL rows before timing.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_project_using_telegram_and_aws_spark.operators import curation
 from data_pipeline_project_using_telegram_and_aws_spark.plans.curation_queries import (

@@ -8,10 +8,11 @@ Usage: python tools/lm_ckpt_ab.py [sf_dir] [n_sweeps]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_project_using_telegram_and_aws_spark.operators import lm_score
 from data_pipeline_project_using_telegram_and_aws_spark.plans.pipeline_queries import (

@@ -19,7 +19,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_project_using_telegram_and_aws_spark.session import get_spark
 

@@ -30,10 +30,12 @@ so a new unbounded pattern shows up as a diff AND a nonzero exit.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from data_pipeline_project_using_telegram_and_aws_spark.session import get_spark
 
@@ -445,9 +447,10 @@ def main() -> int:
         lines.append("| _none_ | — | — |")
     report = "\n".join(lines) + "\n"
     if write:
-        with open("/root/repo/SCALE_LINT.md", "w") as f:
+        out = os.path.join(REPO_ROOT, "SCALE_LINT.md")
+        with open(out, "w") as f:
             f.write(report)
-        print("wrote /root/repo/SCALE_LINT.md")
+        print(f"wrote {out}")
     else:
         print(report)
 

@@ -7,8 +7,6 @@ speed, measured, not asserted:
 
 - IVF (ss5's path): recall@k vs nprobe, the classic dial — each probed
   centroid list adds candidates and cost;
-- quantized brute force: recall@k of int8-reconstructed vectors (the 4×
-  payload cut — tests pin ≥0.9, this prints the actual number);
 - banded hyperplane LSH (ss3's path): candidate-pair recall vs the true
   top cosine pairs at the bench geometry.
 
@@ -26,10 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from data_pipeline_project_using_telegram_and_aws_spark.operators.quantization import (
-    dequantize,
-    quantize_embeddings,
-)
 from data_pipeline_project_using_telegram_and_aws_spark.operators.similarity import (
     brute_force_topk,
     build_ivf_index,
@@ -85,17 +79,6 @@ def main() -> None:
             "scanned_fraction": round(nprobe / n_cents, 4),
             "recall": _recall(approx, exact),
         }))
-
-    recon = quantize_embeddings(emb).select(
-        "vec_id", dequantize("qvec", "q_min", "q_scale").alias("embedding")
-    ).localCheckpoint(eager=True)
-    approx = _topk_sets(
-        brute_force_topk(recon, recon.filter(F.col("vec_id") < N_QUERIES), k=K)
-    )
-    print(json.dumps({
-        "experiment": "int8_bruteforce", "k": K,
-        "recall": _recall(approx, exact),
-    }))
 
     # LSH pair recall IN ITS TARGET REGIME: banded hyperplane LSH is a
     # near-dup detector — per-band collision probability is

@@ -17,10 +17,10 @@ Layout
   surface over the star schema) with DuckDB oracle SQL.
 - ``streaming``  : Structured Streaming ingestion + daily compaction job.
 
-Every module is reachable by import from a product root: the driver
-contract (``__spark_entry__.py``), ``bench.py``, ``perfbench/`` or the
-Telegram pipeline layers. ``tests/test_product_surface.py`` fails,
-naming the module, when one is not.
+Modules outside the product surface — not reachable by import from the
+driver contract (``__spark_entry__.py``), ``bench.py``, ``perfbench/``
+or the Telegram pipeline layers — are listed for deletion in
+``tests/test_product_surface.py``; a new one fails that test.
 """
 
 __version__ = "0.1.0"

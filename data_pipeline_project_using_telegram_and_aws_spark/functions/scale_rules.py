@@ -1,8 +1,8 @@
 """Probe-backed sizing rules for the remaining operator dials: IVF
-centroid count and packing shard count.
+centroid count, packing shard count, and skew-join salt count.
 
 ``lsh_tuning.py`` turned rows_per_band from a frozen constant into a
-measured ``f(log2 N)``; this module does the same for the dials
+measured ``f(log2 N)``; this module does the same for the three dials
 that were still caller-picked constants (VERDICT r3 item 4). Each rule
 states its cost model and the measured curve from
 ``tools/scale_probe.py`` that backs it, so the 100 TB sizing story is a
@@ -32,6 +32,13 @@ formula tied to evidence, not a comment.
   corpus_tokens/budget. The default target (256k docs/shard) keeps a
   1000-executor cluster busy past ~10⁸ docs while bounding each window
   task's sort to one task-sized chunk.
+- **Skew salts**: the hot key's reducer shrinks by n_salts while the
+  small side's shuffle volume multiplies by it (operators/skew.py cost
+  model) — so the right salt count is the ratio of the hottest key's
+  rows to a comfortable per-task row count, clamped well below the
+  small side's replication budget. No wall-clock probe: at test scale
+  the effect is pure plan shape (pinned in tests/test_skew.py); the
+  rule just encodes the documented ratio.
 """
 
 from __future__ import annotations
@@ -150,21 +157,36 @@ def collected_group_max_rows(
     target_bytes_per_task: int = 64 * 1024 * 1024,
     lo: int = 1024,
 ) -> int:
-    """Guard bound for per-group ``collect_list`` operators (the
-    per-document hit positions of ``scrub_contaminated_spans``): unlike
-    a window aggregate, ``collect_list`` materializes the WHOLE group as
-    one in-memory array inside one task — it cannot spill — so one
-    pathological key OOMs an executor hours into a job. The bound caps
-    the array at ``target_bytes_per_task`` of payload (default 64 MB —
-    comfortably inside a multi-GB executor even with several concurrent
-    tasks) given the caller's per-element width: a (timestamp, int)
-    struct is ~16 B → ~4M elements; a text-carrying element of ~256 B+
-    → ~262k. Enforced IN-PLAN with
+    """Guard bound for per-group ``collect_list`` operators (funnel's
+    per-user event arrays, dialog assembly's per-conversation turn
+    arrays): unlike a window aggregate, ``collect_list`` materializes
+    the WHOLE group as one in-memory array inside one task — it cannot
+    spill — so one pathological key (a bot emitting millions of funnel
+    events, a never-idle speaker) OOMs an executor hours into a job.
+    The bound caps the array at ``target_bytes_per_task`` of payload
+    (default 64 MB — comfortably inside a multi-GB executor even with
+    several concurrent tasks) given the caller's per-element width:
+    funnel's (timestamp, int) struct is ~16 B → ~4M events; a dialog
+    turn carrying text is ~256 B+ → ~262k turns. Enforced IN-PLAN with
     the same ``assert_true``-over-a-count-window pattern as
     ``blocked_pairs_max_block_rows`` (the window count spills; the
     collect would not), so oversized keys fail loudly with the key
     named BEFORE the array builds."""
     return max(lo, target_bytes_per_task // max(bytes_per_row, 1))
+
+
+def skew_n_salts(
+    hot_key_rows: int,
+    target_rows_per_task: int = 1_000_000,
+    lo: int = 2,
+    hi: int = 1024,
+) -> int:
+    """Salt count for :func:`operators.skew.salted_join`: enough to
+    shrink the hottest key's reducer to ~``target_rows_per_task`` rows,
+    clamped at ``hi`` because every salt replicates the small side's
+    shuffle volume once."""
+    salts = math.ceil(max(hot_key_rows, 1) / target_rows_per_task)
+    return max(lo, min(hi, salts))
 
 
 def cc_driver_max_edges(max_seconds: float = 1.5) -> int:
@@ -205,3 +227,19 @@ def bm25_rowlocal_max_terms() -> int:
     32 sits inside the measured win region on both corpora with margin
     under the crossover; larger query sets take the explode path."""
     return 32
+
+
+def dsir_rowlocal_max_buckets(max_literal_bytes: int = 2 * 1024 * 1024) -> int:
+    """Bucket-space bound for `operators/dsir.dsir_importance`'s
+    ``method="rowlocal"`` — the zero-shuffle path that embeds the
+    ratio table as a flat array literal in the plan. The literal costs
+    8 B per bucket in every serialized plan/task closure, so the bound
+    caps it at ``max_literal_bytes`` (default 2 MiB ≈ 262k buckets —
+    26× the paper's 10k feature space, far below anything that strains
+    task serialization). The rowlocal-vs-join choice itself is a
+    measured CPU-vs-shuffle trade (join is ~3.8× faster in-core at
+    sf0.1 — interpreted HOF fold vs codegen'd explode+join — but
+    shuffles the whole corpus on id; BENCH_NOTES has the probe);
+    this bound only guards the literal's size once rowlocal is
+    chosen."""
+    return max_literal_bytes // 8

@@ -205,7 +205,7 @@ def update_line_df_ledger(
     text_col: str = "text",
 ) -> None:
     """Incremental twin of the corpus-global DF pass — the daily-batch
-    shape: each batch
+    shape (`dedup.exact_dedup_against_index`'s family): each batch
     reduces to per-line document-frequency increments landed under its
     own ``ingest_batch`` partition (dynamic overwrite ⇒ at-least-once
     replay rewrites, never double-counts — the ledger pattern; DF

@@ -172,7 +172,7 @@ def feed_seeds(
     `links.schedule_fetches(priority_col=...)` and
     `links.build_frontier(max_per_host=...)`'s cap (both order
     NULLS LAST). ``now_s`` is the caller's clock (epoch seconds),
-    passed in, so the same inputs always give the same priorities.
+    passed in — the `recrawl.schedule_revisits` determinism contract.
     All JVM-side column math; duplicate links across feeds collapse
     to their freshest reading in `build_frontier`'s per-key MAX."""
     ts = F.unix_timestamp(

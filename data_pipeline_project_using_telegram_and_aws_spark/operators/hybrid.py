@@ -242,7 +242,7 @@ def mmr_rerank(
     stage, and an honest one: O(select_k · n · dims) vectorized work
     over a top-``top`` head, not a corpus. Candidates with a NULL
     embedding are dropped before selection (no geometry, no diversity
-    claim — the `preference.py` NULL-as-abstention stance), as are
+    claim: a NULL is an abstention, not a value), as are
     NULL relevance scores; a zero vector participates with
     similarity 0 to everything. An in-plan bounded-operand
     guard (count-window + assert_true, the funnel/dialogs pattern —

@@ -1,6 +1,7 @@
 """Trained character-n-gram language identification — the model-based
 rung above `plans/text_queries.py`'s stopword-marker heuristic (tx3),
-built from no-vocabulary-pass pieces: hashed character n-grams →
+built from the same no-vocabulary-pass pieces as
+`operators/quality_classifier.py`: hashed character n-grams →
 multinomial logistic regression (pyspark.ml), so training needs one
 fitting pass and scoring is a row-wise JVM transform with no Python
 and no shuffle.

@@ -352,7 +352,7 @@ def build_frontier(
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """The next crawl round's fetch list from the good zone's
-    ``outlinks`` arrays:
+    ``outlinks`` arrays (the `streaming/crawl_ingest.py` output):
     explode → distinct candidate URLs → minus the already-crawled set
     (anti-join on the canonical dedup key, so tracking-param variants
     don't re-enter) → robots-gated (`operators/robots.py`, when rules

@@ -43,9 +43,9 @@ Formats, exactly as published:
 
 Failure stance: decoders RAISE naming the media id and the leading
 bytes — a corrupt or unsupported container in a curation pipeline is a
-data defect to surface, not a row to silently null. Callers wanting
-quarantine semantics filter on ``sniff_format`` first — that is a
-projection, not a decode.
+data defect to surface, not a row to silently null (`contracts.py`
+doctrine). Callers wanting quarantine semantics filter on
+``sniff_format`` first — that is a projection, not a decode.
 
 Features (the 8-dim vector, matching MEDIA_FEATURE_SCHEMA): per-channel
 mean and std over the decoded pixels (6), luma mean (Rec.601), and

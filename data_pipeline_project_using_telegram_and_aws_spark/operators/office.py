@@ -55,7 +55,7 @@ XML parts", so one stdlib toolbox covers them:
 
 All extractors raise ``ValueError`` naming the defect on structural
 failure (bad zip, missing required part, XML that does not parse) —
-so a front door can turn the failure into a quarantine row.
+the front-door quarantine contract from `streaming/media_ingest.py`.
 Namespace handling matches on LOCAL names: OOXML ships in both
 transitional (``schemas.openxmlformats.org``) and strict
 (``purl.oclc.org/ooxml``) namespaces with identical local structure,

@@ -222,6 +222,45 @@ def shuffle_epoch_order(
     )
 
 
+def materialize_token_sequences(
+    packed: DataFrame,
+    tokens_col: str = "token_ids",
+    mask_col: str | None = None,
+) -> DataFrame:
+    """:func:`materialize_sequences` for TOKEN records (the
+    `operators/sft.py` handoff): one row per (shard, seq_id) with the
+    member documents' token arrays flattened in slot order — and, with
+    ``mask_col``, the parallel loss mask flattened by the SAME ordered
+    member list, so tokens and mask cannot disagree after packing
+    (same length, same order; pinned). Same plan as the text
+    materializer: one partial-agg'd aggregation riding the packing
+    shard partitioning, row-local struct sort, no second shuffle."""
+    fields = [F.col("seq_offset"), F.col(tokens_col).alias("t")]
+    if mask_col is not None:
+        fields.append(F.col(mask_col).alias("m"))
+    member = F.struct(*fields)
+    grouped = packed.groupBy("shard", "seq_id").agg(
+        F.array_sort(F.collect_list(member)).alias("__members"),
+        F.count(F.lit(1)).alias("n_docs"),
+    )
+    toks = F.flatten(F.transform("__members", lambda s: s["t"]))
+    cols = [
+        F.col("shard"),
+        F.col("seq_id"),
+        toks.alias(tokens_col),
+        F.size(toks).alias("n_tokens"),
+        F.col("n_docs"),
+    ]
+    if mask_col is not None:
+        cols.insert(
+            3,
+            F.flatten(
+                F.transform("__members", lambda s: s["m"])
+            ).alias(mask_col),
+        )
+    return grouped.select(*cols)
+
+
 def export_training_shards(
     sequences: DataFrame,
     path: str,

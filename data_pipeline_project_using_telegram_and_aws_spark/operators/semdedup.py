@@ -179,8 +179,9 @@ def incremental_semantic_dedup(
     ``dedup.dedup_against_index`` (MinHash) and the same roles: the new
     batch is small by definition and computes fresh; the corpus-side
     ``keepers`` frame (the exemplars already admitted, typically read
-    from a table bucketed by centroid_id) is probed in place and NEVER
-    re-scored against itself.
+    from a table bucketed by centroid_id —
+    ``streaming/index_maintenance.py`` maintains exactly that layout)
+    is probed in place and NEVER re-scored against itself.
 
     Returns ``(admitted, dropped)``: ``admitted`` rows are the batch
     members with no keeper within cosine ``tau`` in their cluster —
@@ -269,3 +270,86 @@ def incremental_semantic_dedup(
         )
     )
     return admitted, dropped_vs_keepers.unionByName(dropped_intra)
+
+
+def knn_join(
+    vectors: DataFrame,
+    knn: int,
+    centroids: DataFrame | None = None,
+    k: int = 16,
+    iters: int = 3,
+    sample_n: int | None = 256,
+    nprobe: int = 1,
+    cache_key: str | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    max_block_rows: int | None = None,
+) -> DataFrame:
+    """Approximate all-corpus kNN self-join: (``id_col``, neighbor_id,
+    cos_sim, nn_rank) — the ``knn`` nearest neighbors of EVERY vector,
+    not just of a query set (``similarity.bm25``/``ivf_topk`` serve the
+    query-set case). The building block for kNN-graph dedup diagnostics,
+    retrieval-augmentation neighborhoods, and label propagation.
+
+    Same cost model as :func:`semantic_dedup`, whose machinery this
+    reuses verbatim: cluster blocks cap the quadratic pair scan at
+    (N/k)² per cluster with the in-plan block guard; per-vector top-k is
+    one rank window over candidate pairs (candidate-sized, never N²).
+    ``nprobe`` > 1 assigns each vector to its ``nprobe`` nearest
+    centroids, so near-boundary vectors see neighbors in adjacent
+    clusters too — recall rises, pair volume multiplies by ≤ nprobe²
+    (the usual IVF dial; duplicates from co-probed blocks collapse by
+    (src, dst)). Neighbors BEYOND the probed clusters are invisible —
+    the approximation, identical to the serving-path IVF trade.
+    """
+    if centroids is None:
+        centroids = build_ivf_index(
+            vectors,
+            k=k,
+            iters=iters,
+            sample_n=sample_n,
+            cache_key=cache_key,
+            id_col=id_col,
+            vec_col=vec_col,
+        )
+    assign = ivf_assign(
+        vectors, centroids, nprobe, id_col, vec_col, out_id=id_col
+    )
+    clustered = (
+        vectors.select(id_col, vec_col)
+        .join(assign, id_col)
+        .localCheckpoint(eager=False)
+    )
+    pairs = blocked_neardup_pairs(
+        clustered,
+        block_col="centroid_id",
+        id_col=id_col,
+        vec_col=vec_col,
+        max_block_rows=max_block_rows,
+    )
+    directed = (
+        pairs.select(
+            F.col("vec_a").alias(id_col),
+            F.col("vec_b").alias("neighbor_id"),
+            "cos_sim",
+        )
+        .unionByName(
+            pairs.select(
+                F.col("vec_b").alias(id_col),
+                F.col("vec_a").alias("neighbor_id"),
+                "cos_sim",
+            )
+        )
+        # co-probed clusters produce the same pair once per shared
+        # block; cos_sim is identical, keep one
+        .dropDuplicates([id_col, "neighbor_id"])
+    )
+    w = Window.partitionBy(id_col).orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        directed.withColumn(
+            "nn_rank", F.row_number().over(w).cast("long")
+        )
+        .filter(F.col("nn_rank") <= knn)
+    )

@@ -108,30 +108,6 @@ def _plane_projections(
     return elems.groupBy(id_col).agg(*aggs)
 
 
-def hyperplane_bits(
-    vectors: DataFrame,
-    n_planes: int = N_PLANES,
-    dims: int = DIMS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, p, bit): sign bit per vector per hyperplane, bit_p =
-    (v · w_p) >= 0 — the exploded view of :func:`_plane_projections`."""
-    projs = _plane_projections(vectors, n_planes, dims, id_col, vec_col)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(p).alias("p"),
-                (F.col(f"__proj{p}") >= 0).cast("long").alias("bit"),
-            )
-            for p in range(n_planes)
-        ]
-    )
-    return projs.select(id_col, F.explode(pairs).alias("pb")).select(
-        id_col, F.col("pb.p").alias("p"), F.col("pb.bit").alias("bit")
-    )
-
-
 def hyperplane_buckets(
     vectors: DataFrame,
     spark: SparkSession | None = None,

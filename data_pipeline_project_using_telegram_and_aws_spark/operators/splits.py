@@ -205,7 +205,8 @@ def take_tokens_per_group(
     text_col: str = "text",
     salt: str = "token-budget",
 ) -> DataFrame:
-    """At most ``token_budget`` tokens per group, for recipes
+    """At most ``token_budget`` tokens per group — the BATCH twin of the
+    streaming per-source quota (`streaming/quota.py`), for recipes
     specified as absolute token masses ("at most 10 M tokens of src1")
     rather than rates or document counts.
 
@@ -410,10 +411,11 @@ def normalize_scores_per_group(
     every slice.
 
     ``method="zscore"``: (x − mean)/stddev; ``"robust"`` (default):
-    (x − median)/(1.4826·MAD), poison-proof against the heavy tails
-    quality scores actually have. Degenerate groups (zero spread, or
-    robust MAD = 0) normalize to 0.0 rather than NULL/±inf — every row
-    keeps a usable score. NULL scores pass through as NULL.
+    (x − median)/(1.4826·MAD) — the `profiling.robust_outlier_report`
+    scaling, poison-proof against the heavy tails quality scores
+    actually have. Degenerate groups (zero spread, or robust MAD = 0)
+    normalize to 0.0 rather than NULL/±inf — every row keeps a usable
+    score. NULL scores pass through as NULL.
 
     Plan: one partial-agg'd group-stats aggregation (groups-sized
     output, broadcast back) + a row-local projection — the corpus

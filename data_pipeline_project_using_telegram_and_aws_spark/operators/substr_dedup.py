@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 # under. r13 switched `_gram_hash` from the 48-bit md5-prefix recipe to
 # xxhash64: an index persisted under the OLD recipe silently yields zero
 # matches at probe time (duplicates admitted, no error). The stamp makes
-# that mismatch loud — the build writes it as a table property and the
+# that mismatch loud — build/append write it as a table property and the
 # probe path refuses an index whose stamp is absent (pre-r13 build) or
 # different. Bump this constant whenever the `_gram_hash` recipe changes.
 GRAM_HASH_VERSION = "xxhash64-v1"
@@ -271,9 +271,9 @@ def remove_spans(
 
 
 # ---------------------------------------------------------------------------
-# Incremental (streaming) form — a persisted gram-position index
-# classifies each new batch (batch-id-scoped replay exemption), new
-# documents land already cut, and repeats discovered against
+# Incremental (streaming) form — the `dedup_ingest` pattern applied to
+# spans: a persisted gram-position index classifies each new batch,
+# new documents land already cut, and repeats discovered against
 # ALREADY-LANDED documents become retro-span ledger rows for a
 # compaction pass (you cannot rewrite history inside the batch, and
 # silently keeping the old copy would break the cut-all-copies
@@ -317,6 +317,40 @@ def build_gram_index(
     _stamp_gram_hash_version(spark, table)
 
 
+def append_to_gram_index(
+    spark,
+    docs: DataFrame,
+    table: str,
+    k: int = 50,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    batch_id: int | None = None,
+) -> None:
+    """Grow the index with an admitted batch's gram positions —
+    stamped with ``batch_id`` so replays of the same delivery are
+    exempted at probe time (None stamps -1, which never matches).
+    NOTE the grams indexed are those of the ORIGINAL batch text (the
+    probe input), not the cut text: a later doc repeating a span this
+    batch carried must still match it, exactly as it would have in
+    the one-shot batch computation."""
+    _require_gram_hash_version(spark, table)
+    stamp = F.lit(int(batch_id) if batch_id is not None else -1).cast(
+        "long"
+    )
+    (
+        _gram_rows(docs, k, id_col, text_col)
+        .select(
+            F.col("__h").alias("gram_hash"),
+            F.col(id_col).alias("doc_id"),
+            F.col("__p").alias("pos"),
+            stamp.alias("admit_batch"),
+        )
+        .select(*spark.table(table).columns)
+        .write.mode("append")
+        .insertInto(table)
+    )
+
+
 def exact_substr_against_index(
     spark,
     batch: DataFrame,
@@ -340,7 +374,7 @@ def exact_substr_against_index(
       apply with :func:`remove_spans` at compaction time (they merge
       across batches by construction — remove_spans merges overlaps).
 
-    Replay contract: index rows stamped
+    Replay contract (the `dedup_ingest` scoping): index rows stamped
     with THIS ``batch_id`` are ignored at probe time, so an
     at-least-once re-delivery classifies exactly as the first one —
     same cleaned text, same span sets — and the partition rewrites
@@ -389,3 +423,88 @@ def exact_substr_against_index(
     ).distinct()
     retro_spans = _stitch_spans(retro_pos, k, "doc_id")
     return cleaned, batch_spans, retro_spans
+
+
+def translate_spans_to_cut(
+    spans: DataFrame,
+    door_spans: DataFrame,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Map spans expressed in a document's ORIGINAL coordinates onto
+    the text that remains after ``door_spans`` were cut from it
+    (`remove_spans` semantics: merged intervals deleted, pieces
+    concatenated). Needed because the streaming gram index speaks
+    original coordinates while the good zone stores door-cut text —
+    settling a retro span without this translation deletes the wrong
+    bytes whenever the landed document was itself cut at admission.
+
+    For each span ``[s, e)``: the landed position of original offset
+    ``x`` is ``x − Σ |d ∩ [1, x)|`` over the (merged) door intervals
+    ``d``; the translated span is ``[m(s), m(e))``, which clips away
+    any part the door already deleted, and vanishes (dropped) when it
+    lay entirely inside door cuts. One broadcast-sized groupBy on the
+    door spans + one keyed join + two HOF folds — no Python."""
+    doors = door_spans.groupBy(id_col).agg(
+        F.aggregate(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.col("span_start").alias("s"),
+                        (
+                            F.col("span_start") + F.col("span_length")
+                        ).alias("e"),
+                    )
+                )
+            ),
+            F.expr("cast(array() as array<struct<s:int,e:int>>)"),
+            lambda acc, x: F.when(
+                (F.size(acc) > 0)
+                & (x["s"] <= F.element_at(acc, -1)["e"]),
+                F.concat(
+                    F.slice(acc, 1, F.size(acc) - 1),
+                    F.array(
+                        F.struct(
+                            F.element_at(acc, -1)["s"].alias("s"),
+                            F.greatest(
+                                F.element_at(acc, -1)["e"], x["e"]
+                            ).alias("e"),
+                        )
+                    ),
+                ),
+            ).otherwise(F.concat(acc, F.array(x))),
+        ).alias("__doors")
+    )
+
+    def removed_before(x):
+        # total door-interval length strictly before original offset x
+        return F.aggregate(
+            F.coalesce(
+                F.col("__doors"),
+                F.expr("cast(array() as array<struct<s:int,e:int>>)"),
+            ),
+            F.lit(0),
+            lambda acc, d: acc
+            + F.greatest(F.least(d["e"], x) - d["s"], F.lit(0)),
+        )
+
+    e = F.col("span_start") + F.col("span_length")
+    new_s = F.col("span_start") - removed_before(F.col("span_start"))
+    new_e = e - removed_before(e)
+    # collision-free output names first: aliasing the translated value
+    # back to "span_start" in the same select would let lateral column
+    # alias resolution rewrite the sibling expression to read the NEW
+    # value (observed: the translated span_length silently went ≤ 0)
+    return (
+        spans.join(doors, id_col, "left")
+        .select(
+            id_col,
+            new_s.alias("__ns"),
+            (new_e - new_s).alias("__nl"),
+        )
+        .filter(F.col("__nl") > 0)
+        .select(
+            id_col,
+            F.col("__ns").alias("span_start"),
+            F.col("__nl").alias("span_length"),
+        )
+    )

@@ -555,6 +555,31 @@ def decode_video_frames(raw: bytes):
     )
 
 
+def frames_decodable(raw: bytes) -> bool:
+    """True when :func:`decode_video_frames` would open this
+    container's frames — mirroring its ACTUAL selection (the FIRST
+    ``vids`` stream's compression for AVI, not any-stream fourcc:
+    an XVID-first AVI with a later MJPG stream is NOT decodable
+    here). Probe-cheap (headers only); never raises — unprobeable
+    bytes are simply not decodable."""
+    try:
+        kind = sniff_video(raw)
+        if kind == "y4m":
+            _y4m_geometry(_y4m_params(raw[: raw.index(b"\x0a")]))
+            return True
+        if kind == "avi":
+            _, streams = _avi_header_info(raw)
+            v = next(
+                (s for s in streams if s.get("type") == "vids"), None
+            )
+            return v is not None and v.get("compression") in (
+                "MJPG", "DIB",
+            )
+    except ValueError:
+        return False
+    return False
+
+
 def _stride_indices(n_frames: int, max_frames: int) -> range:
     stride = max(1, -(-n_frames // max_frames))  # ceil division
     return range(0, n_frames, stride)

@@ -171,8 +171,8 @@ def _fixture_warc() -> bytes:
 
 def wc1_warc_html_extract(spark, sf_dir):
     """The crawl front door as one hash-checked row (module
-    docstring): read_warc → zone triage (good / feed / other /
-    quarantine) → html_to_text / extract_main_text /
+    docstring): read_warc → zone triage (the `streaming/
+    crawl_ingest.py` CASE) → html_to_text / extract_main_text /
     html_metadata / robots_noindex for HTML responses, feed_entries
     for syndication responses (one `zone='feed'` row per entry), all
     on the embedded fixture. One Python stage (the WARC split),
@@ -215,8 +215,8 @@ def wc1_warc_html_extract(spark, sf_dir):
     null_str = F.lit(None).cast("string")
     # coalesce: a 200 response with NO Content-Type header makes
     # is_feed NULL, and filter(~NULL) would drop the record from BOTH
-    # branches; the guard keeps row conservation (such a record
-    # belongs in zone 'other')
+    # branches — the crawl_ingest.py:102 guard, applied here too so
+    # row conservation holds (such a record belongs in zone 'other')
     not_feed = ~F.coalesce(is_feed, F.lit(False))
     base = recs.filter(not_feed).select(
         F.col("target_uri").alias("uri"),

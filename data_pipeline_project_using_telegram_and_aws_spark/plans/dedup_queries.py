@@ -40,21 +40,6 @@ def dd2_ngram_jaccard_topk(spark, sf_dir):
     )
 
 
-def dd3_minhash_signatures(spark, sf_dir):
-    """MinHash signatures (16 salted md5 permutations) for a deterministic
-    sample of documents — the building block of LSH dedup.
-
-    Not driver-registered since round 3: dd4's oracle recomputes the full
-    signature matrix in SQL and its hash check fails if any signature
-    byte differs, so this row's check is strictly subsumed by dd4 (the
-    slot funds pk1/dc1/tx7 inside the driver's 50-row correctness
-    window). Kept callable and pytest-covered (tests/test_dedup.py)."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 50 == 0
-    )
-    return D.minhash_signatures(docs, n=3).orderBy("doc_id", "salt")
-
-
 def dd4_minhash_lsh_candidates(spark, sf_dir):
     """Banded-LSH candidate pairs + estimated Jaccard (8 bands × 2 rows).
     Sub-quadratic: only band-bucket collisions are paired. The oracle

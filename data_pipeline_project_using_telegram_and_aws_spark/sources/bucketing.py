@@ -157,7 +157,7 @@ def compact_bucketed_table(
     — the swap is metadata-only; the data rewrite is the price of
     restoring the layout, paid at compaction cadence, not query time.
 
-    Two swap protocols (``swap=``):
+    Two swap protocols (``swap=``), mirroring `sources/commit.py`:
 
     - ``"rename"`` (default): two catalog renames. NOT atomic — between
       the renames the original name does not resolve, so run it in a

@@ -20,14 +20,20 @@ SF_DIR = "/root/testdata/sf0.001"
 # core tier:  python -m pytest tests/            (pytest.ini's default
 #             ``-m "not slow"``: the product pins, run before every commit)
 # full tier:  python -m pytest tests/ -m ""      (adds hypothesis property
-#             tests, the differential-fuzz axes, and the corpus-recipe e2e
-#             chains; the empty marker expression overrides the default)
+#             tests, the differential-fuzz axes, and the marked multi-round
+#             e2e modules; the empty marker expression overrides the
+#             default)
 # Hypothesis-driven tests are auto-marked: a new property test lands in the
 # full tier without anyone remembering a decorator.
 
 SLOW_MODULES = {
     "test_differential_fuzz",  # 20 oracle fuzz axes, many Spark jobs each
     "test_full_recipe",        # corpus-recipe e2e chains
+    # multi-round foreachBatch streams with checkpoint resume
+    # choreography (streaming/{contract_gate,dedup_ingest,pack_stream,
+    # sketch_ledger}); sessions touching those run these files directly
+    "test_streaming_recipe",
+    "test_sketch_ledger",
 }
 
 

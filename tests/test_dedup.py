@@ -363,3 +363,162 @@ def test_containment_properties_on_random_corpora(spark, texts):
         inter_ab = c * sizes[a]
         c_ba = pairs[(b, a)]
         assert abs(inter_ab - c_ba * sizes[b]) < 1e-3
+
+
+def test_incremental_exact_dedup_against_index(spark, tmp_path):
+    """The daily-batch exact path: corpus collisions and in-batch
+    collisions both reject with the right keeper; admitted texts grow
+    the index; replaying the same batch ID reproduces the ORIGINAL
+    admitted/duplicate split (self-matches scoped to the admitting
+    batch are no-matches); a document RE-SENT under a NEW batch id is
+    rejected (no re-admission); and the padded index still rejects
+    genuinely new duplicates."""
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.dedup import (
+        append_to_exact_hash_index,
+        build_exact_hash_index,
+        exact_dedup_against_index,
+    )
+
+    table = "exact_idx_test"
+    corpus = spark.createDataFrame(
+        [(1, "alpha text"), (2, "beta text"), (3, "alpha text")],
+        ["doc_id", "text"],
+    )
+    build_exact_hash_index(corpus, table, buckets=4)
+    assert spark.table(table).count() == 2  # one row per distinct text
+
+    batch = spark.createDataFrame(
+        [
+            (10, "alpha text"),   # corpus dup → keeper 1
+            (11, "gamma text"),   # fresh
+            (12, "gamma text"),   # in-batch dup → keeper 11
+            (13, "delta text"),   # fresh
+        ],
+        ["doc_id", "text"],
+    )
+    admitted, dups = exact_dedup_against_index(
+        spark, batch, table, batch_id=7
+    )
+    assert {r["doc_id"] for r in admitted.collect()} == {11, 13}
+    keepers = {r["doc_id"]: r["keeper_id"] for r in dups.collect()}
+    assert keepers == {10: 1, 12: 11}
+
+    append_to_exact_hash_index(spark, admitted, table, batch_id=7)
+    assert spark.table(table).count() == 4
+
+    # at-least-once replay UNDER THE SAME BATCH ID: classification is
+    # STABLE — the previously admitted rows re-admit (their corpus
+    # keeper is themselves, admitted by this very batch), the
+    # previously rejected rows re-reject with the same keepers
+    again, dups2 = exact_dedup_against_index(
+        spark, batch, table, batch_id=7
+    )
+    assert {r["doc_id"] for r in again.collect()} == {11, 13}
+    assert {
+        r["doc_id"]: r["keeper_id"] for r in dups2.collect()
+    } == {10: 1, 12: 11}
+    # the replayed append pads the index; padding must not multiply
+    # probe matches nor admit a real duplicate
+    append_to_exact_hash_index(spark, again, table, batch_id=7)
+    adm3, dups3 = exact_dedup_against_index(
+        spark,
+        spark.createDataFrame([(20, "gamma text")], ["doc_id", "text"]),
+        table,
+        batch_id=8,
+    )
+    assert adm3.count() == 0
+    assert {(r["doc_id"], r["keeper_id"]) for r in dups3.collect()} == {
+        (20, 11)
+    }
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_exact_dedup_ingest_rejects_resend_under_new_batch(spark):
+    """The cross-batch re-admission hazard, closed: the same document
+    (same id, same text) re-sent under a NEW batch id must classify as
+    a duplicate of its own corpus copy — the self-match exemption is
+    scoped to the admitting batch, so the same bytes can never land in
+    two good-zone partitions. With batch_id=None the exemption is off
+    entirely and even a same-run probe rejects."""
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.dedup import (
+        append_to_exact_hash_index,
+        build_exact_hash_index,
+        exact_dedup_against_index,
+    )
+
+    table = "exact_idx_resend_test"
+    build_exact_hash_index(
+        spark.createDataFrame([], "doc_id long, text string"),
+        table,
+        buckets=4,
+    )
+    doc = spark.createDataFrame([(11, "gamma text")], ["doc_id", "text"])
+    admitted, dups = exact_dedup_against_index(
+        spark, doc, table, batch_id=3
+    )
+    assert admitted.count() == 1 and dups.count() == 0
+    append_to_exact_hash_index(spark, admitted, table, batch_id=3)
+
+    # the upstream re-sends the SAME document in a LATER batch
+    readm, redups = exact_dedup_against_index(
+        spark, doc, table, batch_id=4
+    )
+    assert readm.count() == 0
+    assert {(r["doc_id"], r["keeper_id"]) for r in redups.collect()} == {
+        (11, 11)  # duplicate of its own corpus copy
+    }
+
+    # and with no batch tracking at all, the exemption never fires
+    noadm, nodups = exact_dedup_against_index(spark, doc, table)
+    assert noadm.count() == 0
+    assert {(r["doc_id"], r["keeper_id"]) for r in nodups.collect()} == {
+        (11, 11)
+    }
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_cross_source_dup_matrix_exact_and_consistent_with_theta(spark):
+    """Planted overlap: sources A/B share exactly 30 texts, C shares 2
+    with A and none with B; exact counts and shares; and the theta
+    screen's estimate on the same data agrees within its RSE (the
+    screen-then-confirm workflow)."""
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.dedup import (
+        cross_source_dup_matrix,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.sketches import (
+        theta_ledger,
+        theta_overlap_matrix,
+    )
+
+    rows = []
+    did = 0
+    for i in range(100):
+        rows.append((did, f"text a {i}", "A")); did += 1
+    for i in range(70, 130):  # 70-99 shared with A (30 texts)
+        rows.append((did, f"text a {i}" if i < 100 else f"text b {i}", "B"))
+        did += 1
+    rows.append((did, "text a 0", "C")); did += 1
+    rows.append((did, "text a 1", "C")); did += 1
+    rows.append((did, "only c", "C")); did += 1
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+    mat = {
+        (r["source_a"], r["source_b"]): r
+        for r in cross_source_dup_matrix(docs).collect()
+    }
+    ab = mat[("A", "B")]
+    assert ab["n_shared_texts"] == 30
+    assert ab["share_of_a"] == 0.3  # 30 of A's 100 distinct texts
+    assert ab["share_of_b"] == 0.5  # 30 of B's 60
+    assert mat[("A", "C")]["n_shared_texts"] == 2
+    assert ("B", "C") not in mat  # zero-overlap pairs have no row
+
+    led = theta_ledger(
+        docs.select(F.concat("text").alias("k"), "source"), "k",
+        by=["source"],
+    )
+    est = {
+        (r["group_a"], r["group_b"]): r["est_intersection"]
+        for r in theta_overlap_matrix(led, "source").collect()
+    }
+    assert abs(est[("A", "B")] - 30) < 5  # small sets: theta ~exact

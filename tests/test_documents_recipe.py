@@ -1,10 +1,13 @@
-"""The documents recipe end-to-end: a mixed-format member set through
-the WHOLE chain — unified front door → markup/subtitle/latex
-resolution → curation (dedup + quality + ledger) → sequence packing.
-Every stage is the real operator; the final packed corpus and the drop
-ledger are both pinned."""
+"""The documents recipe end-to-end: a mixed-format archive through
+the WHOLE chain — archive source → unified front door → markup/
+subtitle/latex resolution → curation (dedup + quality + ledger) →
+sequence packing. Every stage is the real operator; the final packed
+corpus and the drop ledger are both pinned."""
 
 from __future__ import annotations
+
+import io
+import zipfile
 
 from pyspark.sql import functions as F
 
@@ -26,9 +29,12 @@ from data_pipeline_project_using_telegram_and_aws_spark.plans.document_queries i
     _fixture_epub,
     _fixture_pdf,
 )
+from data_pipeline_project_using_telegram_and_aws_spark.sources.archives import (
+    read_zip_archives,
+)
 
 
-def test_documents_recipe_end_to_end(spark):
+def test_documents_recipe_end_to_end(spark, tmp_path):
     members = {
         "corpus/report.pdf": _fixture_pdf(),
         "corpus/report2.pdf": _fixture_pdf(),      # exact duplicate
@@ -39,10 +45,16 @@ def test_documents_recipe_end_to_end(spark):
         "corpus/broken.bin": b"\x00\x01 not a document",
         "corpus/locked.epub": _fixture_epub(encrypted=True),
     }
-    # 1. one row per member
-    rows = spark.createDataFrame(
-        list(members.items()), "member string, content binary"
-    )
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in members.items():
+            zf.writestr(name, data)
+    p = tmp_path / "corpus.zip"
+    p.write_bytes(buf.getvalue())
+
+    # 1. archive source: one row per member
+    rows = read_zip_archives(spark, str(p))
+    assert rows.count() == len(members)
 
     # 2-3. front door + resolution; stable ids from member names
     docs = rows.select(

@@ -5,7 +5,9 @@ run as one composition, the way a user of this engine would —
       → curate_corpus (quality gates + LM gate + near-dup closure,
         auditable drop ledger)
       → decontaminate against an eval suite (n-gram collisions)
+      → trained quality-classifier filter
       → deterministic splits
+      → BPE train + encode
       → pack_sequences + materialize_sequences
 
 Each stage is oracle- or reference-pinned on its own elsewhere; this
@@ -20,6 +22,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_pipeline_project_using_telegram_and_aws_spark.operators.bpe import (
+    bpe_encode,
+    train_bpe,
+)
 from data_pipeline_project_using_telegram_and_aws_spark.operators.curation import (
     curate_corpus,
 )
@@ -29,6 +35,10 @@ from data_pipeline_project_using_telegram_and_aws_spark.operators.decontaminatio
 from data_pipeline_project_using_telegram_and_aws_spark.operators.packing import (
     materialize_sequences,
     pack_sequences,
+)
+from data_pipeline_project_using_telegram_and_aws_spark.operators.quality_classifier import (
+    score_documents,
+    train_quality_classifier,
 )
 from data_pipeline_project_using_telegram_and_aws_spark.operators.splits import (
     assign_split,
@@ -73,18 +83,25 @@ def _run_chain(corpus, eval_suite):
         .distinct()
     )
     clean = kept.join(contaminated, "doc_id", "left_anti")
+    labeled = clean.withColumn(
+        "label", (F.col("lang") == "en").cast("double")
+    )
+    model = train_quality_classifier(labeled, n_features=1 << 12)
+    scored = clean.join(score_documents(model, clean), "doc_id")
     train = assign_split(
-        clean, {"train": 0.9, "holdout": 0.1}, salt="recipe"
+        scored, {"train": 0.9, "holdout": 0.1}, salt="recipe"
     ).filter(F.col("split") == "train")
+    merges = train_bpe(train.limit(50), n_merges=8)
+    encoded = bpe_encode(train, merges)
     packed = pack_sequences(
         train.select("doc_id", "text"), budget=512, n_shards=8
     )
     sequences = materialize_sequences(packed, text_col="text")
-    return kept, ledger, clean, train, packed, sequences
+    return kept, ledger, clean, train, encoded, packed, sequences
 
 
 def test_full_chain_contracts(corpus, eval_suite):
-    kept, ledger, clean, train, packed, sequences = _run_chain(
+    kept, ledger, clean, train, encoded, packed, sequences = _run_chain(
         corpus, eval_suite
     )
     n_in = corpus.count()
@@ -102,10 +119,11 @@ def test_full_chain_contracts(corpus, eval_suite):
     # eval docs themselves (in-corpus twins) are also flagged
     assert 7 not in clean_ids
 
-    # every train doc packed exactly once
+    # every train doc encoded exactly once and packed exactly once
     train_ids = [r.doc_id for r in train.select("doc_id").collect()]
+    enc_ids = [r.doc_id for r in encoded.select("doc_id").collect()]
     packed_ids = [r.doc_id for r in packed.select("doc_id").collect()]
-    assert sorted(train_ids) == sorted(packed_ids)
+    assert sorted(enc_ids) == sorted(train_ids) == sorted(packed_ids)
 
     # budget contract (contiguous tiling): every document STARTS inside
     # its sequence's budget window — docs may straddle the boundary (the
@@ -119,8 +137,8 @@ def test_full_chain_contracts(corpus, eval_suite):
 
 
 def test_full_chain_is_deterministic(corpus, eval_suite):
-    _, _, _, train_a, packed_a, _ = _run_chain(corpus, eval_suite)
-    _, _, _, train_b, packed_b, _ = _run_chain(corpus, eval_suite)
+    _, _, _, train_a, _, packed_a, _ = _run_chain(corpus, eval_suite)
+    _, _, _, train_b, _, packed_b, _ = _run_chain(corpus, eval_suite)
     a = sorted(r.doc_id for r in train_a.select("doc_id").collect())
     b = sorted(r.doc_id for r in train_b.select("doc_id").collect())
     assert a == b
@@ -137,16 +155,25 @@ def test_full_chain_is_deterministic(corpus, eval_suite):
 
 def test_round5_ops_compose(corpus):
     """The round-5 additions run as one chain downstream of curation:
-    quality-temperature sampling → per-lang token budgets → pack →
-    epoch shuffle. Pins the contracts BETWEEN them: survivor subsets,
-    per-group budget holds, and the epoch shuffle is a permutation of
-    the packed sequences."""
+    quality-temperature sampling → per-lang token budgets → unigram
+    encode → pack → epoch shuffle, with an HLL ledger audit at the end.
+    Pins the contracts BETWEEN them: survivor subsets, per-group budget
+    holds, every budgeted doc encoded exactly once, the epoch shuffle
+    is a permutation of the packed sequences, and the sketch audit
+    agrees with the exact count."""
     from data_pipeline_project_using_telegram_and_aws_spark.operators.packing import (
         shuffle_epoch_order,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.sketches import (
+        hll_ledger,
     )
     from data_pipeline_project_using_telegram_and_aws_spark.operators.splits import (
         take_tokens_per_group,
         temperature_sample,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.unigram_tokenizer import (
+        train_unigram,
+        unigram_encode,
     )
 
     scored = corpus.withColumn(
@@ -168,6 +195,14 @@ def test_round5_ops_compose(corpus):
     )
     assert all(r["t"] <= 4000 for r in per_lang)
 
+    pieces = train_unigram(
+        budgeted.limit(30), vocab_size=120, max_piece_len=4
+    )
+    encoded = unigram_encode(budgeted, pieces, max_piece_len=4)
+    b_ids = sorted(r.doc_id for r in budgeted.select("doc_id").collect())
+    e_ids = sorted(r.doc_id for r in encoded.select("doc_id").collect())
+    assert b_ids == e_ids  # exactly once, none lost
+
     packed = pack_sequences(
         budgeted.select("doc_id", "text"), budget=256, n_shards=4
     )
@@ -178,4 +213,16 @@ def test_round5_ops_compose(corpus):
     ) == sorted(
         (r.shard, r.seq_id) for r in seqs.select("shard", "seq_id").collect()
     )
+
+    audit = hll_ledger(budgeted, "doc_id", by=["lang"]).collect()
+    exact = {
+        r["lang"]: r["n"]
+        for r in budgeted.groupBy("lang")
+        .agg(F.countDistinct("doc_id").alias("n"))
+        .collect()
+    }
+    for r in audit:
+        assert abs(r["distinct_est"] - exact[r["lang"]]) <= max(
+            3, 0.05 * exact[r["lang"]]
+        )
     budgeted.unpersist()

@@ -328,7 +328,7 @@ def test_numeric_refs_surrogates_and_nul(spark):
     assert got == "a�b�c\U0010ffffd�e"
 
 
-def test_http_payload_normalization():
+def test_http_payload_normalization(spark, tmp_path):
     """r10 ADVICE: chunked Transfer-Encoding, gzip Content-Encoding,
     and legacy charsets must be decoded (or quarantined), not cast
     blindly as UTF-8."""
@@ -406,6 +406,33 @@ def test_http_payload_normalization():
              "<html><head><meta charset='iso-8859-1'></head>"
              "<body><p>héader wins</p></body></html>".encode()))
     assert err is None and "héader wins" in body.decode()
+
+    # end-to-end through the streaming front door: the latin-1 page
+    # lands in good with correct text; the bad-byte page quarantines
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.crawl_ingest import (
+        start_crawl_ingest_stream,
+    )
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    write_warc_responses(
+        [("http://l1.com/", 200, "text/html; charset=iso-8859-1",
+          html_latin),
+         ("http://bad.com/", 200, "text/html; charset=utf-8",
+          bad_utf8)],
+        str(src / "b.warc.gz"),
+    )
+    good, other, quar = (
+        str(tmp_path / z) for z in ("good", "other", "quar")
+    )
+    start_crawl_ingest_stream(
+        spark, str(src), good, other, quar, str(tmp_path / "ck")
+    ).awaitTermination(120)
+    g = spark.read.parquet(good).collect()
+    q = spark.read.parquet(quar).collect()
+    assert [r.url for r in g] == ["http://l1.com/"]
+    assert g[0].text == "Café crème"
+    assert len(q) == 1 and "undecodable" in q[0].reason
 
 
 def test_warc_gz_record_offset_is_compressed_member_offset(tmp_path):
@@ -672,6 +699,103 @@ def test_crawl_to_corpus_recipe(spark, tmp_path):
     assert "<" not in rows["http://site0.com/x"].text
 
 
+def test_streaming_crawl_front_door(spark, tmp_path):
+    """WARC landing dir → good/other/quarantine zones with record
+    conservation, replay-idempotent ingest_batch partitions, and
+    checkpoint resume — the crawl twin of the media front door."""
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.crawl_ingest import (
+        start_crawl_ingest_stream,
+    )
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    good, other, quar = (
+        str(tmp_path / z) for z in ("good", "other", "quar")
+    )
+    ck = str(tmp_path / "ck")
+    prose = (
+        "A long enough and perfectly link-free paragraph of body "
+        "prose for the extraction gate to keep without any fuss."
+    )
+    write_warc_responses(
+        [
+            ("http://a.com/", 200, "text/html",
+             f"<html lang='en'><head><title>A</title></head>"
+             f"<body><p>{prose}</p>"
+             f"<p><a href='/next'>next</a> "
+             f"<a href='skip' rel='nofollow'>skip</a> "
+             f"<a href='http://b.com/abs#frag'>abs</a></p>"
+             f"</body></html>".encode()),
+            ("http://a.com/img", 200, "image/png", b"\x89PNGfake"),
+            ("http://a.com/gone", 404, "text/html", b"<p>404</p>"),
+        ],
+        str(src / "b0.warc.gz"),
+    )
+    # a second file torn INSIDE its first gzip member (100 bytes into
+    # a several-hundred-byte member): nothing salvageable, one file-
+    # level quarantine row (a cut between members would instead
+    # salvage the complete leading records — also correct, tested via
+    # parse_warc_bytes directly above)
+    raw = open(str(src / "b0.warc.gz"), "rb").read()
+    open(str(src / "broken.warc.gz"), "wb").write(raw[:100])
+
+    cdx = str(tmp_path / "cdx")
+    start_crawl_ingest_stream(
+        spark, str(src), good, other, quar, ck, cdx_path=cdx
+    ).awaitTermination(120)
+    g = spark.read.parquet(good).collect()
+    o = spark.read.parquet(other).collect()
+    q = spark.read.parquet(quar).collect()
+    # CDX sidecar: every CLEAN response record of the batch indexed
+    # (good + other zones; the torn file contributed only quarantine),
+    # lengths completed from binaryFile file sizes, offsets seekable
+    import gzip as _gz
+
+    c = sorted(
+        spark.read.parquet(cdx).collect(), key=lambda r: r.record_offset
+    )
+    assert [r.url for r in c] == [
+        "http://a.com/", "http://a.com/img", "http://a.com/gone",
+    ]
+    assert [r.status for r in c] == [200, 200, 404]
+    assert c[0].urlkey == "com,a)/"
+    blob = open(str(src / "b0.warc.gz"), "rb").read()
+    for r in c:
+        piece = blob[r.record_offset:r.record_offset + r.record_length]
+        assert piece[:2] == b"\x1f\x8b" and _gz.decompress(piece)
+    assert c[-1].record_offset + c[-1].record_length == len(blob)
+    assert [r.url for r in g] == ["http://a.com/"]
+    assert g[0].meta["title"] == "A" and prose in g[0].text
+    assert prose in g[0].main_text
+    # outlinks resolved in-batch: relative resolved against the page
+    # URL, fragment stripped, nofollow dropped
+    assert sorted(g[0].outlinks) == [
+        "http://a.com/next", "http://b.com/abs",
+    ]
+    assert {r.target_uri for r in o} == {
+        "http://a.com/img", "http://a.com/gone",
+    }
+    assert len(q) >= 1 and all(r.reason for r in q)
+    # conservation over the parseable file + the torn file's error rows
+    assert len(g) + len(o) + (len(q)) >= 4
+
+    # resume: a later landing flows only the new file
+    write_warc_responses(
+        [("http://b.com/", 200, "text/html",
+          f"<html><body><p>{prose} Second page.</p></body>"
+          f"</html>".encode())],
+        str(src / "b1.warc.gz"),
+    )
+    start_crawl_ingest_stream(
+        spark, str(src), good, other, quar, ck
+    ).awaitTermination(120)
+    g2 = spark.read.parquet(good)
+    assert {r.url for r in g2.collect()} == {
+        "http://a.com/", "http://b.com/",
+    }
+    assert {r.ingest_batch for r in g2.collect()} == {0, 1}
+
+
 def test_robots_noindex_gate(spark):
     from data_pipeline_project_using_telegram_and_aws_spark.operators.html import (
         robots_noindex,
@@ -698,6 +822,322 @@ def test_robots_noindex_gate(spark):
         for r in df.select(robots_noindex("html").alias("n")).collect()
     ]
     assert got == [w for _, w in rows]
+
+
+def test_web_corpus_recipe_end_to_end(spark, tmp_path):
+    """The whole web path spliced into the existing engine: WARC
+    landing → crawl front door → robots-noindex gate → canonical-URL
+    dedup (normalize_url) → corpus curation → packing slots. Each
+    stage is an existing pinned operator; this pins the SPLICE —
+    column contracts line up and counts conserve across stages."""
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.curation import (
+        curate_corpus,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.html import (
+        robots_noindex,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.packing import (
+        pack_sequences,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.urls import (
+        normalize_url,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.crawl_ingest import (
+        start_crawl_ingest_stream,
+    )
+
+    prose_a = (
+        "Quality body prose with plenty of distinct and varied words "
+        "so every curation gate passes it without complaint at all."
+    )
+    prose_b = (
+        "Entirely different second document discussing oceanography, "
+        "tidal harmonics, and sediment transport in estuarine zones."
+    )
+
+    def page(body, noindex=False, title="T"):
+        meta = (
+            "<meta name='robots' content='noindex'>" if noindex else ""
+        )
+        return (
+            f"<html lang='en'><head><title>{title}</title>{meta}"
+            f"</head><body><p>{body}</p></body></html>"
+        ).encode()
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    write_warc_responses(
+        [
+            # same content under tracking-param variants: ONE survives
+            ("http://a.com/doc?id=7&utm_source=tw", 200, "text/html",
+             page(prose_a + " Alpha.")),
+            ("http://A.com:80/doc/?utm_campaign=x&id=7", 200,
+             "text/html", page(prose_a + " Alpha.")),
+            ("http://b.com/x", 200, "text/html",
+             page(prose_b + " Bravo.")),
+            ("http://c.com/hidden", 200, "text/html",
+             page(prose_a + " Charlie.", noindex=True)),
+            ("http://d.com/tiny", 200, "text/html", page("tiny")),
+        ],
+        str(src / "b0.warc.gz"),
+    )
+    good, other, quar = (
+        str(tmp_path / z) for z in ("good", "other", "quar")
+    )
+    start_crawl_ingest_stream(
+        spark, str(src), good, other, quar, str(tmp_path / "ck")
+    ).awaitTermination(120)
+
+    pages = spark.read.parquet(good)
+    assert pages.count() == 5
+    # robots gate needs the raw html — recompute from the other zone?
+    # No: gate BEFORE extraction in production; here the good zone
+    # kept no html, so re-read records for the gate signal
+    from data_pipeline_project_using_telegram_and_aws_spark.sources.warc import read_warc
+
+    flags = (
+        read_warc(spark, str(src / "b0.warc.gz"))
+        .select(
+            F.col("target_uri").alias("url"),
+            robots_noindex(
+                F.col("payload").cast("string")
+            ).alias("noindex"),
+        )
+    )
+    kept = (
+        pages.join(flags, "url")
+        .filter(~F.col("noindex"))
+        .withColumn("canon_url", normalize_url("url"))
+    )
+    assert kept.count() == 4  # c.com/hidden gated out
+    # canonical-URL dedup: the two a.com variants collapse to one
+    deduped = (
+        kept.withColumn(
+            "__rn",
+            F.row_number().over(
+                __import__("pyspark.sql.window", fromlist=["Window"])
+                .Window.partitionBy("canon_url")
+                .orderBy("url")
+            ),
+        )
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+    assert deduped.count() == 3
+    docs = deduped.select(
+        F.xxhash64("canon_url").alias("doc_id"),
+        F.col("text"),
+        F.lit("en").alias("lang"),
+    )
+    curated, ledger = curate_corpus(docs, min_tokens=5)
+    ids = {r.doc_id for r in curated.collect()}
+    # the tiny page fails min_tokens; the two real pages survive
+    assert len(ids) == 2
+    reasons = {r.reason for r in ledger.collect()}
+    assert any("min_tokens" in r or "short" in r for r in reasons), reasons
+    packed = pack_sequences(curated, budget=64, n_shards=2)
+    assert packed.count() == 2
+    assert {"shard", "seq_id", "seq_offset"} <= set(packed.columns)
+
+
+def test_crawl_loop_two_rounds(spark, tmp_path):
+    """The full between-rounds loop the round-11 operators complete:
+    round-1 WARC landing → good zone (text + outlinks) →
+    build_frontier (robots-gated, crawled-set anti-join) → 'fetch' the
+    frontier into a round-2 WARC → ingest → the frontier shrinks to
+    only genuinely-new pages. Pins the splice of crawl_ingest + links
+    + robots + urls end-to-end, including host/domain link-graph
+    contraction."""
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.links import (
+        build_frontier,
+        link_graph,
+        schedule_fetches,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.robots import parse_robots_txt
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.crawl_ingest import (
+        start_crawl_ingest_stream,
+    )
+
+    prose = (
+        "A page body long enough for every gate with plenty of words "
+        "to spare, describing an unremarkable but pleasant topic."
+    )
+
+    def page(body, links=()):
+        a = "".join(f"<a href='{h}'>to {h}</a> " for h in links)
+        return (
+            f"<html><body><p>{body}</p><p>{a}</p></body></html>"
+        ).encode()
+
+    feed_xml = (
+        '<?xml version="1.0"?><rss version="2.0"><channel>'
+        "<title>A Feed</title><link>http://a.com/</link>"
+        "<item><title>From feed</title>"
+        "<link>http://b.com/fromfeed</link>"
+        "<pubDate>Wed, 12 Aug 2026 09:00:00 GMT</pubDate></item>"
+        "<item><title>Known</title>"
+        "<link>http://a.com/2</link></item>"
+        "</channel></rss>"
+    ).encode()
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    write_warc_responses(
+        [
+            ("http://a.com/1", 200, "text/html",
+             page(prose, ["http://a.com/2", "http://b.com/private/x",
+                          "http://b.com/open"])),
+            ("http://a.com/2", 200, "text/html",
+             page(prose + " Two.", ["http://a.com/1"])),
+            ("http://a.com/feed.xml", 200, "application/rss+xml",
+             feed_xml),
+        ],
+        str(src / "r1.warc.gz"),
+    )
+    zones = {z: str(tmp_path / z) for z in ("good", "other", "quar")}
+    start_crawl_ingest_stream(
+        spark, str(src), zones["good"], zones["other"], zones["quar"],
+        str(tmp_path / "ck"),
+    ).awaitTermination(120)
+    good1 = spark.read.parquet(zones["good"])
+    assert good1.count() == 2
+
+    rules = parse_robots_txt(
+        spark.createDataFrame(
+            [("b.com", "User-agent: *\nDisallow: /private\n")],
+            "host string, body string",
+        )
+    )
+    # feed responses land in the OTHER zone typed + payload-intact;
+    # their entry links seed the frontier exactly like sitemap URLs
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.feeds import (
+        feed_entries,
+        feed_seeds,
+    )
+
+    feed_docs = (
+        spark.read.parquet(zones["other"])
+        .filter(F.col("http_content_type").startswith(
+            "application/rss+xml"))
+        .select(F.col("target_uri").alias("feed_url"),
+                F.col("payload").cast("string").alias("body"))
+    )
+    # seeds carry the publish-recency priority (feed_seeds): the
+    # round clock is one hour after the fromfeed entry's pubDate
+    seeds = feed_seeds(feed_entries(feed_docs), now_s=1_786_528_800.0)
+    frontier = build_frontier(
+        good1, rules=rules, crawled=good1.select("url"), seeds=seeds
+    )
+    want_next = {"http://b.com/open", "http://b.com/fromfeed"}
+    assert {r.url for r in frontier.collect()} == want_next
+    # a.com/1 <-> a.com/2 already crawled (the feed's a.com/2 entry
+    # dies at the same anti-join); /private robots-blocked
+
+    # politeness: the frontier schedules against the hosts' robots
+    # crawl-delays before fetching (operators/links.schedule_fetches)
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.robots import (
+        robots_directives,
+    )
+
+    directives = robots_directives(
+        spark.createDataFrame(
+            [("b.com",
+              "User-agent: *\nCrawl-delay: 2.5\nDisallow: /private\n")],
+            "host string, body string",
+        )
+    )
+    sched = {
+        r.url: (r.crawl_delay, r.planned_offset_s)
+        for r in schedule_fetches(
+            frontier, directives, priority_col="priority"
+        ).collect()
+    }
+    # both frontier urls are on b.com: one per crawl-delay slot, and
+    # the feed entry with a RECENT pubDate outranks the undated
+    # outlink for the host's first slot (publish-recency freshness)
+    assert all(sched[u][0] == 2.5 for u in want_next)
+    assert sched["http://b.com/fromfeed"][1] == 0.0
+    assert sched["http://b.com/open"][1] == 2.5
+
+    # round 2: 'fetch' the frontier, land it, resume the stream
+    write_warc_responses(
+        [(u, 200, "text/html", page(prose + " New.", []))
+         for u in sorted(want_next)],
+        str(src / "r2.warc.gz"),
+    )
+    start_crawl_ingest_stream(
+        spark, str(src), zones["good"], zones["other"], zones["quar"],
+        str(tmp_path / "ck"),
+    ).awaitTermination(120)
+    good2 = spark.read.parquet(zones["good"])
+    assert {r.url for r in good2.collect()} == {
+        "http://a.com/1", "http://a.com/2", "http://b.com/open",
+        "http://b.com/fromfeed",
+    }
+    # after round 2 the frontier is dry (the new page links nowhere)
+    f2 = build_frontier(good2, rules=rules, crawled=good2.select("url"))
+    assert f2.count() == 0
+
+    # host-granularity link graph contracts to site-level edges
+    pages_df = good1.select(
+        "url",
+        F.concat(
+            F.lit("<html><body>"),
+            F.concat_ws(
+                "", F.transform(
+                    "outlinks",
+                    lambda h: F.concat(F.lit("<a href='"), h,
+                                       F.lit("'>x</a>")),
+                )
+            ),
+            F.lit("</body></html>"),
+        ).alias("html"),
+    )
+    hg = {(r.src, r.dst) for r in link_graph(
+        pages_df, granularity="host"
+    ).collect()}
+    assert hg == {("a.com", "b.com")}  # intra-host edges collapse away
+
+    # round 3 — the REVISIT side (operators/recrawl.py): refetch all
+    # three pages, a.com/1 with CHANGED content; the fetch ledger is
+    # the accumulated good zone (url x ingest_batch), digest = md5 of
+    # the stored text, fetch_time = the round clock
+    write_warc_responses(
+        [
+            ("http://a.com/1", 200, "text/html",
+             page(prose + " Completely rewritten body.", [])),
+            ("http://a.com/2", 200, "text/html",
+             page(prose + " Two.", ["http://a.com/1"])),
+            ("http://b.com/open", 200, "text/html",
+             page(prose + " New.", [])),
+        ],
+        str(src / "r3.warc.gz"),
+    )
+    start_crawl_ingest_stream(
+        spark, str(src), zones["good"], zones["other"], zones["quar"],
+        str(tmp_path / "ck"),
+    ).awaitTermination(120)
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.recrawl import (
+        estimate_change_rates,
+        schedule_revisits,
+    )
+
+    ledger = spark.read.parquet(zones["good"]).select(
+        "url",
+        (F.col("ingest_batch").cast("double") * 100.0).alias(
+            "fetch_time"
+        ),
+        F.md5(F.col("text").cast("binary")).alias("digest"),
+    )
+    rates = estimate_change_rates(ledger)
+    by_url = {r.url: r for r in rates.collect()}
+    assert by_url["http://a.com/1"].n_changes == 1
+    assert by_url["http://a.com/1"].change_rate > 0
+    assert by_url["http://a.com/2"].change_rate == 0.0
+    assert by_url["http://b.com/open"].change_rate == 0.0
+    revisit = schedule_revisits(rates, now_s=400.0).collect()
+    assert revisit[0].url == "http://a.com/1"  # the page that churns
+    assert all(r.staleness_p == 0.0 for r in revisit[1:])
 
 
 def test_surt_key_recipe(spark):

@@ -162,12 +162,282 @@ def test_resize_media_requires_fake_or_injected(spark):
         raise AssertionError("stub resizer accepted without fake=True")
 
 
+# ---------------------------------------------------------------------------
+# ffmpeg seam (operators/ffmpeg_seam.py): the codec-gated formats'
+# injection contract — a fake `run` emulates ffmpeg/ffprobe stdout in
+# CI; the real binaries drop into the SAME code path when present.
+
+H264 = b"\x00\x00\x00\x01\x67" + bytes(range(40))      # Annex-B NAL
+MP3 = b"ID3" + bytes(24)                                # ID3v2 header
+AAC = b"\xff\xf1\x50\x80" + bytes(20)                   # ADTS sync
+MP4 = (16).to_bytes(4, "big") + b"ftypisom" + bytes(4)  # probes, but
+GARBAGE = b"not media at all"                           # decode fails
+
+_W, _H, _NF = 4, 2, 3
+_PLANE = _W * _H
+
+
+def _planes(raw: bytes, n: int) -> bytes:
+    """Deterministic gray planes derived from the input bytes."""
+    seed = sum(raw) % 251
+    return bytes((seed + i) % 256 for i in range(n * _PLANE))
+
+
+def _make_fake_run():
+    """Build the fake runner as a CLOSURE so cloudpickle ships it to
+    executors by value (a test-module global would be pickled by
+    reference and fail to import on the worker). It emulates the two
+    binaries' stdout for the exact argv the seam promises to send —
+    any drift in the command contract fails here."""
+    w, h, nf, plane = _W, _H, _NF, _PLANE
+
+    def fake_run(argv, data):
+        import json as _json
+
+        from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+            PROBE_ARGV,
+            audio_pcm_argv,
+            sniff_compressed_media,
+            video_gray_argv,
+        )
+
+        def planes(raw, n):
+            seed = sum(raw) % 251
+            return bytes((seed + i) % 256 for i in range(n * plane))
+
+        kind = sniff_compressed_media(bytes(data))
+        if argv == PROBE_ARGV:
+            if kind in ("h264-annexb", "mp4"):
+                return _json.dumps({"streams": [{
+                    "codec_type": "video", "width": w, "height": h,
+                    "nb_frames": str(nf),
+                }]}).encode()
+            if kind in ("mp3", "aac-adts"):
+                return _json.dumps(
+                    {"streams": [{"codec_type": "audio"}]}
+                ).encode()
+            raise RuntimeError("ffprobe: unreadable input")
+        if kind == "mp4":  # probes as video, codec unsupported
+            raise RuntimeError("ffmpeg: decoder not found")
+        if argv == video_gray_argv(1):
+            return planes(bytes(data), 1)
+        if argv == video_gray_argv():
+            return planes(bytes(data), nf)
+        if argv == audio_pcm_argv():
+            return bytes([10, 0, 250, 0] * 4)  # 8 s16le samples
+        raise AssertionError(f"unexpected argv from the seam: {argv}")
+
+    return fake_run
+
+
+def test_ffmpeg_seam_features_end_to_end(spark):
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+        ffmpeg_feature_decoder,
+    )
+
+    df = spark.createDataFrame(
+        [(1, H264), (2, MP3), (3, AAC), (4, GARBAGE), (5, MP4)],
+        "media_id long, media binary",
+    )
+    out = {r.media_id: r for r in extract_media_features(
+        df, decoder=ffmpeg_feature_decoder(run=_make_fake_run())
+    ).collect()}
+    assert len(out) == 5 and all(
+        len(r.content_hash) == 32 for r in out.values()
+    )
+    v = out[1]  # the video row: probed dims + one decoded gray plane
+    assert (v.width, v.height, v.n_frames) == (_W, _H, _NF)
+    assert len(v.feature) == 8
+    exp = [b / 255.0 for b in _planes(H264, 1)]  # chunk size 1 at 8 B
+    assert all(abs(a - e) < 1e-6 for a, e in zip(v.feature, exp))
+    for mid in (2, 3):  # audio rows: no dims, PCM-derived feature
+        a = out[mid]
+        assert a.width is None and a.height is None
+        assert len(a.feature) == 8
+    g = out[4]  # unprobeable row: nulls, never a task failure
+    assert g.width is None and g.feature is None
+    assert g.n_bytes == len(GARBAGE)
+    m = out[5]  # probes as video but decode fails: FULLY null — the
+    # probe-derived dims must not survive as a false success signal
+    assert (m.width, m.height, m.n_frames, m.feature) == (
+        None, None, None, None
+    )
+
+
+def test_ffmpeg_seam_frame_sampling_end_to_end(spark):
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.multimodal import (
+        sample_frames,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+        ffmpeg_frame_sampler,
+    )
+
+    df = spark.createDataFrame(
+        [(1, H264), (2, MP3)], "media_id long, media binary"
+    )
+    rows = sample_frames(
+        df, max_frames=2,
+        frame_sampler=ffmpeg_frame_sampler(run=_make_fake_run()),
+    ).collect()
+    # audio row yields nothing; video: 3 frames, stride ceil(3/2)=2
+    assert {r.media_id for r in rows} == {1}
+    assert [r.frame_index for r in sorted(rows, key=lambda r: r.frame_index)] == [0, 2]
+    assert all(r.n_frames == _NF for r in rows)
+    import hashlib as _hl
+
+    planes = _planes(H264, _NF)
+    assert sorted(r.frame_hash for r in rows) == sorted(
+        _hl.md5(planes[i * _PLANE:(i + 1) * _PLANE]).hexdigest()
+        for i in (0, 2)
+    )
+
+
+def test_ffmpeg_seam_empty_decode_is_failure(spark):
+    """ffmpeg can exit 0 with ZERO output bytes (0 frames / 0 PCM
+    samples); the contract says a failed decode carries NULL for all
+    four columns — probe-derived dims must not survive beside a NULL
+    feature (r12 advisor finding)."""
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+        PROBE_ARGV,
+        ffmpeg_feature_decoder,
+    )
+
+    w, h, nf = _W, _H, _NF
+
+    def empty_run(argv, data):
+        import json as _json
+
+        from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+            sniff_compressed_media as sniff,
+        )
+        if argv == PROBE_ARGV:
+            kind = sniff(bytes(data))
+            if kind == "h264-annexb":
+                return _json.dumps({"streams": [{
+                    "codec_type": "video", "width": w, "height": h,
+                    "nb_frames": str(nf),
+                }]}).encode()
+            return _json.dumps(
+                {"streams": [{"codec_type": "audio"}]}
+            ).encode()
+        return b""  # decode "succeeds" but emits nothing
+
+    df = spark.createDataFrame(
+        [(1, H264), (2, MP3)], "media_id long, media binary"
+    )
+    out = {r.media_id: r for r in extract_media_features(
+        df, decoder=ffmpeg_feature_decoder(run=empty_run)
+    ).collect()}
+    for mid in (1, 2):
+        r = out[mid]
+        assert (r.width, r.height, r.n_frames, r.feature) == (
+            None, None, None, None
+        ), r
+        assert r.n_bytes > 0 and len(r.content_hash) == 32
+
+
+def test_sniff_compressed_media():
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+        sniff_compressed_media,
+    )
+
+    ftyp = (16).to_bytes(4, "big") + b"ftypisom" + bytes(4)
+    assert sniff_compressed_media(H264) == "h264-annexb"
+    assert sniff_compressed_media(b"\x00\x00\x01\x67x") == "h264-annexb"
+    assert sniff_compressed_media(MP3) == "mp3"
+    assert sniff_compressed_media(b"\xff\xfb\x90\x00") == "mp3"
+    assert sniff_compressed_media(AAC) == "aac-adts"
+    assert sniff_compressed_media(ftyp) == "mp4"
+    assert sniff_compressed_media(GARBAGE) == "unknown"
+    assert sniff_compressed_media(b"") == "unknown"
+
+
+def _which_ffmpeg():
+    import shutil
+    return (shutil.which("ffmpeg") is not None
+            and shutil.which("ffprobe") is not None)
+
+
+@pytest.mark.skipif(
+    not _which_ffmpeg(),
+    reason="ffmpeg/ffprobe not on PATH — the seam's real-binary leg "
+    "runs where they exist; the fake-runner tests pin the contract "
+    "here",
+)
+def test_ffmpeg_seam_real_binary_leg(spark):
+    """The argv contract proven against ACTUAL ffmpeg output (r12
+    verdict #5): media fixtures are synthesized by ffmpeg itself
+    (lavfi test sources), so no binary fixtures enter the repo and
+    the encode→sniff→probe→decode loop is closed end-to-end."""
+    import subprocess
+
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+        ffmpeg_feature_decoder,
+        ffmpeg_frame_sampler,
+        sniff_compressed_media,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.multimodal import (
+        sample_frames,
+    )
+
+    def gen(argv):
+        try:
+            return subprocess.run(
+                argv, stdout=subprocess.PIPE,
+                stderr=subprocess.DEVNULL, check=True,
+            ).stdout
+        except subprocess.CalledProcessError:
+            pytest.skip(f"this ffmpeg build lacks an encoder: {argv}")
+
+    h264 = gen(["ffmpeg", "-v", "error", "-f", "lavfi", "-i",
+                "testsrc=duration=0.3:size=64x48:rate=10",
+                "-c:v", "libx264", "-f", "h264", "pipe:1"])
+    aac = gen(["ffmpeg", "-v", "error", "-f", "lavfi", "-i",
+               "sine=frequency=440:duration=0.3",
+               "-c:a", "aac", "-f", "adts", "pipe:1"])
+    assert sniff_compressed_media(h264) == "h264-annexb"
+    assert sniff_compressed_media(aac) == "aac-adts"
+
+    df = spark.createDataFrame(
+        [(1, h264), (2, aac), (3, GARBAGE)],
+        "media_id long, media binary",
+    )
+    out = {r.media_id: r for r in extract_media_features(
+        df, decoder=ffmpeg_feature_decoder()  # the REAL runner
+    ).collect()}
+    v = out[1]
+    assert (v.width, v.height) == (64, 48)
+    assert v.n_frames is not None and v.n_frames >= 1
+    assert len(v.feature) == 8
+    assert all(0.0 <= x <= 1.0 for x in v.feature)
+    a = out[2]
+    assert a.width is None and a.height is None
+    assert len(a.feature) == 8
+    g = out[3]
+    assert (g.width, g.height, g.n_frames, g.feature) == (
+        None, None, None, None
+    )
+
+    frames = sample_frames(
+        df, max_frames=2, frame_sampler=ffmpeg_frame_sampler()
+    ).collect()
+    assert {r.media_id for r in frames} == {1}
+    assert 1 <= len(frames) <= 2
+    assert all(len(r.frame_hash) == 32 and r.n_frames >= 1
+               for r in frames)
+
+
 def test_codec_gate_messages_pinned():
     """The three documented environment gates raise with the exact
-    guidance a user needs."""
+    guidance a user needs; the seam's own no-binary gate matches."""
+    import shutil
+
     from data_pipeline_project_using_telegram_and_aws_spark.operators.multimodal import (
         resize_media,
         sample_frames,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.ffmpeg_seam import (
+        _default_run,
     )
 
     batch = pd.DataFrame({"media_id": [1], "media": [b"xx"]})
@@ -179,3 +449,7 @@ def test_codec_gate_messages_pinned():
     with pytest.raises(NotImplementedError,
                        match="image resize requires PIL/OpenCV"):
         resize_media(None, 2, 2, fake=False)
+    if shutil.which("ffmpeg") is None:  # this container: gate pinned
+        with pytest.raises(NotImplementedError,
+                           match="ffmpeg is not available"):
+            _default_run(["ffmpeg", "-v", "error"], b"")

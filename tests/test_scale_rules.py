@@ -9,6 +9,7 @@ from data_pipeline_project_using_telegram_and_aws_spark.functions.scale_rules im
     ivf_n_centroids,
     ivf_sample_n,
     packing_n_shards,
+    skew_n_salts,
 )
 
 
@@ -29,6 +30,12 @@ def test_packing_rule_keeps_docs_per_shard_constant():
     assert packing_n_shards(100) == 8                  # lo clamp
     # 100 TB regime: 10^10 docs -> ~38k shards, inside the clamp
     assert 30_000 < packing_n_shards(10**10) < 50_000
+
+
+def test_skew_rule_matches_cost_model():
+    assert skew_n_salts(8_000_000) == 8
+    assert skew_n_salts(10) == 2                       # lo clamp
+    assert skew_n_salts(10**12) == 1024                # hi clamp
 
 
 def test_pack_sequences_derives_shards_from_rule(spark):

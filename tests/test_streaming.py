@@ -294,9 +294,12 @@ def test_dedup_within_watermark_bounds_state(spark, tmp_path):
 
 
 def test_pipeline_projections_compose_on_streams(spark, tmp_path):
-    """Pure-projection pipeline operators (split assignment) apply to a
-    stream unchanged — one code path for batch and streaming ingest, no
-    operator rewrite."""
+    """Pure-projection pipeline operators (PII redaction, split
+    assignment) apply to a stream unchanged — one code path for batch
+    and streaming ingest, no operator rewrite."""
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.redaction import (
+        redact_pii,
+    )
     from data_pipeline_project_using_telegram_and_aws_spark.operators.splits import (
         assign_split,
     )
@@ -311,11 +314,14 @@ def test_pipeline_projections_compose_on_streams(spark, tmp_path):
         ],
     )
     stream = spark.readStream.schema(EVENTS_SCHEMA).json(landing)
-    piped = assign_split(stream, {"train": 0.9, "holdout": 0.1})
+    piped = assign_split(
+        redact_pii(stream), {"train": 0.9, "holdout": 0.1}
+    )
     out = str(tmp_path / "out")
     _drain(piped, out, str(tmp_path / "ckpt"))
     rows = {r.doc_id: r for r in spark.read.parquet(out).collect()}
-    assert sorted(rows) == [1, 2]
+    assert "[EMAIL]" in rows[1].text_redacted and rows[1].n_email == 1
+    assert rows[2].text_redacted == rows[2].text
     assert all(r.split in ("train", "holdout") for r in rows.values())
 
 

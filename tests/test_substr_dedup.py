@@ -215,7 +215,7 @@ def test_gram_hash_contract(spark):
 
 def test_gram_index_hash_version_stamp(spark, tmp_path):
     """r14 (ADVICE r13): a persisted gram index is stamped with the
-    hash-recipe version at build time, and the probe path fails
+    hash-recipe version at build time, and the probe/append paths fail
     LOUDLY on a missing or mismatched stamp — an index built under a
     different recipe silently matches nothing (duplicates admitted, no
     error), which is exactly the failure the stamp exists to surface."""
@@ -224,6 +224,7 @@ def test_gram_index_hash_version_stamp(spark, tmp_path):
     from data_pipeline_project_using_telegram_and_aws_spark.operators.substr_dedup import (
         GRAM_HASH_VERSION,
         _GRAM_HASH_PROP,
+        append_to_gram_index,
         build_gram_index,
         exact_substr_against_index,
     )
@@ -244,9 +245,10 @@ def test_gram_index_hash_version_stamp(spark, tmp_path):
     batch = spark.createDataFrame(
         [(3, "abcdefghijyyyyyyyyyy")], "doc_id long, text string"
     )
-    # stamped index: the probe runs normally
+    # stamped index: probe and append run normally
     cleaned, _, _ = exact_substr_against_index(spark, batch, table, k=8)
     assert cleaned.count() == 1
+    append_to_gram_index(spark, batch, table, k=8, batch_id=7)
 
     # simulate an index persisted under a different/older recipe
     spark.sql(
@@ -255,6 +257,8 @@ def test_gram_index_hash_version_stamp(spark, tmp_path):
     )
     with pytest.raises(Exception, match="gram-hash version"):
         exact_substr_against_index(spark, batch, table, k=8)
+    with pytest.raises(Exception, match="gram-hash version"):
+        append_to_gram_index(spark, batch, table, k=8, batch_id=8)
     # pre-versioning index (no stamp at all) is refused too
     spark.sql(
         f"ALTER TABLE {table} UNSET TBLPROPERTIES ('{_GRAM_HASH_PROP}')"

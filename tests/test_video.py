@@ -481,6 +481,10 @@ def test_avi_12bit_mjpeg_rejects_loudly_not_mod256():
 
 
 def test_y4m_high_bit_depth_colorspace_named_unsupported():
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.video import (
+        frames_decodable,
+    )
+
     raw = _y4m_bytes(
         [(np.full((2, 2), 80), np.full((1, 1), 128),
           np.full((1, 1), 128))], 2, 2,
@@ -490,11 +494,16 @@ def test_y4m_high_bit_depth_colorspace_named_unsupported():
         decode_y4m(raw)
     with pytest.raises(ValueError, match="colorspace C420p10"):
         probe_y4m(raw)
+    assert not frames_decodable(raw)
 
 
-def test_avi_decode_follows_the_first_vids_stream():
+def test_frames_decodable_mirrors_first_vids_stream():
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.video import (
+        frames_decodable,
+    )
+
     # first vids stream XVID, even with an MJPG-handler audio strl:
-    # decode_avi_frames refuses by the first vids stream's codec
+    # the flag must say False because decode_avi_frames will refuse
     strl_v = _lst(
         b"strl",
         _strh(b"vids", b"XVID", 1, 25, 1)
@@ -509,5 +518,12 @@ def test_avi_decode_follows_the_first_vids_stream():
     raw = (
         b"RIFF" + (len(body) + 4).to_bytes(4, "little") + b"AVI " + body
     )
+    assert not frames_decodable(raw)
     with pytest.raises(ValueError, match="XVID"):
         decode_avi_frames(raw)
+    # and a genuinely decodable DIB stream says True
+    ok = _avi_bytes(
+        [_dib_frame(np.zeros((2, 2, 3), np.uint8))], 2, 2, b"\x00" * 4
+    )
+    assert frames_decodable(ok)
+    assert not frames_decodable(b"not a container")

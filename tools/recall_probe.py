@@ -7,6 +7,8 @@ speed, measured, not asserted:
 
 - IVF (ss5's path): recall@k vs nprobe, the classic dial — each probed
   centroid list adds candidates and cost;
+- quantized brute force: recall@k of int8-reconstructed vectors (the 4×
+  payload cut — tests pin ≥0.9, this prints the actual number);
 - banded hyperplane LSH (ss3's path): candidate-pair recall vs the true
   top cosine pairs at the bench geometry.
 
@@ -24,6 +26,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from data_pipeline_project_using_telegram_and_aws_spark.operators.quantization import (
+    dequantize,
+    quantize_embeddings,
+)
 from data_pipeline_project_using_telegram_and_aws_spark.operators.similarity import (
     brute_force_topk,
     build_ivf_index,
@@ -51,6 +57,9 @@ def _recall(approx: dict, exact: dict) -> float:
 
 
 def main() -> None:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("recall-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -79,6 +88,17 @@ def main() -> None:
             "scanned_fraction": round(nprobe / n_cents, 4),
             "recall": _recall(approx, exact),
         }))
+
+    recon = quantize_embeddings(emb).select(
+        "vec_id", dequantize("qvec", "q_min", "q_scale").alias("embedding")
+    ).localCheckpoint(eager=True)
+    approx = _topk_sets(
+        brute_force_topk(recon, recon.filter(F.col("vec_id") < N_QUERIES), k=K)
+    )
+    print(json.dumps({
+        "experiment": "int8_bruteforce", "k": K,
+        "recall": _recall(approx, exact),
+    }))
 
     # LSH pair recall IN ITS TARGET REGIME: banded hyperplane LSH is a
     # near-dup detector — per-band collision probability is

@@ -68,6 +68,17 @@ def _extension_plans(spark, sf_dir):
     up as a diff + nonzero exit exactly like a registered query."""
     from pyspark.sql import functions as F
 
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.dialogs import (
+        assemble_dialogs,
+        render_dialogs_with_spans,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.embedding_drift import (
+        embedding_drift_report,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.evaluation import (
+        agreement_report,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.funnel import funnel
     from data_pipeline_project_using_telegram_and_aws_spark.operators.decontamination import (
         scrub_contaminated_spans,
         semantic_contamination_report,
@@ -76,11 +87,58 @@ def _extension_plans(spark, sf_dir):
         affected_shards,
         pack_sequences,
     )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.privacy import (
+        enforce_k_anonymity,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.sft import (
+        explode_loss_segments,
+        reassemble_sft_records,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.dsir import (
+        dsir_importance,
+        dsir_log_ratios,
+        dsir_select,
+        hashed_ngram_profile,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.hybrid import (
+        mmr_rerank,
+        rrf_fuse,
+    )
     from data_pipeline_project_using_telegram_and_aws_spark.sources.tables import load_table
 
+    events = load_table(spark, sf_dir, "events")
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
+    etypes = [
+        r["event_type"]
+        for r in events.select("event_type").distinct().limit(3).collect()
+    ]
+    dialogs = assemble_dialogs(
+        events, gap_seconds=1800, turn_cols=["event_type", "value"]
+    )
+    rendered = render_dialogs_with_spans(
+        dialogs, text_col="value", loss_roles=etypes[:1]
+    )
+    segs = explode_loss_segments(rendered, loss_roles=etypes[:1])
+    seg_tokens = segs.withColumn(
+        "token_ids",
+        F.filter(F.split("seg_text", r"\s+"), lambda p: p != ""),
+    )
     return {
+        "ext_funnel": funnel(events, etypes),
+        "ext_dialog_assembly": dialogs,
+        "ext_sft_records": reassemble_sft_records(seg_tokens),
+        "ext_embedding_drift": embedding_drift_report(
+            emb.filter(F.col("vec_id") % 2 == 0),
+            emb.filter(F.col("vec_id") % 2 == 1),
+            by=["label"],
+        ),
+        "ext_k_anonymity": enforce_k_anonymity(
+            docs, ["lang", "source"], k=5
+        ),
+        "ext_agreement": agreement_report(
+            docs, "lang", "source", by="source"
+        ),
         # corpus side streams past the broadcast eval suite — the
         # BroadcastNestedLoopJoin here is the designed shape (eval is
         # MB-scale by nature), NOT an unbounded cartesian
@@ -104,6 +162,17 @@ def _extension_plans(spark, sf_dir):
         "ext_domain_report": _domain_report_plan(spark, docs),
         "ext_html_extract": _html_extract_plan(spark, docs),
         "ext_feed_entries": _feed_entries_plan(spark, docs),
+        **_hybrid_and_dsir_plans(
+            F,
+            docs,
+            emb,
+            rrf_fuse,
+            mmr_rerank,
+            hashed_ngram_profile,
+            dsir_log_ratios,
+            dsir_importance,
+            dsir_select,
+        ),
     }
 
 
@@ -211,6 +280,90 @@ def _video_metadata_plan(spark):
     return extract_video_metadata(df)
 
 
+def _hybrid_and_dsir_plans(
+    F,
+    docs,
+    emb,
+    rrf_fuse,
+    mmr_rerank,
+    hashed_ngram_profile,
+    dsir_log_ratios,
+    dsir_importance,
+    dsir_select,
+):
+    from pyspark.sql import Window
+
+    # two per-language ranked lists (the plan shape retrieval heads
+    # emit) fused by RRF; MMR over per-label embedding candidates
+    w1 = Window.partitionBy("lang").orderBy(
+        F.desc(F.length("text")), F.asc("doc_id")
+    )
+    w2 = Window.partitionBy("lang").orderBy(F.asc("doc_id"))
+    lists = [
+        docs.select(
+            F.col("lang").alias("query_id"),
+            "doc_id",
+            F.row_number().over(w).alias("rank"),
+        ).filter(F.col("rank") <= 20)
+        for w in (w1, w2)
+    ]
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.evaluation import (
+        distinct_ngram_report,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.retrieval_metrics import (
+        retrieval_metrics,
+    )
+
+    cands = emb.select(
+        F.col("label").alias("query_id"),
+        F.col("vec_id").alias("doc_id"),
+        (F.col("vec_id") % 100 / 100.0).alias("score"),
+        "embedding",
+    )
+    qrels = docs.select(
+        F.col("lang").alias("query_id"), "doc_id"
+    ).limit(200)
+    ratios = dsir_log_ratios(
+        hashed_ngram_profile(docs.limit(50)), hashed_ngram_profile(docs)
+    )
+    scored = dsir_importance(docs, ratios)
+    return {
+        "ext_rrf_fusion": rrf_fuse(lists, top=10),
+        "ext_mmr_rerank": mmr_rerank(cands, select_k=5),
+        "ext_dsir_importance": scored,
+        "ext_dsir_select": dsir_select(scored, n=100),
+        "ext_retrieval_metrics": retrieval_metrics(
+            lists[0], qrels, k=10
+        ),
+        "ext_distinct_ngrams": distinct_ngram_report(
+            docs, ns=(1, 2), by=["lang"]
+        ),
+        "ext_ks_drift": _ks_plan(F, docs),
+    }
+
+
+def _ks_plan(F, docs):
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.drift import (
+        ks_from_quantile_ledgers,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.quantile_sketch import (
+        quantile_ledger,
+    )
+
+    halves = [
+        quantile_ledger(
+            docs.filter(F.col("doc_id") % 2 == i).withColumn(
+                "len", F.length("text").cast("double")
+            ),
+            "len",
+            "doc_id",
+            by=["lang"],
+        )
+        for i in (0, 1)
+    ]
+    return ks_from_quantile_ledgers(halves[0], halves[1], by=["lang"])
+
+
 def lint_plan(plan: str) -> list[str]:
     finds = []
     if "CartesianProduct" in plan:
@@ -238,6 +391,9 @@ def lint_plan(plan: str) -> list[str]:
 
 
 def main() -> int:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return 0
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     write = "--write" in sys.argv
 
@@ -267,9 +423,10 @@ def main() -> int:
         "windows, and interior global sorts across all "
         f"{len(entry.queries())} registered queries PLUS "
         f"{len(plans) - len(entry.queries())} extension-surface plans "
-        "(ext_*: semantic decontamination, erasure blast radius, "
-        "contaminated-span scrub, image quality, video metadata, "
-        "domain report, HTML extraction, feed entries); every finding "
+        "(ext_*: funnel, dialog/SFT assembly, embedding drift, "
+        "k-anonymity, agreement, semantic "
+        "decontamination, erasure blast radius, RRF fusion, MMR "
+        "rerank, DSIR scoring+selection, feed entries); every finding "
         "needs a bounded-operand justification in tools/scale_lint.py.",
         "",
         "| query | finding | justification |",

@@ -518,6 +518,135 @@ def probe_dot_shapes(spark, n_pairs: int, dims: int = 64) -> dict:
     }
 
 
+def _synth_warc_dir(tmp_dir: str, n_records: int, per_file: int = 20) -> None:
+    """Deterministic synthetic crawl landing dir: ``n_records`` HTTP
+    responses across ``n_records/per_file`` .warc.gz files (the
+    real-world parallelism unit). Pages are ~8 KB of entity-rich,
+    anchor-mixed HTML so the probe exercises the three JVM stages the
+    front door is made of (entity decode, tag strip, anchor-density
+    gate); every 10th record is a 404 and every 13th a PNG stub so the
+    zone split does real routing work."""
+    import os
+
+    from data_pipeline_project_using_telegram_and_aws_spark.sources.warc import (
+        write_warc_responses,
+    )
+
+    def page(i: int) -> bytes:
+        paras = []
+        for p in range(8):
+            words = " ".join(
+                f"word{(i * 31 + p * 7 + w) % 997}" for w in range(60)
+            )
+            ent = (
+                "&amp; &mdash; &eacute; &#8220;q&#8221; &copy;"
+                if (p + i) % 2
+                else "&lt;tag&gt; &nbsp; &Delta;&delta; &#x1F680;"
+            )
+            paras.append(f"<p>{words} {ent}</p>")
+        nav = "".join(
+            f'<li><a href="/s/{i}/{k}">Section {k} of page {i}</a></li>'
+            for k in range(12)
+        )
+        return (
+            f"<html lang=en><head><title>Page {i} &amp; friends</title>"
+            f'<meta name=description content="synthetic page {i}">'
+            f"</head><body><nav><ul>{nav}</ul></nav>"
+            + "".join(paras)
+            + f"<footer><a href='/about'>About</a></footer></body></html>"
+        ).encode()
+
+    rows = []
+    file_no = 0
+    for i in range(n_records):
+        if i % 10 == 9:
+            rows.append((f"http://probe/{i}", 404, "text/html",
+                         b"<p>gone</p>"))
+        elif i % 13 == 12:
+            rows.append((f"http://probe/{i}", 200, "image/png",
+                         b"\x89PNGstub" + bytes([i % 251]) * 64))
+        else:
+            rows.append((f"http://probe/{i}", 200,
+                         "text/html; charset=utf-8", page(i)))
+        if len(rows) == per_file:
+            write_warc_responses(
+                rows, os.path.join(tmp_dir, f"f{file_no:04d}.warc.gz")
+            )
+            rows, file_no = [], file_no + 1
+    if rows:
+        write_warc_responses(
+            rows, os.path.join(tmp_dir, f"f{file_no:04d}.warc.gz")
+        )
+
+
+def probe_crawl(spark, n_records: int) -> dict:
+    """The crawl front door at growing record counts: stage timings
+    for the WARC split (the one Python stage), +html_to_text (entity
+    decode dominates), +extract_main_text/metadata (anchor-density
+    HOFs), and the full three-zone streaming ingest with parquet
+    writes. Per-record work is row-local (no shuffle grows with n;
+    the only exchange is the zone writes' partitioning), so wall time
+    must scale ~linearly — the exponent this probe exists to watch."""
+    import shutil
+    import tempfile
+
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.html import (
+        extract_main_text,
+        html_metadata,
+        html_to_text,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.sources.warc import read_warc
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.crawl_ingest import (
+        start_crawl_ingest_stream,
+    )
+
+    root = tempfile.mkdtemp(prefix=f"crawlprobe_{n_records}_")
+    landing = f"{root}/landing"
+    import os
+
+    os.makedirs(landing)
+    _synth_warc_dir(landing, n_records)
+    glob = landing + "/*.warc.gz"
+
+    t0 = time.time()
+    n_rows = read_warc(spark, glob).count()
+    t_parse = time.time() - t0
+
+    pages = read_warc(spark, glob).filter(
+        (F.col("http_status") == 200)
+        & F.col("http_content_type").startswith("text/html")
+    ).select(F.col("payload").cast("string").alias("__html"))
+    t0 = time.time()
+    pages.select(html_to_text(F.col("__html")).alias("t")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    t_text = time.time() - t0
+
+    t0 = time.time()
+    extract_main_text(pages, html_col="__html").select(
+        "main_text", html_metadata(F.col("__html")).alias("m")
+    ).write.format("noop").mode("overwrite").save()
+    t_main = time.time() - t0
+
+    t0 = time.time()
+    start_crawl_ingest_stream(
+        spark, landing, f"{root}/good", f"{root}/other",
+        f"{root}/quar", f"{root}/ck",
+    ).awaitTermination(600)
+    t_full = time.time() - t0
+    n_good = spark.read.parquet(f"{root}/good").count()
+    shutil.rmtree(root)
+    return {
+        "n_records": n_records,
+        "warc_rows": n_rows,
+        "good_rows": n_good,
+        "parse_sec": round(t_parse, 2),
+        "text_sec": round(t_text, 2),
+        "main_meta_sec": round(t_main, 2),
+        "full_ingest_sec": round(t_full, 2),
+    }
+
+
 def probe_graph(spark, n_edges: int) -> dict:
     """The graph surface (links.py pagerank + components star) at
     growing edge counts: synthetic deterministic multigraph (hash-
@@ -683,6 +812,78 @@ def probe_substr(spark, n_docs: int) -> dict:
     }
 
 
+def probe_video(spark, n_rows: int) -> dict:
+    """The video surface at growing corpus sizes: per-stage wall
+    times for (a) the front door's probe-only triage (header walks,
+    no pixels) and (b) real Y4M frame decode + hashing through
+    `multimodal.sample_frames`. Both are single mapInPandas stages
+    with zero data-dependent shuffles — per-row work is constant
+    (fixed 6-frame 64x32 clips), so the exponent over n_rows is the
+    thing to watch (~1.0 expected; parallelism is rows-per-batch)."""
+    import numpy as np
+
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.multimodal import (
+        sample_frames,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.video import (
+        numpy_video_frame_sampler,
+    )
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.media_ingest import (
+        VIDEO_TRIAGE_DDL,
+        _probe_video_or_error,
+    )
+
+    w, h, n_frames = 64, 32, 6
+    head = f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 C420jpeg\x0a".encode()
+
+    def clip(i: int) -> bytearray:
+        rng = np.random.default_rng(i)
+        out = bytearray(head)
+        for _ in range(n_frames):
+            out += b"FRAME\x0a"
+            out += rng.integers(0, 256, w * h, dtype=np.uint8).tobytes()
+            out += rng.integers(
+                0, 256, (w // 2) * (h // 2) * 2, dtype=np.uint8
+            ).tobytes()
+        return out
+
+    df = spark.createDataFrame(
+        [(i, clip(i)) for i in range(n_rows)],
+        "media_id long, media binary",
+    ).repartition(32).localCheckpoint(eager=True)
+
+    def probe_stage():
+        return df.mapInPandas(
+            _probe_video_or_error, VIDEO_TRIAGE_DDL
+        ).filter("decode_error is null").count()
+
+    def decode_stage():
+        return sample_frames(
+            df, max_frames=3, frame_sampler=numpy_video_frame_sampler
+        ).count()
+
+    def timed_best2(fn) -> float:
+        best = None
+        for _ in range(2):
+            t0 = time.time()
+            fn()
+            dt = time.time() - t0
+            best = dt if best is None else min(best, dt)
+        return best
+
+    # warmup both Python-worker pools, then best-of-2 (same method as
+    # the other probe families: fixed overhead out of the exponent)
+    assert probe_stage() == n_rows
+    assert decode_stage() == 3 * n_rows
+    t_probe = timed_best2(probe_stage)
+    t_decode = timed_best2(decode_stage)
+    return {
+        "n_rows": n_rows,
+        "probe_s": round(t_probe, 3),
+        "decode_sample_s": round(t_decode, 3),
+    }
+
+
 def probe_documents(spark, n_rows: int) -> dict:
     """The document front door at growing corpus sizes: one
     mapInPandas stage (`documents.extract_documents`) over a mixed
@@ -818,6 +1019,9 @@ def probe_documents(spark, n_rows: int) -> dict:
 
 
 def main() -> None:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return
     if sys.argv[1:2] == ["--documents"]:
         sizes = [int(a) for a in sys.argv[2:]] or [1000, 3000, 10000]
         spark = get_spark("scale-probe")
@@ -826,6 +1030,13 @@ def main() -> None:
             print(json.dumps(
                 {"family": "documents", **probe_documents(spark, n)}
             ))
+        return
+    if sys.argv[1:2] == ["--video"]:
+        sizes = [int(a) for a in sys.argv[2:]] or [500, 1500, 5000]
+        spark = get_spark("scale-probe")
+        spark.sparkContext.setLogLevel("ERROR")
+        for n in sizes:
+            print(json.dumps({"family": "video", **probe_video(spark, n)}))
         return
     if sys.argv[1:2] == ["--substr"]:
         sizes = [int(a) for a in sys.argv[2:]] or [2000, 6000, 20000]
@@ -849,6 +1060,13 @@ def main() -> None:
             print(json.dumps(
                 {"family": "graph_skewed", **probe_graph_skewed(spark, n)}
             ))
+        return
+    if sys.argv[1:2] == ["--crawl"]:
+        sizes = [int(a) for a in sys.argv[2:]] or [200, 600, 2000]
+        spark = get_spark("scale-probe")
+        spark.sparkContext.setLogLevel("ERROR")
+        for n in sizes:
+            print(json.dumps({"family": "crawl", **probe_crawl(spark, n)}))
         return
     if sys.argv[1:2] == ["--heavy"]:
         from data_pipeline_project_using_telegram_and_aws_spark.functions.scale_rules import (

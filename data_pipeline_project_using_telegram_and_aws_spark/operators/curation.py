@@ -34,14 +34,10 @@ from . import dedup as D
 
 LEDGER_COLS = ["doc_id", "stage", "reason", "kept_alive"]
 
-# Measurement knobs for the two pipeline checkpoints (r14 optimization
-# probes — tools/ A/B scripts toggle these in one session; production
-# callers never touch them). Each lazy localCheckpoint pays a full
-# Catalyst analyze+optimize+physical-plan pass AT CALL TIME (toRdd), so
-# checkpoint count is a driver-side plan-build dial, traded against
-# subtree re-execution in the final plan.
-_CKPT_RANKED = True
-_CKPT_NEAR = True
+# The pipeline stages two frames with a lazy localCheckpoint each. Each
+# one pays a full Catalyst analyze+optimize+physical-plan pass AT CALL
+# TIME (toRdd), so checkpoint count is a driver-side plan-build cost,
+# traded against subtree re-execution in the final plan.
 
 
 def _tokens(col):
@@ -225,8 +221,7 @@ def curate_corpus(
     # re-runs the scan + hash + window (the 100 TB analog is staging the
     # ranked table to the lake between pipeline stages).
     ranked = hashed.withColumn("__rn", F.row_number().over(w))
-    if _CKPT_RANKED:
-        ranked = ranked.localCheckpoint(eager=False)
+    ranked = ranked.localCheckpoint(eager=False)
     null_flag = F.lit(None).cast("boolean").alias("kept_alive")
     ledgers.append(
         ranked.filter(F.col("__rn") > 1).select(
@@ -326,8 +321,7 @@ def curate_corpus(
     # heaviest stage and feeds three consumers (this ledger slice, the
     # quality branch's anti-join, the language branch's anti-join);
     # checkpointing its small output runs it exactly once.
-    if _CKPT_NEAR:
-        near_drops = near_drops.localCheckpoint(eager=False)
+    near_drops = near_drops.localCheckpoint(eager=False)
     ledgers.append(near_drops)
     survivors = survivors.join(
         near_drops.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"

@@ -29,17 +29,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# r14 measurement knob (tools A/B scripts toggle in one session): stage
-# the vocab-sized model frames (unigram counts, bigram counts) with one
-# lazy localCheckpoint each so their corpus explode+aggregate subtrees
-# run ONCE instead of once per consumer. The r13 lm2 plan dump shows the
-# corpus term-count subtree planned 4× and the bigram-count subtree 2×
-# with NO runtime exchange reuse (each copy prunes differently, so the
-# exchanges never canonicalize equal). Vocab-sized frames are exactly
-# what a 100 TB pipeline persists between passes; values are integer
-# counts (order-free).
-_CKPT_MODEL = True      # unigram/model frames
-_CKPT_MODEL_BI = True   # bigram count frame (c12)
+# The vocab-sized model frames (unigram counts, bigram counts) are staged
+# with one lazy localCheckpoint each so their corpus explode+aggregate
+# subtrees run ONCE instead of once per consumer. The r13 lm2 plan dump
+# shows the corpus term-count subtree planned 4× and the bigram-count
+# subtree 2× with NO runtime exchange reuse (each copy prunes
+# differently, so the exchanges never canonicalize equal). Vocab-sized
+# frames are exactly what a 100 TB pipeline persists between passes;
+# values are integer counts (order-free).
 
 
 def _tokens(text_col: str):
@@ -86,10 +83,9 @@ def unigram_cross_entropy(
     (the encode_documents row contract)."""
     model = unigram_model(ref_docs if ref_docs is not None else docs,
                           text_col, alpha)
-    if _CKPT_MODEL:
-        # two consumers (scoring join + the oov picker aggregate) —
-        # stage the vocab-sized model once (module-head note)
-        model = model.localCheckpoint(eager=False)
+    # two consumers (scoring join + the oov picker aggregate) —
+    # stage the vocab-sized model once (module-head note)
+    model = model.localCheckpoint(eager=False)
     toks = docs.select(
         F.col(id_col), F.explode(_tokens(text_col)).alias("token")
     )
@@ -173,10 +169,9 @@ def bigram_interpolated_cross_entropy(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("__nu"))
     )
-    if _CKPT_MODEL:
-        # three consumers (vocab_stats, first-token join, t2 join) —
-        # stage the vocab-sized count frame once (module-head note)
-        uni_counts = uni_counts.localCheckpoint(eager=False)
+    # three consumers (vocab_stats, first-token join, t2 join) —
+    # stage the vocab-sized count frame once (module-head note)
+    uni_counts = uni_counts.localCheckpoint(eager=False)
     # one row: (V, total) — attached everywhere via broadcast cross join
     vocab_stats = uni_counts.agg(
         F.count(F.lit(1)).cast("double").alias("__V"),
@@ -186,9 +181,8 @@ def bigram_interpolated_cross_entropy(
         "bg.t1", "bg.t2"
     )
     c12 = bi_ref.groupBy("t1", "t2").agg(F.count(F.lit(1)).alias("__n12"))
-    if _CKPT_MODEL_BI:
-        # two consumers (the scoring join and the c1 prefix rollup)
-        c12 = c12.localCheckpoint(eager=False)
+    # two consumers (the scoring join and the c1 prefix rollup)
+    c12 = c12.localCheckpoint(eager=False)
     c1 = c12.groupBy("t1").agg(F.sum("__n12").alias("__n1"))
 
     base = docs.select(F.col(id_col), toks.alias("__toks"))
@@ -297,15 +291,13 @@ def kneser_ney_cross_entropy(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("__nu"))
     )
-    if _CKPT_MODEL:
-        uni_counts = uni_counts.localCheckpoint(eager=False)
+    uni_counts = uni_counts.localCheckpoint(eager=False)
     bi_ref = ref.select(F.explode(_bigrams(toks)).alias("bg")).select(
         "bg.t1", "bg.t2"
     )
     c12 = bi_ref.groupBy("t1", "t2").agg(F.count(F.lit(1)).alias("__n12"))
-    if _CKPT_MODEL_BI:
-        # four consumers (scoring join, c1, cont, the B constant)
-        c12 = c12.localCheckpoint(eager=False)
+    # four consumers (scoring join, c1, cont, the B constant)
+    c12 = c12.localCheckpoint(eager=False)
     # per prefix: total count AND distinct continuation types
     c1 = c12.groupBy("t1").agg(
         F.sum("__n12").alias("__n1"),

@@ -9,11 +9,12 @@ module for ``__spark_entry__``.
 from __future__ import annotations
 
 from collections.abc import Callable
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def _plan_modules() -> tuple[ModuleType, ...]:
     from . import (
         crawl_queries,
         curation_queries,
@@ -31,34 +32,21 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registry order = driver check order (the driver verifies the first 50
     # entries): reference surface and the north-star extension families
     # first, the relational-breadth block last.
+    return (reference_queries, temporal_queries, dedup_queries,
+            curation_queries, pipeline_queries, similarity_queries,
+            text_queries, multimodal_queries, crawl_queries,
+            document_queries, starschema_queries)
+
+
+def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in (reference_queries, temporal_queries, dedup_queries,
-                curation_queries, pipeline_queries, similarity_queries,
-                text_queries, multimodal_queries, crawl_queries,
-                document_queries, starschema_queries):
+    for mod in _plan_modules():
         merged.update(mod.QUERIES)
     return merged
 
 
 def all_oracles() -> dict[str, str]:
-    from . import (
-        crawl_queries,
-        curation_queries,
-        dedup_queries,
-        document_queries,
-        multimodal_queries,
-        pipeline_queries,
-        reference_queries,
-        similarity_queries,
-        starschema_queries,
-        temporal_queries,
-        text_queries,
-    )
-
     merged: dict[str, str] = {}
-    for mod in (reference_queries, temporal_queries, dedup_queries,
-                curation_queries, pipeline_queries, similarity_queries,
-                text_queries, multimodal_queries, crawl_queries,
-                document_queries, starschema_queries):
+    for mod in _plan_modules():
         merged.update(mod.ORACLE)
     return merged

@@ -4,7 +4,9 @@ Raw zone: the Telegram ``update`` document exactly as the webhook delivers
 it (reference ipynb:322, cell 21 reads ``event["body"]`` and persists it
 verbatim, ipynb:328-330). We declare the envelope as a nested ``StructType``
 — permissive parsing keeps unknown extra fields out of the result (the
-reference's ``parse_data`` whitelist, ipynb:632-643, drops them too).
+reference's ``parse_data`` whitelist, ipynb:632-643, drops them too). A
+body that does not parse is kept verbatim in the ``malformed_payload``
+column of its raw row (``RAW_ZONE_SCHEMA``).
 
 Enriched zone: the fixed 8-column relational schema declared in the Athena
 DDL (ipynb:732-750) — see SURVEY.md §1.3 for the column-by-column mapping.
@@ -46,6 +48,17 @@ RAW_UPDATE_SCHEMA = T.StructType(
         T.StructField("update_id", T.LongType()),
         T.StructField("message", RAW_MESSAGE_SCHEMA),
     ]
+)
+
+# A raw-zone row: the update, plus the verbatim body of a webhook line
+# that did not parse (PERMISSIVE parsing rescues it into this column; it
+# is NULL on every parsed update). The column must not be named
+# ``_corrupt_record``: a declared field with Spark's default
+# corrupt-record name reads back as NULL from the files the stream wrote.
+MALFORMED_COL = "malformed_payload"
+
+RAW_ZONE_SCHEMA = T.StructType(
+    [*RAW_UPDATE_SCHEMA.fields, T.StructField(MALFORMED_COL, T.StringType())]
 )
 
 # --- enriched zone: Athena DDL schema (ipynb:732-742) ---------------------

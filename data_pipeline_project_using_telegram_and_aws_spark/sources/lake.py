@@ -44,8 +44,9 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
-from ..schemas import ENRICHED_SCHEMA, RAW_UPDATE_SCHEMA
+from ..schemas import ENRICHED_SCHEMA, RAW_ZONE_SCHEMA
 
 # The reference pins the pipeline clock to UTC-3 (ipynb:310:
 # ``timezone(offset=timedelta(hours=-3))``): partition values are the
@@ -105,50 +106,18 @@ class TelegramLake:
 
     # --- raw zone ---------------------------------------------------------
 
-    def write_raw(self, updates: DataFrame, ingest_batch: int | None = None) -> None:
-        """Write updates into the raw zone, partitioned by arrival date.
-
-        ``context_date`` is *processing time on the pipeline's UTC-3
-        clock* (reference ipynb:310-311: the partition key is arrival date
-        in ``timezone(-3h)``, event time is preserved separately in
-        ``message.date`` — the two-timeline model, SURVEY §2.9 ST3).
-
-        ``ingest_batch`` (a streaming micro-batch id) makes the write
-        **replay-idempotent** for foreachBatch sinks: rows land under
-        ``context_date={d}/ingest_batch={n}/`` and the dynamic-overwrite
-        mode rewrites exactly the replayed batch's partitions — a
-        re-delivered micro-batch cannot duplicate rows. (Spark's plain
-        file sink gets this from its commit log; foreachBatch does not,
-        so it must encode the batch id in the layout.) A raw root is
-        owned by one mode: the two layouts differ in directory depth and
-        must not be mixed under one prefix.
-        """
-        stamped = updates.withColumn(
-            "context_date",
-            arrival_date(F.current_timestamp(), self.ingest_tz),
-        )
-        if ingest_batch is None:
-            stamped.write.mode("append").partitionBy("context_date").json(
-                self.raw_path
-            )
-        else:
-            (
-                stamped.withColumn("ingest_batch", F.lit(int(ingest_batch)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("context_date", "ingest_batch")
-                .json(self.raw_path)
-            )
-
     def read_raw(self, spark: SparkSession, context_date: dt.date | str | None = None) -> DataFrame:
-        """Read the raw zone; a date filter prunes to one partition
-        (the S3-prefix listing at ipynb:572, done by Catalyst here)."""
-        from pyspark.sql import types as T
-
-        # fresh StructType each call — StructType.add mutates in place
+        """Read the raw zone as the ingest stream wrote it: every row,
+        with ``context_date`` (arrival date on the pipeline's UTC-3
+        clock, reference ipynb:310-311; event time stays in
+        ``message.date``) and ``malformed_payload``, the verbatim body
+        of a webhook line that did not parse (NULL on parsed updates).
+        It is the audit and replay view of the ingress; the daily ETL
+        keeps only the parsed rows. A date filter prunes to one
+        partition (the S3-prefix listing at ipynb:572, done by Catalyst
+        here)."""
         schema = T.StructType(
-            list(RAW_UPDATE_SCHEMA.fields)
-            + [T.StructField("context_date", T.DateType())]
+            [*RAW_ZONE_SCHEMA.fields, T.StructField("context_date", T.DateType())]
         )
         df = spark.read.schema(schema).json(self.raw_path)
         if context_date is not None:

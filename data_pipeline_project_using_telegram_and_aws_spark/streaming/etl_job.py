@@ -6,8 +6,11 @@ update with ``parse_data`` and compacts one day of small JSON files into a
 single Parquet file in the enriched zone.
 
 Spark shape (SURVEY.md §3.2): one declarative query —
-partition-pruned JSON read → flatten select → compaction repartition →
-dynamic-partition-overwrite Parquet write — that scans the raw day once.
+partition-pruned JSON read → parsed-rows filter → flatten select →
+compaction repartition → dynamic-partition-overwrite Parquet write — that
+scans the raw day once. Raw rows that hold a rescued malformed body
+(``malformed_payload``, see ``streaming/ingest.py``) stay in the raw zone
+for audit and replay and never reach the enriched table.
 The write is the only Spark action: there is no emptiness probe before
 it, and the row count comes from the footers of the files it wrote.
 Parallelism, spill, and retry come from the engine; re-runs are
@@ -25,6 +28,7 @@ from pyspark.sql import SparkSession, functions as F
 _log = logging.getLogger(__name__)
 
 from ..operators.flatten import flatten_updates
+from ..schemas import MALFORMED_COL
 from ..sources.lake import TelegramLake
 
 
@@ -37,7 +41,9 @@ def run_daily_etl(
 ) -> int:
     """Process one day (default: D-1 on the pipeline's UTC-3 clock, the
     reference's cadence — ipynb:562) from the raw zone into the enriched
-    zone. Returns the number of rows written.
+    zone. Only parsed updates are flattened: a raw row whose
+    ``malformed_payload`` holds a rescued webhook body is left out.
+    Returns the number of rows written.
 
     ``overwrite_on_empty``: when the incoming batch flattens to zero
     rows AND a previously-written partition exists for the day, the
@@ -50,7 +56,8 @@ def run_daily_etl(
         context_date = lake.today() - dt.timedelta(days=1)
 
     raw = lake.read_raw(spark, context_date=context_date)
-    flat = flatten_updates(raw).withColumn(
+    parsed = raw.filter(F.col(MALFORMED_COL).isNull())
+    flat = flatten_updates(parsed).withColumn(
         "context_date", F.lit(str(context_date)).cast("date")
     )
     partition_dir = f"{lake.enriched_path}/context_date={context_date}"

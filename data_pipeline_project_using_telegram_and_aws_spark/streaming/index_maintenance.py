@@ -4,11 +4,10 @@ writes.
 
 ``similarity.append_ivf_assignments`` is the batch primitive, but a
 plain bucketed append is NOT safe under foreachBatch's at-least-once
-delivery: a re-delivered micro-batch would append its rows twice. The
-same layout trick that makes the raw lake replay-safe
-(``lake.write_raw``: encode the batch id in the partition layout and
-dynamic-overwrite it) works for the index because Spark tables can be
-partitioned AND bucketed at once:
+delivery: a re-delivered micro-batch would append its rows twice.
+Encoding the batch id in the partition layout and dynamic-overwriting
+it makes the writes replay-safe, and it works for the index because
+Spark tables can be partitioned AND bucketed at once:
 
     PARTITIONED BY (ingest_batch)  ← replay unit: re-delivery rewrites
                                       exactly its own partition

@@ -9,44 +9,31 @@ date (ipynb:330).
 Spark shape: a Structured Streaming file source watches a landing
 directory (the webhook stand-in; Kafka/Kinesis in prod — same plan with a
 different ``format``), filters, stamps processing-time ``context_date``,
-and appends JSON partitioned by it. Checkpointing gives at-least-once with
-exactly-once file-sink semantics — an ST4 upgrade over the reference.
+and appends JSON partitioned by it. This is the pipeline's one ingest
+route. The file sink's commit log (``_spark_metadata``) gives it
+exactly-once output: a batch replayed after a lost checkpoint is skipped,
+not written twice — an ST4 upgrade over the reference.
 
 The two-timeline model (ST3) is preserved: ``context_date`` is processing
 time, the event-time epoch ``message.date`` rides along untouched, so
 "late" data lands in the arrival-day partition exactly like the reference.
 
 **Malformed payloads** (SURVEY §1.4 "permissive JSON parsing / rescue
-pattern"): by default a broken webhook body parses to an all-null row and
-is silently dropped by the chat filter — the reference's behavior (its
-Lambda 500s and Telegram retries). With ``quarantine_dir`` set, the
-stream captures every unparseable line verbatim (plus an arrival
-timestamp) into a quarantine area via ``foreachBatch``, so bad payloads
-are auditable and replayable instead of lost. foreachBatch delivery is
-at-least-once, so both of its outputs key their layout on the
-deterministic micro-batch id (``ingest_batch=`` partition + dynamic
-overwrite): a re-delivered batch rewrites its own partitions instead of
-appending duplicates — effective exactly-once for the two-output route.
+pattern"): the landing files are parsed PERMISSIVE, and a body that does
+not parse keeps its verbatim text in the ``malformed_payload`` column.
+That row passes the chat filter whatever chat it claims and lands in the
+raw zone beside the good updates, so a bad payload is auditable and
+replayable from ``TelegramLake.read_raw`` instead of lost; the daily ETL
+flattens only the rows whose ``malformed_payload`` is NULL.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..schemas import RAW_UPDATE_SCHEMA
+from ..schemas import MALFORMED_COL, RAW_ZONE_SCHEMA
 from ..sources.lake import TelegramLake, arrival_date
-
-CORRUPT_COL = "_corrupt_record"
-
-
-def _schema_with_corrupt() -> T.StructType:
-    # fresh StructType each call — StructType.add mutates in place
-    return T.StructType(
-        list(RAW_UPDATE_SCHEMA.fields)
-        + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
 
 
 def start_ingest_stream(
@@ -55,22 +42,19 @@ def start_ingest_stream(
     landing_dir: str,
     checkpoint_dir: str,
     available_now: bool = False,
-    quarantine_dir: str | None = None,
 ) -> StreamingQuery:
     """Start (or drain, with ``available_now``) the ingestion stream."""
-    if quarantine_dir is not None:
-        return _start_with_quarantine(
-            spark, lake, landing_dir, checkpoint_dir, available_now,
-            quarantine_dir,
-        )
     updates = (
-        spark.readStream.schema(RAW_UPDATE_SCHEMA)
+        spark.readStream.schema(RAW_ZONE_SCHEMA)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", MALFORMED_COL)
         .option("maxFilesPerTrigger", 1000)
         .json(landing_dir)
     )
     if lake.chat_id is not None:
         updates = updates.filter(
-            F.col("message.chat.id") == F.lit(lake.chat_id)
+            (F.col("message.chat.id") == F.lit(lake.chat_id))
+            | F.col(MALFORMED_COL).isNotNull()
         )
     # arrival date on the pipeline's UTC-3 clock (reference ipynb:310)
     stamped = updates.withColumn(
@@ -88,224 +72,3 @@ def start_ingest_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def _two_output_sink(lake: TelegramLake, quarantine_dir: str | None):
-    """The shared per-micro-batch split: good rows → raw zone,
-    unparseable lines → quarantine (verbatim + arrival timestamp) when
-    a quarantine_dir is given, else dropped (the reference behavior)."""
-
-    def sink(batch, batch_id: int) -> None:
-        # foreachBatch is at-least-once: after a failure the SAME batch id
-        # is re-delivered with the SAME rows. Both writes below key their
-        # layout on that id (ingest_batch= partition + dynamic overwrite),
-        # so a replay rewrites its own partitions instead of appending
-        # duplicates — upgrading the two-output route to effective
-        # exactly-once (the file sink's commit log gives the single-output
-        # route the same property).
-        batch = batch.cache()  # consumed twice (good + bad split)
-        try:
-            if quarantine_dir is not None:
-                bad = batch.filter(F.col(CORRUPT_COL).isNotNull()).select(
-                    F.col(CORRUPT_COL).alias("payload"),
-                    F.current_timestamp().alias("quarantined_at"),
-                    F.lit(batch_id).alias("ingest_batch"),
-                )
-                (
-                    bad.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_batch")
-                    .json(quarantine_dir)
-                )
-            good = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            if lake.chat_id is not None:
-                good = good.filter(
-                    F.col("message.chat.id") == F.lit(lake.chat_id)
-                )
-            lake.write_raw(good, ingest_batch=batch_id)
-        finally:
-            batch.unpersist()
-
-    return sink
-
-
-def _start_with_quarantine(
-    spark: SparkSession,
-    lake: TelegramLake,
-    landing_dir: str,
-    checkpoint_dir: str,
-    available_now: bool,
-    quarantine_dir: str,
-) -> StreamingQuery:
-    """Two-output ingest: good rows → raw zone, unparseable lines →
-    quarantine (verbatim + arrival timestamp), split per micro-batch."""
-    updates = (
-        spark.readStream.schema(_schema_with_corrupt())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("maxFilesPerTrigger", 1000)
-        .json(landing_dir)
-    )
-
-    writer = (
-        updates.writeStream.foreachBatch(
-            _two_output_sink(lake, quarantine_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-class PushSource:
-    """Rate-limited in-memory-queue push source — the PUSH-shaped
-    ingress the reference actually has (its webhook Lambda receives
-    HTTP POSTs one update at a time, ipynb cell 21) as a line server
-    Spark's ``socket`` streaming source connects to.
-
-    A webhook handler calls :meth:`push` with the raw request body
-    (one JSON document per call); a serving thread drains the queue to
-    every connected client at ≤ ``max_per_sec`` lines (the
-    rate-limiting a real webhook endpoint applies to protect the
-    stream). Stated limits, matching Spark's own socket source: NO
-    durability — lines accepted but not yet processed when the process
-    dies are lost, and the socket source keeps no offsets, so this is
-    the at-most-once front half of the pipeline; production uses
-    Kafka/Kinesis (SURVEY §2.1) and the landing-dir file source keeps
-    the exactly-once replay story. Everything downstream (PERMISSIVE
-    parse, quarantine split, chat filter, batch-keyed writes) is the
-    SAME code path as the file-source stream."""
-
-    def __init__(
-        self,
-        host: str = "127.0.0.1",
-        port: int = 0,
-        max_per_sec: float | None = None,
-    ) -> None:
-        import queue
-        import socket
-        import threading
-
-        self._q: "queue.Queue[str | None]" = queue.Queue()
-        self._clients: list = []
-        self._lock = threading.Lock()
-        self._closed = False
-        self._max_per_sec = max_per_sec
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(4)
-        self.host, self.port = self._srv.getsockname()
-        self._accept_t = threading.Thread(target=self._accept, daemon=True)
-        self._emit_t = threading.Thread(target=self._emit, daemon=True)
-        self._accept_t.start()
-        self._emit_t.start()
-
-    def _accept(self) -> None:
-        while not self._closed:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return  # listener closed
-            with self._lock:
-                self._clients.append(conn)
-
-    def _emit(self) -> None:
-        import time
-
-        while True:
-            line = self._q.get()
-            if line is None:
-                return
-            data = (line.rstrip("\n") + "\n").encode("utf-8")
-            sent = False
-            while not sent and not self._closed:
-                with self._lock:
-                    clients = list(self._clients)
-                if not clients:
-                    time.sleep(0.05)  # queue holds until a client connects
-                    continue
-                for c in clients:
-                    try:
-                        c.sendall(data)
-                        sent = True
-                    except OSError:
-                        with self._lock:
-                            if c in self._clients:
-                                self._clients.remove(c)
-            if self._max_per_sec:
-                time.sleep(1.0 / self._max_per_sec)
-
-    def push(self, line: str) -> None:
-        """Accept one webhook body (single-line JSON document)."""
-        if self._closed:
-            raise RuntimeError("PushSource is closed")
-        if "\n" in line.rstrip("\n"):
-            raise ValueError(
-                "PushSource.push: one JSON document per call (the "
-                "socket framing is line-delimited)"
-            )
-        self._q.put(line)
-
-    def pending(self) -> int:
-        """Lines accepted but not yet emitted to a client."""
-        return self._q.qsize()
-
-    def close(self) -> None:
-        self._closed = True
-        self._q.put(None)
-        try:
-            self._srv.close()
-        finally:
-            with self._lock:
-                for c in self._clients:
-                    try:
-                        c.close()
-                    except OSError:
-                        pass
-                self._clients.clear()
-
-
-def start_push_ingest_stream(
-    spark: SparkSession,
-    lake: TelegramLake,
-    host: str,
-    port: int,
-    checkpoint_dir: str,
-    quarantine_dir: str | None = None,
-) -> StreamingQuery:
-    """The S1 push-shaped twin of :func:`start_ingest_stream`: Spark's
-    ``socket`` source connects to a :class:`PushSource` (or any line
-    server) instead of watching a landing directory; each line is one
-    webhook body, parsed PERMISSIVE with the same corrupt-record
-    capture, then routed through the IDENTICAL two-output sink
-    (quarantine split, chat-id guard, batch-keyed raw-zone writes).
-    Inherits the socket source's stated no-fault-tolerance (class
-    docstring); the landing-dir stream remains the durable path."""
-    lines = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-    # from_json PERMISSIVE + corrupt column behaves exactly like the
-    # file source: malformed lines carry the verbatim body in the
-    # corrupt column, an empty-but-valid document parses to an all-null
-    # row and is dropped by the chat filter (probed, not assumed)
-    updates = lines.select(
-        F.from_json(
-            F.col("value"),
-            _schema_with_corrupt(),
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("u")
-    ).select("u.*")
-    return (
-        updates.writeStream.foreachBatch(
-            _two_output_sink(lake, quarantine_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )

@@ -357,14 +357,37 @@ def test_default_read_enriched_is_the_declared_ddl_schema(spark, tmp_path):
     assert got.context_date == dt.date(2024, 1, 2)
 
 
+BROKEN_BODY = '{"update_id": 6, "message": {broken'
+
+
+def _drain_landing(spark, lk, landing, checkpoint):
+    """Drain ``start_ingest_stream`` once; the rows it read."""
+    q = start_ingest_stream(spark, lk, landing, checkpoint, available_now=True)
+    q.awaitTermination(120)
+    assert not q.isActive and q.exception() is None
+    return sum(p["numInputRows"] for p in q.recentProgress)
+
+
+def _raw_ids_and_bodies(spark, lk):
+    raw = lk.read_raw(spark)
+    parsed = raw.filter(F.col("malformed_payload").isNull())
+    malformed = raw.filter(F.col("malformed_payload").isNotNull())
+    return (
+        sorted(r.update_id for r in parsed.collect()),
+        [r.malformed_payload for r in malformed.collect()],
+    )
+
+
 @pytest.mark.parametrize(
-    "quarantine", [False, True], ids=["file_sink", "two_output"]
+    "malformed", [False, True], ids=["clean", "malformed_body"]
 )
-def test_ingest_resumes_from_its_checkpoint(spark, tmp_path, quarantine):
+def test_ingest_resumes_from_its_checkpoint(spark, tmp_path, malformed):
     """A second drain on the same checkpoint reads only the updates that
     landed since the first, and the raw zone holds each kept update
-    exactly once. Both routes resume from the offsets, commit and
-    source logs written by the session's checkpoint file manager."""
+    exactly once; with a malformed body among the second drain's files,
+    its verbatim text lands exactly once too. The stream resumes from
+    the offsets, commit and source logs written by the session's
+    checkpoint file manager."""
     lk = TelegramLake(str(tmp_path), chat_id=CHAT_ID)
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
@@ -374,18 +397,35 @@ def test_ingest_resumes_from_its_checkpoint(spark, tmp_path, quarantine):
             with open(os.path.join(landing, f"u{u['update_id']}.json"), "w") as f:
                 json.dump(u, f)
 
-    def drain():
-        q = start_ingest_stream(
-            spark, lk, landing, str(tmp_path / "ckpt"), available_now=True,
-            quarantine_dir=str(tmp_path / "quar") if quarantine else None,
-        )
-        q.awaitTermination(120)
-        assert not q.isActive and q.exception() is None
-        return sum(p["numInputRows"] for p in q.recentProgress)
-
+    ckpt = str(tmp_path / "ckpt")
     land(UPDATES[:3])
-    assert drain() == 3
+    assert _drain_landing(spark, lk, landing, ckpt) == 3
     land([UPDATES[3], UPDATES[4]])  # UPDATES[4] is from a foreign chat
-    assert drain() == 2
-    ids = sorted(r.update_id for r in lk.read_raw(spark).collect())
-    assert ids == [1, 2, 3, 4]
+    if malformed:
+        with open(os.path.join(landing, "u6.json"), "w") as f:
+            f.write(BROKEN_BODY)
+    assert _drain_landing(spark, lk, landing, ckpt) == 2 + malformed
+    assert _raw_ids_and_bodies(spark, lk) == (
+        [1, 2, 3, 4], [BROKEN_BODY] if malformed else []
+    )
+
+
+def test_malformed_body_never_reaches_the_enriched_table(spark, tmp_path):
+    """With no chat filter (``TelegramLake`` without ``chat_id``), a body
+    that does not parse lands in the raw zone verbatim and the daily ETL
+    leaves it out: it writes one row for one good update, and no
+    all-NULL row."""
+    lk = TelegramLake(str(tmp_path))
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    with open(os.path.join(landing, "u1.json"), "w") as f:
+        json.dump(UPDATES[0], f)
+    with open(os.path.join(landing, "u6.json"), "w") as f:
+        f.write(BROKEN_BODY)
+    assert _drain_landing(spark, lk, landing, str(tmp_path / "ckpt")) == 2
+
+    assert run_daily_etl(spark, lk, context_date=lk.today()) == 1
+    rows = lk.read_enriched(spark).drop("context_date").collect()
+    assert [r.message_id for r in rows] == [10]
+    assert not any(all(v is None for v in r) for r in rows)
+    assert _raw_ids_and_bodies(spark, lk) == ([1], [BROKEN_BODY])

@@ -154,74 +154,76 @@ def test_streaming_first_seen_dedup_state_survives_restart(spark, tmp_path):
     assert final == {3, 7, 9}
 
 
-def test_quarantine_captures_malformed_payloads(spark, tmp_path):
-    """With quarantine_dir set, unparseable webhook bodies are captured
-    verbatim (replayable) while well-formed updates flow to the raw zone;
-    without it, broken lines vanish silently (reference behavior)."""
-    import json as _json
+BROKEN_BODY = '{"update_id": 2, "message": {broken'
 
+
+def _land_good_and_broken(landing):
+    """One update from chat -42, one from a foreign chat, one body that
+    does not parse."""
+
+    def update(uid, chat_id):
+        return {
+            "update_id": uid,
+            "message": {
+                "message_id": 10 + uid,
+                "from": {"id": 1, "is_bot": False, "first_name": "ada"},
+                "chat": {"id": chat_id, "type": "group"},
+                "date": 1704103200,
+                "text": "hello",
+            },
+        }
+
+    landing.mkdir()
+    (landing / "u1.json").write_text(json.dumps(update(1, -42)))
+    (landing / "u2.json").write_text(BROKEN_BODY)
+    (landing / "u3.json").write_text(json.dumps(update(3, -9)))
+
+
+def _parsed_and_malformed(spark, lake):
+    raw = lake.read_raw(spark)
+    parsed = raw.filter(F.col("malformed_payload").isNull())
+    malformed = raw.filter(F.col("malformed_payload").isNotNull())
+    return (
+        sorted(r.update_id for r in parsed.collect()),
+        [r.malformed_payload for r in malformed.collect()],
+    )
+
+
+def test_quarantine_captures_malformed_payloads(spark, tmp_path):
+    """An unparseable webhook body lands in the raw zone verbatim, in
+    its row's ``malformed_payload`` column (auditable, replayable),
+    beside the well-formed updates of the pipeline's chat; an update
+    from a foreign chat is dropped."""
     from data_pipeline_project_using_telegram_and_aws_spark.sources.lake import TelegramLake
     from data_pipeline_project_using_telegram_and_aws_spark.streaming.ingest import start_ingest_stream
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    good = {
-        "update_id": 1,
-        "message": {
-            "message_id": 10,
-            "from": {"id": 1, "is_bot": False, "first_name": "ada"},
-            "chat": {"id": -42, "type": "group"},
-            "date": 1704103200,
-            "text": "hello",
-        },
-    }
-    (landing / "u1.json").write_text(_json.dumps(good))
-    (landing / "u2.json").write_text('{"update_id": 2, "message": {broken')
-
+    _land_good_and_broken(tmp_path / "landing")
     lake = TelegramLake(str(tmp_path / "lake"), chat_id=-42)
     q = start_ingest_stream(
         spark,
         lake,
-        str(landing),
+        str(tmp_path / "landing"),
         str(tmp_path / "ckpt"),
         available_now=True,
-        quarantine_dir=str(tmp_path / "quarantine"),
     )
     q.awaitTermination(120)
+    assert q.exception() is None
 
-    raw = lake.read_raw(spark)
-    assert [r.update_id for r in raw.collect()] == [1]
-    quarantined = spark.read.json(str(tmp_path / "quarantine")).collect()
-    assert len(quarantined) == 1
-    assert quarantined[0].payload == '{"update_id": 2, "message": {broken'
+    assert _parsed_and_malformed(spark, lake) == ([1], [BROKEN_BODY])
 
 
 def test_quarantine_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: after checkpoint loss the same
-    micro-batch is re-delivered with the same id. Both outputs key their
-    layout on that id (ingest_batch= partition + dynamic overwrite), so
-    a replay rewrites its own partitions — zero duplicate raw or
-    quarantine rows."""
-    import json as _json
+    """After the checkpoint is lost, the stream re-reads the landing
+    files as batch 0 again; the file sink's own commit log
+    (``_spark_metadata`` under the raw zone) already holds that batch
+    and skips it, so the replay writes zero duplicate rows, good or
+    malformed."""
     import shutil
 
     from data_pipeline_project_using_telegram_and_aws_spark.sources.lake import TelegramLake
     from data_pipeline_project_using_telegram_and_aws_spark.streaming.ingest import start_ingest_stream
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    good = {
-        "update_id": 1,
-        "message": {
-            "message_id": 10,
-            "from": {"id": 1, "is_bot": False, "first_name": "ada"},
-            "chat": {"id": -42, "type": "group"},
-            "date": 1704103200,
-            "text": "hello",
-        },
-    }
-    (landing / "u1.json").write_text(_json.dumps(good))
-    (landing / "u2.json").write_text('{"update_id": 2, "message": {broken')
+    _land_good_and_broken(tmp_path / "landing")
     lake = TelegramLake(str(tmp_path / "lake"), chat_id=-42)
 
     for attempt in range(2):  # second pass = the re-delivered batch
@@ -230,17 +232,14 @@ def test_quarantine_replay_is_idempotent(spark, tmp_path):
         q = start_ingest_stream(
             spark,
             lake,
-            str(landing),
+            str(tmp_path / "landing"),
             str(tmp_path / "ckpt"),
             available_now=True,
-            quarantine_dir=str(tmp_path / "quarantine"),
         )
         q.awaitTermination(120)
+        assert q.exception() is None
 
-    assert [r.update_id for r in lake.read_raw(spark).collect()] == [1]
-    quarantined = spark.read.json(str(tmp_path / "quarantine")).collect()
-    assert len(quarantined) == 1
-    assert quarantined[0].payload == '{"update_id": 2, "message": {broken'
+    assert _parsed_and_malformed(spark, lake) == ([1], [BROKEN_BODY])
 
 
 def test_dedup_within_watermark_bounds_state(spark, tmp_path):
@@ -323,80 +322,3 @@ def test_pipeline_projections_compose_on_streams(spark, tmp_path):
     assert "[EMAIL]" in rows[1].text_redacted and rows[1].n_email == 1
     assert rows[2].text_redacted == rows[2].text
     assert all(r.split in ("train", "holdout") for r in rows.values())
-
-
-def test_push_source_five_stage_front_door(spark, tmp_path):
-    """r10 verdict #8 (S1 parity): the PUSH-shaped ingress — webhook
-    bodies pushed into a rate-limited in-memory-queue line server,
-    Spark's socket source consuming — through the SAME five-stage
-    chain the landing-dir tests pin: (1) push ingest, (2) quarantine
-    split of a malformed body, (3) chat-id guard + batch-keyed raw
-    zone, (4) daily ETL to enriched, (5) the reference query on top."""
-    import json as _json
-    import time
-
-    from data_pipeline_project_using_telegram_and_aws_spark.sources.lake import TelegramLake
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.etl_job import run_daily_etl
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.ingest import (
-        PushSource,
-        start_push_ingest_stream,
-    )
-
-    def update(uid, mid, user, date, text, chat_id=-42):
-        return {
-            "update_id": uid,
-            "message": {
-                "message_id": mid,
-                "from": {"id": user[0], "is_bot": False,
-                         "first_name": user[1]},
-                "chat": {"id": chat_id, "type": "group"},
-                "date": date,
-                "text": text,
-            },
-        }
-
-    lake = TelegramLake(str(tmp_path / "lake"), chat_id=-42)
-    src = PushSource(max_per_sec=200)
-    q = start_push_ingest_stream(
-        spark, lake, src.host, src.port,
-        str(tmp_path / "ckpt"), quarantine_dir=str(tmp_path / "quar"),
-    )
-    try:
-        # stage 1: webhook pushes — two good, one foreign chat, one
-        # malformed body
-        src.push(_json.dumps(update(1, 10, (1, "ada"), 1704103200, "hello")))
-        src.push(_json.dumps(update(2, 11, (1, "ada"), 1704103200, "worlds!")))
-        src.push(_json.dumps(
-            update(5, 14, (9, "eve"), 1704103200, "spy", chat_id=-9)
-        ))
-        src.push('{"update_id": 3, "message": {broken')
-
-        deadline = time.time() + 120
-        raw = None
-        while time.time() < deadline:
-            try:
-                raw = lake.read_raw(spark)
-                if (raw.count() >= 2
-                        and spark.read.json(
-                            str(tmp_path / "quar")).count() >= 1):
-                    break
-            except Exception:
-                pass  # zones not written yet
-            time.sleep(1)
-    finally:
-        q.stop()
-        src.close()
-    # stage 2+3: quarantine captured the verbatim body; raw zone holds
-    # exactly the same-chat updates
-    assert sorted(r.update_id for r in raw.collect()) == [1, 2]
-    quar = spark.read.json(str(tmp_path / "quar")).collect()
-    assert [r.payload for r in quar] == ['{"update_id": 3, "message": {broken']
-    # stage 4: the daily ETL flattens to enriched
-    today = lake.today()
-    assert run_daily_etl(spark, lake, context_date=today) == 2
-    # stage 5: the reference query over the enriched zone
-    enr = lake.read_enriched(spark)
-    got = {
-        (r.user_id, r.text) for r in enr.select("user_id", "text").collect()
-    }
-    assert got == {(1, "hello"), (1, "worlds!")}

@@ -20,7 +20,9 @@ operand is provably bounded:
   means an interior total ordering crept into the algorithm itself.
 
 Each finding must either appear in ``ALLOWLIST`` below with a reason
-that argues the operand is bounded, or the lint fails. Run:
+that argues the operand is bounded, or the lint fails; so does an
+``ALLOWLIST`` entry that matches no finding, so the list cannot go
+stale. Run:
 
     python tools/scale_lint.py [sf_dir] [--write]
 
@@ -48,12 +50,6 @@ ALLOWLIST: dict[tuple[str, str], str] = {
         "the df-rank window (row_number over df DESC) runs over the "
         "vocab table — distinct tokens, bounded independently of corpus "
         "rows; vocabulary.py documents exactly this bound",
-    ("lm1_unigram_quality", "global_window"):
-        "total/V attachment windows run over the unigram count table "
-        "(vocab-sized)",
-    ("lm2_bigram_quality", "global_window"):
-        "unigram-side total/V windows (vocab-sized); the bigram table "
-        "joins by key, no global window touches it",
     # q19's running sum is partitioned by user_id; its presentation sort
     # plus the windows' local sorts are counted correctly — nothing to
     # allow. (Kept as a comment so reviewers know it was checked.)
@@ -445,8 +441,13 @@ def main() -> int:
     else:
         print(report)
 
-    if violations:
-        print(f"FAIL: {len(violations)} unjustified findings: {violations}")
+    stale = sorted(set(ALLOWLIST) - {(name, kind) for name, kind, _ in rows})
+    if violations or stale:
+        if violations:
+            print(f"FAIL: {len(violations)} unjustified findings: {violations}")
+        if stale:
+            print(f"FAIL: {len(stale)} ALLOWLIST entries match no finding: "
+                  f"{stale}")
         return 1
     print(f"ok: {len(rows)} findings, all justified")
     return 0

@@ -36,6 +36,25 @@ filesystem by filesystem:
 - object stores: neither manager is atomic there.
 
 Sessions not built by :func:`get_spark` keep Spark's default manager.
+
+Local files go through :data:`LOCAL_FILESYSTEM`, Hadoop's ``LocalFileSystem``
+with one method replaced (``jvm/NioLocalFileSystem.java``, built into
+:data:`JVM_JAR` by ``tools/build_jvm.sh``). Without libhadoop, Hadoop's
+``RawLocalFileSystem.setPermission`` forks ``/bin/chmod`` for every file
+and directory it creates, ``.crc`` files included: each webhook
+micro-batch forked 12 ``chmod`` processes (8 for its four checkpoint
+files, 4 for its two raw-zone files) and each daily ETL 12 more, at
+about 6 ms a fork. The replacement sets the same mode bits, sticky bit
+included, with a chmod system call and starts no process; checksums,
+umask and rename semantics stay Hadoop's. The guarantee is for local
+files only: HDFS and object-store schemes keep their own filesystems,
+and sessions not built by :func:`get_spark` keep whichever class
+Hadoop's service loader finds for ``file:`` (Hive's
+``ProxyLocalFileSystem`` or the stock one, by jar order), which this
+profile pins. The jar goes on the driver and executor classpaths,
+ahead of any ``extraClassPath`` a caller passes: ``spark.jars`` is too
+late, since ``spark-submit`` opens a ``file:`` filesystem before it
+loads those.
 """
 
 from __future__ import annotations
@@ -51,6 +70,12 @@ CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+LOCAL_FILESYSTEM = "sparkgraft.fs.NioLocalFileSystem"
+JVM_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar"
+)
+_CLASSPATH_KEYS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
 
 
 def spark_cpus(default: str = "*") -> str:
@@ -104,6 +129,7 @@ def get_spark(
             "spark.sql.streaming.checkpointFileManagerClass",
             CHECKPOINT_FILE_MANAGER,
         )
+        .config("spark.hadoop.fs.file.impl", LOCAL_FILESYSTEM)
         # r13: the whole-stage-codegen compile cache defaults to 100
         # generated classes — this engine's 50-query registry compiles
         # ~280 distinct stages per bench sweep, so the LRU thrashed and
@@ -119,6 +145,9 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    for k in _CLASSPATH_KEYS:
+        conf[k] = os.pathsep.join(filter(None, (JVM_JAR, conf.get(k))))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

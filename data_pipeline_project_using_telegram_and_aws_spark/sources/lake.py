@@ -200,7 +200,31 @@ class TelegramLake:
         of the Athena external DDL + MSCK (reference ipynb:732-750).
         Unlike a temp view, the table is session-independent: any session
         sharing the catalog (and, with a metastore, any future process)
-        sees it without re-registration."""
+        sees it without re-registration.
+
+        Registering the same lake again is idempotent. A table of that
+        name over another location raises ``ValueError`` naming both
+        paths: ``CREATE TABLE IF NOT EXISTS`` would keep the old table
+        and its rows."""
+        # a temp view of that name has no Location and is left alone
+        location = None
+        if spark.catalog.tableExists(name):
+            location = {
+                r["col_name"]: r["data_type"]
+                for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect()
+            }.get("Location")
+        if location is not None:
+            Path = spark._jvm.org.apache.hadoop.fs.Path
+            hconf = spark._jsc.hadoopConfiguration()
+            have, want = (
+                str(p.getFileSystem(hconf).makeQualified(p))
+                for p in (Path(location), Path(self.enriched_path))
+            )
+            if have != want:
+                raise ValueError(
+                    f"table {name!r} is registered over {have}, not this "
+                    f"lake's enriched zone {want}; drop it first"
+                )
         cols = ", ".join(
             f"{f.name} {f.dataType.simpleString().upper()}"
             for f in ENRICHED_SCHEMA.fields

@@ -429,3 +429,66 @@ def test_malformed_body_never_reaches_the_enriched_table(spark, tmp_path):
     assert [r.message_id for r in rows] == [10]
     assert not any(all(v is None for v in r) for r in rows)
     assert _raw_ids_and_bodies(spark, lk) == ([1], [BROKEN_BODY])
+
+
+def _lake_with_rows(spark, root, n):
+    """A lake whose enriched zone holds the first ``n`` updates."""
+    lk = TelegramLake(root, chat_id=CHAT_ID)
+    part = f"{lk.raw_path}/context_date={lk.today()}"
+    os.makedirs(part)
+    with open(os.path.join(part, "b.json"), "w") as f:
+        for u in UPDATES[:n]:
+            f.write(json.dumps(u) + "\n")
+    assert run_daily_etl(spark, lk, context_date=lk.today()) == n
+    return lk
+
+
+def test_persistent_table_refuses_another_lakes_location(spark, tmp_path):
+    """Re-registering a catalog table over the same lake is idempotent;
+    registering another lake under a taken name raises, naming both
+    paths, and the table keeps its rows. ``CREATE TABLE IF NOT EXISTS``
+    alone would answer with the old lake's rows."""
+    a = _lake_with_rows(spark, str(tmp_path / "a"), 2)
+    b = _lake_with_rows(spark, str(tmp_path / "b"), 4)
+    try:
+        a.register_persistent_table(spark, "tp_owner")
+        a.register_persistent_table(spark, "tp_owner")
+        assert spark.table("tp_owner").count() == 2
+        with pytest.raises(ValueError) as err:
+            b.register_persistent_table(spark, "tp_owner")
+        assert a.enriched_path in str(err.value)
+        assert b.enriched_path in str(err.value)
+        assert spark.table("tp_owner").count() == 2
+    finally:
+        spark.sql("DROP TABLE IF EXISTS tp_owner")
+
+
+def test_pipeline_starts_no_chmod_process(spark, tmp_path):
+    """Ingest drain, daily ETL and catalog registration set file modes
+    in the JVM: a JFR recording of ``jdk.ProcessStart`` over all three
+    sees no ``chmod``. Hadoop's stock local filesystem forks one per
+    file and directory it creates when libhadoop is not loaded."""
+    jvm = spark._jvm
+    lk = TelegramLake(str(tmp_path / "lake"), chat_id=CHAT_ID)
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    for u in UPDATES:
+        with open(os.path.join(landing, f"u{u['update_id']}.json"), "w") as f:
+            json.dump(u, f)
+
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        assert _drain_landing(spark, lk, landing, str(tmp_path / "ckpt")) == 5
+        assert run_daily_etl(spark, lk, context_date=lk.today()) == 4
+        lk.register_persistent_table(spark, "tp_no_fork")
+    finally:
+        recording.stop()
+        spark.sql("DROP TABLE IF EXISTS tp_no_fork")
+    dump = jvm.java.io.File(str(tmp_path / "starts.jfr")).toPath()
+    recording.dump(dump)
+    recording.close()
+    events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    commands = [events.get(i).getString("command") for i in range(events.size())]
+    assert [c for c in commands if "chmod" in c] == []

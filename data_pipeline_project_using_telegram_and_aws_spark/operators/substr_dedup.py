@@ -47,40 +47,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# Version stamp of the gram-hash recipe persisted gram indexes were built
-# under. r13 switched `_gram_hash` from the 48-bit md5-prefix recipe to
-# xxhash64: an index persisted under the OLD recipe silently yields zero
-# matches at probe time (duplicates admitted, no error). The stamp makes
-# that mismatch loud — build/append write it as a table property and the
-# probe path refuses an index whose stamp is absent (pre-r13 build) or
-# different. Bump this constant whenever the `_gram_hash` recipe changes.
-GRAM_HASH_VERSION = "xxhash64-v1"
-_GRAM_HASH_PROP = "spark_graft.gram_hash_version"
-
-
-def _stamp_gram_hash_version(spark, table: str) -> None:
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('{_GRAM_HASH_PROP}' = '{GRAM_HASH_VERSION}')"
-    )
-
-
-def _require_gram_hash_version(spark, table: str) -> None:
-    """Fail loudly when ``table`` was built under a different (or
-    pre-versioning) gram-hash recipe — a mismatched index cannot match
-    any probe gram and would silently admit every duplicate."""
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    got = props.get(_GRAM_HASH_PROP)
-    if got != GRAM_HASH_VERSION:
-        raise ValueError(
-            f"gram index {table!r} carries gram-hash version {got!r} but "
-            f"this engine computes {GRAM_HASH_VERSION!r}; probing it would "
-            "silently match nothing. Rebuild the index with "
-            "build_gram_index (indexes persisted before the hash-version "
-            "stamp predate the r13 xxhash64 recipe change)."
-        )
-
 
 def _gram_hash(text, pos, k: int):
     """64-bit ``xxhash64`` of the char k-gram at 1-based ``pos``.
@@ -96,45 +62,6 @@ def _gram_hash(text, pos, k: int):
     The md5-prefix recipe remains in `winnowing` where SQL
     reproducibility is the stated design goal."""
     return F.xxhash64(F.substring(text, pos, k))
-
-
-def _gram_rows(
-    df: DataFrame, k: int, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, __p, __h) — one row per k-gram position (1-based), hashed.
-    The ONE implementation of the explode+hash projection every
-    function in this module builds on, so the gram recipe cannot
-    drift between the batch, index-build, and probe paths."""
-    text = F.col(text_col)
-    n_pos = F.length(text) - k + 1
-    pos_seq = F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return df.select(
-        F.col(id_col), text.alias("__t"), F.explode(pos_seq).alias("__p")
-    ).select(
-        F.col(id_col),
-        F.col("__p"),
-        _gram_hash(F.col("__t"), F.col("__p"), k).alias("__h"),
-    )
-
-
-def _stitch_spans(
-    marked: DataFrame, k: int, id_col: str
-) -> DataFrame:
-    """Maximal runs of consecutive marked positions → (id, span_start,
-    span_length) — the gaps-and-islands stitch (consecutive positions
-    share ``p - row_number``), shared by every span producer here."""
-    rn = F.row_number().over(Window.partitionBy(id_col).orderBy("__p"))
-    return (
-        marked.withColumn("__island", F.col("__p") - rn)
-        .groupBy(id_col, "__island")
-        .agg(
-            F.min("__p").alias("span_start"),
-            (F.max("__p") - F.min("__p") + k).alias("span_length"),
-        )
-        .drop("__island")
-    )
 
 
 def exact_substring_spans(
@@ -185,7 +112,19 @@ def exact_substring_spans(
     # ~|text| xxhash64 rows per doc run pre-exchange, i.e. on the 1-3
     # cores a small local scan plans without this; measured 5.6 → 3.8 s
     # end-to-end at sf0.1. Hash/integer work only — values unchanged.
-    grams = _gram_rows(spread(df, id_col), k, id_col, text_col)
+    text = F.col(text_col)
+    n_pos = F.length(text) - k + 1
+    pos_seq = F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos)).otherwise(
+        F.array().cast("array<int>")
+    )
+    # (id, __p, __h): one row per k-gram position (1-based), hashed
+    grams = spread(df, id_col).select(
+        F.col(id_col), text.alias("__t"), F.explode(pos_seq).alias("__p")
+    ).select(
+        F.col(id_col),
+        F.col("__p"),
+        _gram_hash(F.col("__t"), F.col("__p"), k).alias("__h"),
+    )
     marked = (
         grams.withColumn(
             "__n", F.count(F.lit(1)).over(Window.partitionBy("__h"))
@@ -193,7 +132,17 @@ def exact_substring_spans(
         .filter(F.col("__n") >= min_count)
         .select(id_col, "__p")
     )
-    return _stitch_spans(marked, k, id_col)
+    # gaps and islands: consecutive marked positions share p - row_number
+    rn = F.row_number().over(Window.partitionBy(id_col).orderBy("__p"))
+    return (
+        marked.withColumn("__island", F.col("__p") - rn)
+        .groupBy(id_col, "__island")
+        .agg(
+            F.min("__p").alias("span_start"),
+            (F.max("__p") - F.min("__p") + k).alias("span_length"),
+        )
+        .drop("__island")
+    )
 
 
 def remove_spans(
@@ -268,243 +217,3 @@ def remove_spans(
     return out.withColumn(
         text_col, F.when(F.col("__m").isNull(), text).otherwise(cut)
     ).drop("__spans", "__m")
-
-
-# ---------------------------------------------------------------------------
-# Incremental (streaming) form — the `dedup_ingest` pattern applied to
-# spans: a persisted gram-position index classifies each new batch,
-# new documents land already cut, and repeats discovered against
-# ALREADY-LANDED documents become retro-span ledger rows for a
-# compaction pass (you cannot rewrite history inside the batch, and
-# silently keeping the old copy would break the cut-all-copies
-# policy — the ledger is the honest middle).
-
-
-def build_gram_index(
-    docs: DataFrame,
-    table: str,
-    k: int = 50,
-    buckets: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Persist every k-gram position of the corpus as a bucketed
-    (gram_hash, doc_id, pos, admit_batch) table, hash-bucketed so
-    batch probes are co-located joins. One row per character of
-    corpus — the same n-entries cost the suffix array pays; the index
-    IS the dedup state, so it is priced like the corpus it guards.
-    Corpus-built rows carry ``admit_batch = -1`` (a foreachBatch id is
-    never negative, so the replay exemption in
-    :func:`exact_substr_against_index` can never fire on them)."""
-    spark = docs.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (
-        _gram_rows(docs, k, id_col, text_col)
-        .select(
-            F.col("__h").alias("gram_hash"),
-            F.col(id_col).alias("doc_id"),
-            F.col("__p").alias("pos"),
-            F.lit(-1).cast("long").alias("admit_batch"),
-        )
-        .repartition(buckets, F.col("gram_hash"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "gram_hash")
-        .sortBy("gram_hash")
-        .saveAsTable(table)
-    )
-    # stamp the hash recipe the index was built under (probe paths
-    # refuse an unstamped/mismatched index — see GRAM_HASH_VERSION)
-    _stamp_gram_hash_version(spark, table)
-
-
-def append_to_gram_index(
-    spark,
-    docs: DataFrame,
-    table: str,
-    k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_id: int | None = None,
-) -> None:
-    """Grow the index with an admitted batch's gram positions —
-    stamped with ``batch_id`` so replays of the same delivery are
-    exempted at probe time (None stamps -1, which never matches).
-    NOTE the grams indexed are those of the ORIGINAL batch text (the
-    probe input), not the cut text: a later doc repeating a span this
-    batch carried must still match it, exactly as it would have in
-    the one-shot batch computation."""
-    _require_gram_hash_version(spark, table)
-    stamp = F.lit(int(batch_id) if batch_id is not None else -1).cast(
-        "long"
-    )
-    (
-        _gram_rows(docs, k, id_col, text_col)
-        .select(
-            F.col("__h").alias("gram_hash"),
-            F.col(id_col).alias("doc_id"),
-            F.col("__p").alias("pos"),
-            stamp.alias("admit_batch"),
-        )
-        .select(*spark.table(table).columns)
-        .write.mode("append")
-        .insertInto(table)
-    )
-
-
-def exact_substr_against_index(
-    spark,
-    batch: DataFrame,
-    table: str,
-    k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_id: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Classify one batch against the persisted gram index: returns
-    ``(cleaned, batch_spans, retro_spans)``.
-
-    - ``cleaned`` — the batch with every span cut whose k-windows
-      repeat either WITHIN the batch (the one-shot ``min_count=2``
-      semantics) or against the indexed corpus;
-    - ``batch_spans`` — the spans that were cut (id, span_start,
-      span_length), for the audit trail;
-    - ``retro_spans`` — spans over ALREADY-INDEXED documents whose
-      grams this batch re-matched: the corpus-side occurrences the
-      cut-all-copies policy still owes. Land them in a ledger and
-      apply with :func:`remove_spans` at compaction time (they merge
-      across batches by construction — remove_spans merges overlaps).
-
-    Replay contract (the `dedup_ingest` scoping): index rows stamped
-    with THIS ``batch_id`` are ignored at probe time, so an
-    at-least-once re-delivery classifies exactly as the first one —
-    same cleaned text, same span sets — and the partition rewrites
-    are byte-stable. A document re-sent under a NEW batch id matches
-    its own indexed grams like any other duplicate: its copy is cut
-    and the original earns retro spans, which `remove_spans`' overlap
-    merge makes idempotent downstream.
-
-    Plan: batch grams (projection + explode) → ONE hash-keyed join
-    against the bucketed index (batch side shuffles, corpus side
-    reads in place) → per-doc island windows on each side."""
-    _require_gram_hash_version(spark, table)
-    grams = _gram_rows(batch, k, id_col, text_col).localCheckpoint(
-        eager=False
-    )
-    exempt = F.lit(int(batch_id) if batch_id is not None else -2)
-    idx = spark.table(table).filter(F.col("admit_batch") != exempt)
-    corpus_hits = idx.join(
-        grams.select("__h").distinct(),
-        idx["gram_hash"] == F.col("__h"),
-    ).localCheckpoint(eager=False)
-    within = (
-        grams.groupBy("__h")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("__h")
-    )
-    dup_hashes = within.union(
-        corpus_hits.select(F.col("gram_hash").alias("__h"))
-    ).distinct()
-    # deliberate merge-strategy pin (the r12 200k-probe lesson, kept
-    # here even though the batch path moved to a count window): the
-    # dup-hash set's size is data-dependent, a static broadcast
-    # re-executes its subtree in the broadcast thread (OOM class), and
-    # the pinned SMJ's worst case is the keyed shuffle this plan pays
-    # anyway. This probe path keeps the join because dup_hashes mixes
-    # batch-internal counts with corpus-index hits — a window over the
-    # batch grams alone cannot see the corpus side.
-    marked = grams.join(dup_hashes.hint("merge"), "__h").select(
-        id_col, "__p"
-    )
-    batch_spans = _stitch_spans(marked, k, id_col)
-    cleaned = remove_spans(batch, batch_spans, id_col, text_col)
-    retro_pos = corpus_hits.select(
-        "doc_id", F.col("pos").alias("__p")
-    ).distinct()
-    retro_spans = _stitch_spans(retro_pos, k, "doc_id")
-    return cleaned, batch_spans, retro_spans
-
-
-def translate_spans_to_cut(
-    spans: DataFrame,
-    door_spans: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Map spans expressed in a document's ORIGINAL coordinates onto
-    the text that remains after ``door_spans`` were cut from it
-    (`remove_spans` semantics: merged intervals deleted, pieces
-    concatenated). Needed because the streaming gram index speaks
-    original coordinates while the good zone stores door-cut text —
-    settling a retro span without this translation deletes the wrong
-    bytes whenever the landed document was itself cut at admission.
-
-    For each span ``[s, e)``: the landed position of original offset
-    ``x`` is ``x − Σ |d ∩ [1, x)|`` over the (merged) door intervals
-    ``d``; the translated span is ``[m(s), m(e))``, which clips away
-    any part the door already deleted, and vanishes (dropped) when it
-    lay entirely inside door cuts. One broadcast-sized groupBy on the
-    door spans + one keyed join + two HOF folds — no Python."""
-    doors = door_spans.groupBy(id_col).agg(
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("span_start").alias("s"),
-                        (
-                            F.col("span_start") + F.col("span_length")
-                        ).alias("e"),
-                    )
-                )
-            ),
-            F.expr("cast(array() as array<struct<s:int,e:int>>)"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (x["s"] <= F.element_at(acc, -1)["e"]),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(
-                        F.struct(
-                            F.element_at(acc, -1)["s"].alias("s"),
-                            F.greatest(
-                                F.element_at(acc, -1)["e"], x["e"]
-                            ).alias("e"),
-                        )
-                    ),
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        ).alias("__doors")
-    )
-
-    def removed_before(x):
-        # total door-interval length strictly before original offset x
-        return F.aggregate(
-            F.coalesce(
-                F.col("__doors"),
-                F.expr("cast(array() as array<struct<s:int,e:int>>)"),
-            ),
-            F.lit(0),
-            lambda acc, d: acc
-            + F.greatest(F.least(d["e"], x) - d["s"], F.lit(0)),
-        )
-
-    e = F.col("span_start") + F.col("span_length")
-    new_s = F.col("span_start") - removed_before(F.col("span_start"))
-    new_e = e - removed_before(e)
-    # collision-free output names first: aliasing the translated value
-    # back to "span_start" in the same select would let lateral column
-    # alias resolution rewrite the sibling expression to read the NEW
-    # value (observed: the translated span_length silently went ≤ 0)
-    return (
-        spans.join(doors, id_col, "left")
-        .select(
-            id_col,
-            new_s.alias("__ns"),
-            (new_e - new_s).alias("__nl"),
-        )
-        .filter(F.col("__nl") > 0)
-        .select(
-            id_col,
-            F.col("__ns").alias("span_start"),
-            F.col("__nl").alias("span_length"),
-        )
-    )

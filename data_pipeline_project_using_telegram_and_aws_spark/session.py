@@ -140,10 +140,7 @@ def get_spark(
         # generated CODE keyed by source text, never data or results,
         # and a production cluster running a query fleet wants the same
         # headroom). Static conf — must be set before session creation.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     conf = dict(extra_conf or {})
     for k in _CLASSPATH_KEYS:

@@ -52,57 +52,34 @@ from ..schemas import ENRICHED_SCHEMA, RAW_ZONE_SCHEMA
 # ``timezone(offset=timedelta(hours=-3))``): partition values are the
 # *wall-clock date in Brasília time* of the arrival instant. The engine
 # session stays in UTC; only the partition-value derivation shifts.
-DEFAULT_INGEST_TZ = "-03:00"
+# The same fixed offset, as Spark and as Python spell it:
+INGEST_TZ = "-03:00"
+_INGEST_TZINFO = dt.timezone(dt.timedelta(hours=-3))
 
 
-def _tzinfo(tz: str) -> dt.tzinfo:
-    """tzinfo from a fixed offset ("±HH:MM") or an IANA zone name."""
-    if tz and tz[0] in "+-":
-        h, m = tz[1:].split(":")
-        delta = dt.timedelta(hours=int(h), minutes=int(m))
-        return dt.timezone(-delta if tz[0] == "-" else delta)
-    from zoneinfo import ZoneInfo
-
-    return ZoneInfo(tz)
-
-
-def arrival_date(ts: Column, tz: str = DEFAULT_INGEST_TZ) -> Column:
-    """Arrival-date partition value: the wall-clock date in the pipeline
-    ingest timezone of UTC instant ``ts``. An event arriving 01:00 UTC
-    belongs to the *previous* day's partition under the default UTC-3."""
-    return F.to_date(F.from_utc_timestamp(ts, tz))
-
-
-def pipeline_today(tz: str = DEFAULT_INGEST_TZ) -> dt.date:
-    """Driver-side twin of :func:`arrival_date` at now() — the reference's
-    ``datetime.now(tzinfo=timezone(timedelta(hours=-3)))`` (ipynb:310)."""
-    return dt.datetime.now(dt.timezone.utc).astimezone(_tzinfo(tz)).date()
+def arrival_date(ts: Column) -> Column:
+    """Arrival-date partition value: the wall-clock date on the pipeline's
+    UTC-3 clock of UTC instant ``ts``. An event arriving 01:00 UTC
+    belongs to the *previous* day's partition."""
+    return F.to_date(F.from_utc_timestamp(ts, INGEST_TZ))
 
 
 class TelegramLake:
-    """Paths + IO for one logical pipeline instance.
+    """Paths + IO for one logical pipeline instance."""
 
-    ``ingest_tz`` is the pipeline clock for arrival-date partitioning,
-    defaulting to the reference's fixed UTC-3; pass an IANA name (e.g.
-    "America/Sao_Paulo") for DST-aware semantics instead.
-    """
-
-    def __init__(
-        self,
-        root: str,
-        chat_id: int | None = None,
-        ingest_tz: str = DEFAULT_INGEST_TZ,
-    ):
+    def __init__(self, root: str, chat_id: int | None = None):
         self.root = root.rstrip("/")
         self.raw_path = f"{self.root}/raw/telegram"
         self.enriched_path = f"{self.root}/enriched/telegram"
         self.chat_id = chat_id
-        self.ingest_tz = ingest_tz
         self._registered: set[str] = set()
 
     def today(self) -> dt.date:
-        """Current date on the pipeline clock (UTC-3 by default)."""
-        return pipeline_today(self.ingest_tz)
+        """Current date on the pipeline's UTC-3 clock: the driver-side
+        twin of :func:`arrival_date` at now(), the reference's
+        ``datetime.now(tzinfo=timezone(timedelta(hours=-3)))``
+        (ipynb:310)."""
+        return dt.datetime.now(_INGEST_TZINFO).date()
 
     # --- raw zone ---------------------------------------------------------
 
@@ -126,13 +103,11 @@ class TelegramLake:
 
     # --- enriched zone ----------------------------------------------------
 
-    def write_enriched(self, flat: DataFrame, files_per_partition: int = 1) -> None:
-        """Write flattened rows, partitioned by ``context_date``, compacted.
-
-        The default keeps the reference's 1-file-per-day invariant
-        (ipynb:596: one compacted Parquet per partition). At 100 TB a single
-        file per day serializes the write, so callers pass a
-        ``files_per_partition`` sized from input bytes (SURVEY §7 risk 2).
+    def write_enriched(self, flat: DataFrame) -> None:
+        """Write flattened rows, partitioned by ``context_date``, compacted
+        to the reference's one file per day (ipynb:596: one compacted
+        Parquet per partition; `compact_by_partition` has the scale-mode
+        spread over N files that 100 TB would need, SURVEY §7 risk 2).
         Dynamic partition overwrite makes day re-runs idempotent. The write
         is the only Spark action here: views registered through
         :meth:`register_table` are re-registered afterwards under the
@@ -140,9 +115,7 @@ class TelegramLake:
         """
         from ..operators.compaction import compact_by_partition
 
-        compacted = compact_by_partition(
-            flat, "context_date", files_per_partition=files_per_partition
-        )
+        compacted = compact_by_partition(flat, "context_date")
         (
             compacted.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -36,14 +36,17 @@ def run_daily_etl(
     spark: SparkSession,
     lake: TelegramLake,
     context_date: dt.date | str | None = None,
-    files_per_partition: int = 1,
     overwrite_on_empty: bool = False,
 ) -> int:
     """Process one day (default: D-1 on the pipeline's UTC-3 clock, the
     reference's cadence — ipynb:562) from the raw zone into the enriched
-    zone. Only parsed updates are flattened: a raw row whose
-    ``malformed_payload`` holds a rescued webhook body is left out.
-    Returns the number of rows written.
+    zone, compacted to one Parquet file. Only parsed updates are
+    flattened: a raw row whose ``malformed_payload`` holds a rescued
+    webhook body is left out. Returns the number of rows written.
+
+    ``context_date`` is a date or a ``YYYY-M-D`` string; month and day
+    may drop their leading zero, as in Spark's date cast. Anything else
+    raises ``ValueError`` before a Spark job runs.
 
     ``overwrite_on_empty``: when the incoming batch flattens to zero
     rows AND a previously-written partition exists for the day, the
@@ -53,14 +56,20 @@ def run_daily_etl(
     input by deleting the target partition (the strict-idempotency
     mode). Either way the returned count is honestly 0."""
     if context_date is None:
-        context_date = lake.today() - dt.timedelta(days=1)
+        day = lake.today() - dt.timedelta(days=1)
+    elif isinstance(context_date, dt.date):
+        day = context_date
+    else:
+        # one spelling of the day for the raw filter, the partition
+        # literal and the partition directory
+        day = dt.datetime.strptime(context_date, "%Y-%m-%d").date()
 
-    raw = lake.read_raw(spark, context_date=context_date)
+    raw = lake.read_raw(spark, context_date=day)
     parsed = raw.filter(F.col(MALFORMED_COL).isNull())
     flat = flatten_updates(parsed).withColumn(
-        "context_date", F.lit(str(context_date)).cast("date")
+        "context_date", F.lit(str(day)).cast("date")
     )
-    partition_dir = f"{lake.enriched_path}/context_date={context_date}"
+    partition_dir = f"{lake.enriched_path}/context_date={day}"
     # ONE full-scan action: the write. Dynamic partition overwrite replaces
     # a partition only when the input has rows for it, and then always
     # with newly named files; so an unchanged file set means the input was
@@ -70,7 +79,7 @@ def run_daily_etl(
     # ObservationManager on the session, which fails every later task
     # whose closure captures the session, e.g. Spark ML model transforms.)
     before = _parquet_files(spark, partition_dir)
-    lake.write_enriched(flat, files_per_partition=files_per_partition)
+    lake.write_enriched(flat)
     after = _parquet_files(spark, partition_dir)
     if after != before:
         return _row_count(spark, after)
@@ -83,7 +92,7 @@ def run_daily_etl(
             _log.warning(
                 "run_daily_etl: empty input for %s; deleting the "
                 "existing %d-row partition (overwrite_on_empty=True)",
-                context_date, existing,
+                day, existing,
             )
             _delete_path(spark, partition_dir)
         else:
@@ -91,7 +100,7 @@ def run_daily_etl(
                 "run_daily_etl: empty input for %s but the target "
                 "partition holds %d rows from a previous load; "
                 "keeping it (pass overwrite_on_empty=True to delete)",
-                context_date, existing,
+                day, existing,
             )
     return 0
 

@@ -58,8 +58,7 @@ def start_ingest_stream(
         )
     # arrival date on the pipeline's UTC-3 clock (reference ipynb:310)
     stamped = updates.withColumn(
-        "context_date",
-        arrival_date(F.current_timestamp(), lake.ingest_tz),
+        "context_date", arrival_date(F.current_timestamp())
     )
 
     writer = (

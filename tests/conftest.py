@@ -30,9 +30,8 @@ SLOW_MODULES = {
     "test_differential_fuzz",  # 20 oracle fuzz axes, many Spark jobs each
     "test_full_recipe",        # corpus-recipe e2e chains
     # multi-round foreachBatch streams with checkpoint resume
-    # choreography (streaming/{contract_gate,dedup_ingest,pack_stream,
-    # sketch_ledger}); sessions touching those run these files directly
-    "test_streaming_recipe",
+    # choreography (streaming/sketch_ledger); sessions touching it run
+    # this file directly
     "test_sketch_ledger",
 }
 

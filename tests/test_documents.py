@@ -81,7 +81,10 @@ def test_dx1_matches_retired_oracle(spark, sf_dir):
 
 def test_subtitles_ride_the_dispatcher(spark):
     """Round-11 sixth pass: srt/vtt route like tex — raw source in
-    `text`, JVM cue parser resolves in document_plain_text."""
+    `text`, JVM cue parser resolves in document_plain_text. The other
+    formats ride the same distributed path: PDF metadata and text, EPUB
+    markup resolved to visible text, and unopenable containers as error
+    rows quoting the extractor."""
     from data_pipeline_project_using_telegram_and_aws_spark.operators.documents import (
         document_plain_text,
         extract_documents,
@@ -93,7 +96,11 @@ def test_subtitles_ride_the_dispatcher(spark):
 
     df = spark.createDataFrame(
         [(1, bytearray(_SRT_SOURCE.encode())),
-         (2, bytearray(_VTT_SOURCE.encode()))],
+         (2, bytearray(_VTT_SOURCE.encode())),
+         (3, bytearray(_fixture_pdf())),
+         (4, bytearray(_fixture_epub())),
+         (5, bytearray(b"GIF89a not a document")),
+         (6, bytearray(_fixture_epub(encrypted=True)))],
         "doc_id long, doc binary")
     out = {r.doc_id: r for r in
            document_plain_text(extract_documents(df)).collect()}
@@ -101,6 +108,13 @@ def test_subtitles_ride_the_dispatcher(spark):
     assert out[1].plain_text == "Hello from cue one.\nCue two styled."
     assert out[2].format == "vtt" and out[2].n_units == 1
     assert out[2].plain_text == "Ada: Welcome back"
+    assert out[3].title == "Fixture PDF" and out[3].n_units == 2
+    assert "Drip brewing, page one." in out[3].plain_text
+    assert out[4].format == "epub" and out[4].language == "en"
+    assert "Chapter one" in out[4].plain_text
+    assert "<p>" not in out[4].plain_text
+    assert "unsupported container" in out[5].error
+    assert "encrypted epub" in out[6].error
 
 
 def test_fuzz_axis20_mutated_containers_quarantine_promptly(spark):

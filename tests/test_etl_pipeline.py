@@ -242,6 +242,26 @@ def test_etl_empty_rerun_clears_stale_partition_when_opted_in(spark, tmp_path):
     assert glob.glob(f"{lk.enriched_path}/context_date={today}") == []
 
 
+def test_etl_date_without_leading_zeros(spark, tmp_path, spark_jobs):
+    """``2024-1-5`` names the same day as ``2024-01-05``, as Spark's date
+    cast reads it: the run writes the zero-padded partition and returns
+    its row count. A value that is not a date fails before any Spark
+    job runs."""
+    lk = TelegramLake(str(tmp_path), chat_id=CHAT_ID)
+    part = f"{lk.raw_path}/context_date=2024-01-05"
+    os.makedirs(part)
+    with open(os.path.join(part, "b.json"), "w") as f:
+        for u in UPDATES[:3]:
+            f.write(json.dumps(u) + "\n")
+    assert run_daily_etl(spark, lk, context_date="2024-1-5") == 3
+    assert glob.glob(f"{lk.enriched_path}/context_date=2024-01-05/*.parquet")
+
+    with spark_jobs() as jobs:
+        with pytest.raises(ValueError):
+            run_daily_etl(spark, lk, context_date="2024-13-05")
+    assert jobs == []
+
+
 def test_enriched_schema_evolution_reads_union_with_merge(spark, tmp_path):
     """The day the pipeline grows a column, earlier partitions lack the
     field; merge_schema=True returns the union schema with NULLs for

@@ -211,58 +211,3 @@ def test_gram_hash_contract(spark):
     # (2): distinct grams → distinct hashes on this fixture
     all_h = [next(iter(hs)) for hs in by_gram.values()]
     assert len(set(all_h)) == len(by_gram) > 0
-
-
-def test_gram_index_hash_version_stamp(spark, tmp_path):
-    """r14 (ADVICE r13): a persisted gram index is stamped with the
-    hash-recipe version at build time, and the probe/append paths fail
-    LOUDLY on a missing or mismatched stamp — an index built under a
-    different recipe silently matches nothing (duplicates admitted, no
-    error), which is exactly the failure the stamp exists to surface."""
-    import pytest
-
-    from data_pipeline_project_using_telegram_and_aws_spark.operators.substr_dedup import (
-        GRAM_HASH_VERSION,
-        _GRAM_HASH_PROP,
-        append_to_gram_index,
-        build_gram_index,
-        exact_substr_against_index,
-    )
-
-    table = "substr_hashver_idx"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    docs = spark.createDataFrame(
-        [(1, "abcdefghijabcdefghij"), (2, "abcdefghijzzzzzzzzzz")],
-        "doc_id long, text string",
-    )
-    build_gram_index(docs, table, k=8, buckets=2)
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
-    assert props.get(_GRAM_HASH_PROP) == GRAM_HASH_VERSION
-
-    batch = spark.createDataFrame(
-        [(3, "abcdefghijyyyyyyyyyy")], "doc_id long, text string"
-    )
-    # stamped index: probe and append run normally
-    cleaned, _, _ = exact_substr_against_index(spark, batch, table, k=8)
-    assert cleaned.count() == 1
-    append_to_gram_index(spark, batch, table, k=8, batch_id=7)
-
-    # simulate an index persisted under a different/older recipe
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('{_GRAM_HASH_PROP}' = 'md5prefix48-v0')"
-    )
-    with pytest.raises(Exception, match="gram-hash version"):
-        exact_substr_against_index(spark, batch, table, k=8)
-    with pytest.raises(Exception, match="gram-hash version"):
-        append_to_gram_index(spark, batch, table, k=8, batch_id=8)
-    # pre-versioning index (no stamp at all) is refused too
-    spark.sql(
-        f"ALTER TABLE {table} UNSET TBLPROPERTIES ('{_GRAM_HASH_PROP}')"
-    )
-    with pytest.raises(Exception, match="gram-hash version"):
-        exact_substr_against_index(spark, batch, table, k=8)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")

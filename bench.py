@@ -114,27 +114,16 @@ def headline_names(qs: dict) -> list[str]:
     return list(HEADLINE)
 
 
-def _timed_once(spark, fn, warmup: bool) -> float:
-    """One GC-nudged timed execution (plus an untimed warmup of THIS
-    plan when asked — first sweep only). One run per sweep on purpose:
-    back-to-back repeats share the ambient window (module docstring),
-    so extra same-window runs buy correlation, not information — the
-    decorrelated repeats are the sweeps."""
-    if warmup:
-        fn()  # codegen + footers for THIS plan
-    spark._jvm.System.gc()
-    t0 = time.time()
-    fn()
-    return time.time() - t0
-
-
 def _timed_split(spark, build_fn, run_fn, warmup: bool):
-    """Same timed region as :func:`_timed_once` (build + noop write,
-    one GC-nudged run), additionally splitting out the BUILD share —
-    the time to construct the DataFrame (Catalyst analysis, py4j, any
-    lazy-localCheckpoint planning) before the noop action starts.
-    r14 reporting addition only: total = build + exec exactly, the
-    protocol and the per-row totals are the r13 ones unchanged."""
+    """One GC-nudged timed run of build + noop write (plus an untimed
+    warmup of THIS plan when asked — first sweep only), returning the
+    total and its BUILD share — the time to construct the DataFrame
+    (Catalyst analysis, py4j, any lazy-localCheckpoint planning) before
+    the noop action starts. One run per sweep on purpose: back-to-back
+    repeats share the ambient window (module docstring), so extra
+    same-window runs buy correlation, not information — the
+    decorrelated repeats are the sweeps. total = build + exec exactly;
+    the protocol and the per-row totals are the r13 ones."""
     if warmup:
         run_fn(build_fn())
     spark._jvm.System.gc()
@@ -144,10 +133,6 @@ def _timed_split(spark, build_fn, run_fn, warmup: bool):
     run_fn(df)
     t2 = time.time()
     return t2 - t0, t1 - t0
-
-
-def _merge_min(timings: dict, name: str, t: float) -> None:
-    timings[name] = round(min(timings.get(name, float("inf")), t), 3)
 
 
 def _merge_min_split(

@@ -205,12 +205,11 @@ def update_line_df_ledger(
     text_col: str = "text",
 ) -> None:
     """Incremental twin of the corpus-global DF pass — the daily-batch
-    shape (`dedup.exact_dedup_against_index`'s family): each batch
-    reduces to per-line document-frequency increments landed under its
-    own ``ingest_batch`` partition (dynamic overwrite ⇒ at-least-once
-    replay rewrites, never double-counts — the ledger pattern; DF
-    increments are sums, so partition idempotence is the ONLY replay
-    layer, as with the CMS ledger).
+    shape: each batch reduces to per-line document-frequency increments
+    landed under its own ``ingest_batch`` partition (dynamic overwrite
+    ⇒ at-least-once replay rewrites, never double-counts — the ledger
+    pattern; DF increments are sums, so partition idempotence is the
+    ONLY replay layer, as with the CMS ledger).
 
     Row layout per partition: (line_key, line, line_df, n_docs) line
     rows carry a NULL n_docs; ONE metadata row (NULL line_key) carries

@@ -569,151 +569,6 @@ def ngram_containment_pairs(
     )
 
 
-def build_exact_hash_index(
-    docs: DataFrame,
-    table: str,
-    buckets: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Persist the corpus's exact-dedup state as a bucketed
-    (text_hash, keeper id, admitting batch) table — one row per
-    DISTINCT text, bucketed by text_hash so every later probe join is
-    hash-co-located. The exact twin of ``build_minhash_index_table``:
-    write the shuffle once, probe forever. Corpus-built rows carry
-    ``admit_batch = -1`` (they predate batch tracking; a foreachBatch
-    id is never negative, so the replay exemption in
-    :func:`exact_dedup_against_index` can never fire on them)."""
-    spark = docs.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (
-        exact_dedup_keep_first(docs, id_col, text_col)
-        .select(
-            "text_hash",
-            F.col(id_col).alias("keeper_id"),
-            F.lit(-1).cast("long").alias("admit_batch"),
-        )
-        .repartition(buckets, F.col("text_hash"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "text_hash")
-        .sortBy("text_hash")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def exact_dedup_against_index(
-    spark,
-    new_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_id: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental exact dedup for a daily batch: returns
-    ``(admitted, duplicates)`` — admitted rows' texts appear neither in
-    the persisted index nor earlier in the batch itself (lowest id wins
-    within the batch, the batch-mode keeper rule); duplicates carry the
-    keeper they collided with (corpus keepers or the in-batch keeper).
-
-    Plan: hash the batch (projection), ONE equi-join against the
-    bucketed index keyed on text_hash (the batch side shuffles, the
-    corpus side reads in place), one in-batch window for intra-batch
-    dups. After admission, append the admitted (text_hash, keeper,
-    admit_batch) rows via ``insertInto`` — the index grows with the
-    corpus, hashes never recompute.
-
-    ``batch_id`` scopes the replay exemption, and the scoping is what
-    keeps re-admission out: at-least-once replay of the SAME batch id
-    is classification-STABLE — a corpus keeper equal to the probing
-    row's own id AND admitted by THIS batch id is the row itself
-    (indexed by the previous delivery of this very batch), treated as
-    no-match so the original admitted/duplicate split reproduces
-    exactly; the re-append only pads the index with rows it already
-    has (the per-hash min survives; dedupe at compaction). A document
-    RE-SENT under a NEW batch id hits the same index row but fails the
-    batch check and classifies as a duplicate of the corpus copy (its
-    keeper is its own id) — the same bytes can never land in two good-
-    zone partitions. With ``batch_id=None`` (one-shot batch callers,
-    no delivery tracking) the exemption is OFF entirely: any indexed
-    text, including one whose keeper is the probing row itself,
-    rejects — the re-admission-proof default; pass the admitting batch
-    id whenever the caller replays."""
-    hashed = with_text_hash(new_docs, text_col)
-    # one keeper per hash, carried with ITS admitting batch: the
-    # struct-min picks the same winner the old min(keeper_id) did and
-    # rides the admit_batch along. min() is bucket-local (table is
-    # bucketed on text_hash); replay paddings collapse here too.
-    index = (
-        spark.table(table)
-        .groupBy("text_hash")
-        .agg(F.min(F.struct("keeper_id", "admit_batch")).alias("__m"))
-        .select(
-            "text_hash",
-            F.col("__m.keeper_id").alias("__corpus_keeper"),
-            F.col("__m.admit_batch").alias("__corpus_admit_batch"),
-        )
-    )
-    marked = hashed.join(index, "text_hash", "left")
-    if batch_id is not None:
-        exempt = (F.col("__corpus_keeper") == F.col(id_col)) & (
-            F.col("__corpus_admit_batch") == F.lit(int(batch_id))
-        )
-        # when() without otherwise yields null on exempt=true AND on
-        # the no-match null, exactly the two no-match cases
-        marked = marked.withColumn(
-            "__corpus_keeper",
-            F.when(~exempt, F.col("__corpus_keeper")),
-        )
-    w = Window.partitionBy("text_hash").orderBy(id_col)
-    marked = marked.withColumn(
-        "__batch_rank", F.row_number().over(w)
-    ).withColumn(
-        "__batch_keeper", F.min(id_col).over(Window.partitionBy("text_hash"))
-    )
-    is_dup = F.col("__corpus_keeper").isNotNull() | (
-        F.col("__batch_rank") > 1
-    )
-    duplicates = marked.filter(is_dup).select(
-        F.col(id_col),
-        "text_hash",
-        F.coalesce("__corpus_keeper", "__batch_keeper").alias("keeper_id"),
-    )
-    admitted = marked.filter(~is_dup).drop(
-        "__corpus_keeper", "__corpus_admit_batch",
-        "__batch_rank", "__batch_keeper",
-    )
-    return admitted, duplicates
-
-
-def append_to_exact_hash_index(
-    spark,
-    admitted: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    batch_id: int | None = None,
-) -> None:
-    """Grow the index with an admitted batch (bucket spec preserved by
-    insertInto — position-based, so follow the catalog's order).
-    ``batch_id`` stamps ``admit_batch`` so
-    :func:`exact_dedup_against_index` can scope its replay exemption
-    to this delivery; None (one-shot callers) stamps -1, which never
-    matches a real batch id."""
-    stamp = F.lit(int(batch_id) if batch_id is not None else -1).cast(
-        "long"
-    )
-    (
-        admitted.select(
-            "text_hash",
-            F.col(id_col).alias("keeper_id"),
-            stamp.alias("admit_batch"),
-        )
-        .select(*spark.table(table).columns)
-        .write.mode("append")
-        .insertInto(table)
-    )
-
-
 def cross_source_dup_matrix(
     docs: DataFrame,
     source_col: str = "source",

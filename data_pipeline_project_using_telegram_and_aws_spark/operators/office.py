@@ -54,8 +54,9 @@ XML parts", so one stdlib toolbox covers them:
   quarantine row, not silent empties.
 
 All extractors raise ``ValueError`` naming the defect on structural
-failure (bad zip, missing required part, XML that does not parse) —
-the front-door quarantine contract from `streaming/media_ingest.py`.
+failure (bad zip, missing required part, XML that does not parse), so
+a caller can quarantine the row with that reason instead of crashing
+on it or storing empty text.
 Namespace handling matches on LOCAL names: OOXML ships in both
 transitional (``schemas.openxmlformats.org``) and strict
 (``purl.oclc.org/ooxml``) namespaces with identical local structure,

@@ -56,8 +56,7 @@ What is implemented, exactly:
 - **Metadata**: trailer ``/Info`` (title/author/subject/keywords/
   creator/producer/dates) with UTF-16BE and UTF-8 BOM handling.
   ``/Encrypt`` in the trailer raises — encrypted documents are a
-  quarantine row (`streaming/media_ingest.py` doctrine), not empty
-  strings.
+  quarantine row for the caller, not empty strings.
 
 Out of scope, stated: rendering order vs reading order (we emit
 content-stream order, which is reading order for every text-first

@@ -157,7 +157,8 @@ def compact_bucketed_table(
     — the swap is metadata-only; the data rewrite is the price of
     restoring the layout, paid at compaction cadence, not query time.
 
-    Two swap protocols (``swap=``), mirroring `sources/commit.py`:
+    Two swap protocols (``swap=``), the rename and manifest-pointer
+    models of the filesystem-atomicity note in `sources/lake.py`:
 
     - ``"rename"`` (default): two catalog renames. NOT atomic — between
       the renames the original name does not resolve, so run it in a

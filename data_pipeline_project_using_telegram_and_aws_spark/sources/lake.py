@@ -15,28 +15,26 @@ the enriched zone use *dynamic partition overwrite*, so re-running a day is
 idempotent (the reference would duplicate output).
 
 Filesystem-atomicity note, stated ONCE for every temp-and-swap path in
-this repo (`streaming/ledger_compaction.py` baseline commits,
-`sources/commit.py` directory commits, `sources/bucketing.py`
-compactions): their rename-mode crash-consistency arguments rely on
+this repo (`streaming/ledger_compaction.py` baseline commits and
+`sources/bucketing.py` compactions): their rename-mode crash-consistency
+arguments rely on
 directory ``rename`` being atomic — true on POSIX filesystems and HDFS,
 FALSE on object stores, where rename is a non-atomic per-object
 copy-then-delete. The object-store deployment path is a MANIFEST
 POINTER instead: write the new data under a unique directory, then
 atomically update a small manifest file or catalog entry naming the
 current directory (the Iceberg/Delta commit model); readers resolve the
-pointer, never the directory name. Each swap site cites this note, and
-each implements the pointer path:
+pointer, never the directory name. Both swap sites cite this note, and
+both implement the pointer path:
 ``streaming/ledger_compaction.commit_baseline(mode="manifest")``
 commits ledger baselines via a versioned directory + one atomic
 single-file replace (a single-key PUT on a real object store), with
 the same crash-injection suite green as the rename path
-(`tests/test_ledger_compaction.py`); the generic
-`sources/commit.commit_dir` gives every plain-directory swap the same
-two modes (`operators/webdataset.py` ``commit="manifest"`` shard
-publishes adopt it); and `sources/bucketing.py` compactions use
-``swap="location"`` — the catalog itself as the pointer store (ONE
-atomic ``ALTER TABLE ... SET LOCATION`` onto a fresh version dir, no
-reader window, crash-injected in `tests/test_bucketing.py`).
+(`tests/test_ledger_compaction.py`); and `sources/bucketing.py`
+compactions use ``swap="location"`` — the catalog itself as the
+pointer store (ONE atomic ``ALTER TABLE ... SET LOCATION`` onto a
+fresh version dir, no reader window, crash-injected in
+`tests/test_bucketing.py`).
 """
 
 from __future__ import annotations

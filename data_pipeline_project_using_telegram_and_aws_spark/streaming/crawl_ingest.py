@@ -1,6 +1,5 @@
 """Streaming CRAWL front door — WARC files landing in a directory →
-three zones, the web-scale twin of `streaming/media_ingest.py` and the
-text front door, completing the chain: crawler drops .warc.gz, this
+three zones, completing the chain: crawler drops .warc.gz, this
 stream turns them into quality-gateable text rows.
 
 Per micro-batch of WARC FILES (the file is the unit of both discovery
@@ -19,7 +18,7 @@ and parallelism — CommonCrawl sizes them ~1 GiB for exactly this):
    - other: records that parsed but are not 200 text/html responses
      (media payloads, redirects, robots fetches, request/metadata
      records) — NOT defects; kept with their typing columns so a
-     media pipeline can pick them up (`streaming/media_ingest.py`);
+     media pipeline can pick them up;
    - good: 200 text/html responses, extracted on the spot —
      ``text`` (visible text), ``main_text`` (anchor-density
      boilerplate gate), title/description/lang/canonical metadata —

@@ -36,7 +36,6 @@ def run_daily_etl(
     spark: SparkSession,
     lake: TelegramLake,
     context_date: dt.date | str | None = None,
-    overwrite_on_empty: bool = False,
 ) -> int:
     """Process one day (default: D-1 on the pipeline's UTC-3 clock, the
     reference's cadence — ipynb:562) from the raw zone into the enriched
@@ -48,13 +47,10 @@ def run_daily_etl(
     may drop their leading zero, as in Spark's date cast. Anything else
     raises ``ValueError`` before a Spark job runs.
 
-    ``overwrite_on_empty``: when the incoming batch flattens to zero
-    rows AND a previously-written partition exists for the day, the
-    default is to KEEP the existing data (a transient empty/failed
-    upstream export must not silently destroy a good load) and log the
-    divergence loudly; pass True to make the empty re-run mirror the
-    input by deleting the target partition (the strict-idempotency
-    mode). Either way the returned count is honestly 0."""
+    When the day flattens to zero rows and a previously written
+    partition exists for it, that partition is KEPT (a transient empty
+    or failed upstream export must not silently destroy a good load)
+    and the divergence is logged loudly. The returned count is 0."""
     if context_date is None:
         day = lake.today() - dt.timedelta(days=1)
     elif isinstance(context_date, dt.date):
@@ -84,33 +80,16 @@ def run_daily_etl(
     if after != before:
         return _row_count(spark, after)
     # Empty input: the previous run's files, if any, survive. Report
-    # honestly 0; whether the stale partition is also deleted is the
-    # caller's call (overwrite_on_empty) — never a silent default.
+    # honestly 0 and say loudly that the partition no longer mirrors
+    # the input.
     existing = _row_count(spark, after)
     if existing > 0:
-        if overwrite_on_empty:
-            _log.warning(
-                "run_daily_etl: empty input for %s; deleting the "
-                "existing %d-row partition (overwrite_on_empty=True)",
-                day, existing,
-            )
-            _delete_path(spark, partition_dir)
-        else:
-            _log.warning(
-                "run_daily_etl: empty input for %s but the target "
-                "partition holds %d rows from a previous load; "
-                "keeping it (pass overwrite_on_empty=True to delete)",
-                day, existing,
-            )
+        _log.warning(
+            "run_daily_etl: empty input for %s but the target "
+            "partition holds %d rows from a previous load; keeping it",
+            day, existing,
+        )
     return 0
-
-
-def _delete_path(spark: SparkSession, directory: str) -> None:
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(directory)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(path):
-        fs.delete(path, True)
 
 
 def _parquet_files(spark: SparkSession, directory: str) -> list[str]:

@@ -263,8 +263,8 @@ def _commit_baseline_manifest(
     # rename-era leftovers (legacy baseline already folded + retired,
     # staging/trash from pre-migration crashes)
     for d in root.glob(_VERSION_PREFIX + "*"):
-        # is_dir guard mirrors sources/commit.py: a stray FILE with
-        # the version prefix must not abort the compaction pre-commit
+        # is_dir guard: a stray FILE with the version prefix must not
+        # abort the compaction pre-commit
         if d.is_dir() and d.name != live:
             _rmtree(d)
     tmp = root / (MANIFEST_FILE + ".tmp")

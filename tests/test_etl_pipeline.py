@@ -196,8 +196,8 @@ def test_etl_empty_rerun_reports_zero_and_keeps_good_data_by_default(
     """Re-running a day whose raw input vanished must not report the
     PREVIOUS run's rows as this run's output — but a transient empty
     upstream export must not silently destroy a good load either
-    (round-5 ADVICE): the default keeps the existing partition and
-    warns loudly; deletion is the opt-in strict-idempotency mode."""
+    (round-5 ADVICE): the run keeps the existing partition and warns
+    loudly."""
     import logging
     import shutil
 
@@ -216,30 +216,6 @@ def test_etl_empty_rerun_reports_zero_and_keeps_good_data_by_default(
     # the good 2-row partition survives, and the divergence is loud
     assert glob.glob(f"{lk.enriched_path}/context_date={today}") != []
     assert any("keeping it" in r.message for r in caplog.records)
-
-
-def test_etl_empty_rerun_clears_stale_partition_when_opted_in(spark, tmp_path):
-    """overwrite_on_empty=True restores strict input-mirroring: the
-    empty re-run deletes the target partition (dynamic partition
-    overwrite alone would leave the old files to be footer-counted as
-    fresh output)."""
-    import shutil
-
-    lk = TelegramLake(str(tmp_path), chat_id=CHAT_ID)
-    today = lk.today()
-    part = f"{lk.raw_path}/context_date={today}"
-    os.makedirs(part)
-    with open(os.path.join(part, "b.json"), "w") as f:
-        for u in UPDATES[:2]:
-            f.write(json.dumps(u) + "\n")
-    assert run_daily_etl(spark, lk, context_date=today) == 2
-
-    shutil.rmtree(part)
-    assert (
-        run_daily_etl(spark, lk, context_date=today, overwrite_on_empty=True)
-        == 0
-    )
-    assert glob.glob(f"{lk.enriched_path}/context_date={today}") == []
 
 
 def test_etl_date_without_leading_zeros(spark, tmp_path, spark_jobs):

@@ -312,6 +312,15 @@ def test_flac_failures_are_loud():
     )
     with pytest.raises(ValueError, match="STREAMINFO promises"):
         decode_flac(_flac(8000, 1, 16, [stereo_frame], n))
+    # the audio container dispatcher keeps both decoders' raises
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.media_codecs import (
+        _decode_audio,
+    )
+
+    with pytest.raises(ValueError, match="truncated"):
+        _decode_audio(b"fLaC" + bytes(10))
+    with pytest.raises(ValueError, match="not a riff"):
+        _decode_audio(b"ID3 not a wav")
 
 
 def test_flac_and_wav_read_identically_through_spark(spark):

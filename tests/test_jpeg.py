@@ -354,8 +354,8 @@ def test_jpeg_failures_are_loud():
                         {0: Q16}, precision=10)
         )
     # truncated DHT: counts promise 5 symbols, segment ships 2 — must
-    # be ValueError (quarantine contract), not an IndexError escaping
-    # media_ingest._decode_or_error's per-row catch
+    # be ValueError naming the defect, not an IndexError from reading
+    # past the segment
     trunc_dht = (
         b"\xff\xd8"
         + b"\xff\xc4" + (2 + 1 + 16 + 2).to_bytes(2, "big")

@@ -466,6 +466,9 @@ def test_real_progressive_files_decode():
         # stripes are bright: the global mean must sit in the upper
         # half of the range (a garbled decode lands near 0 or noise)
         assert px.mean() > 128, (path, px.mean())
+        # a copy torn mid-scan is a loud defect, not a partial image
+        with pytest.raises(ValueError, match="truncated"):
+            decode_jpeg(raw[: len(raw) // 3])
 
 
 def test_progressive_12bit_dc_then_ac():

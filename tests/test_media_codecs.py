@@ -80,6 +80,16 @@ def test_decoder_failures_are_loud():
     bad_bpp[28] = 8
     with pytest.raises(ValueError, match="only 24-bit"):
         decode_bmp(bytes(bad_bpp))
+    # the container dispatcher names the container it failed on, or
+    # says it could not name one
+    from data_pipeline_project_using_telegram_and_aws_spark.operators.media_codecs import (
+        _decode,
+    )
+
+    with pytest.raises(ValueError, match="jpeg"):
+        _decode(b"\xff\xd8\xffcorrupt jpeg")
+    with pytest.raises(ValueError, match="undecodable container"):
+        _decode(b"OggS not an image at all")
 
 
 def test_real_decoder_through_spark_plumbing(spark):

@@ -11,7 +11,12 @@ the reachable files: each must be named by product code outside its
 own definition (called, imported, or read as an attribute), or be
 listed in ``PENDING_DEFS``. Prose in docstrings and comments does not
 count; tests and tools do not count. Static: stdlib ``ast`` over the
-source, imports inside function bodies included, no Spark session."""
+source, imports inside function bodies included, no Spark session.
+
+Tools are not product, but what they import from the package must
+exist: a deleted module or def fails here under the tool that still
+names it, even when that import sits in a function body that
+``--help`` never runs."""
 
 from __future__ import annotations
 
@@ -73,15 +78,12 @@ PENDING_DELETION = {
     "operators/token_ids.py",
     "operators/topics.py",
     "operators/unigram_tokenizer.py",
-    "operators/webdataset.py",
     "sources/archives.py",
-    "sources/commit.py",
     "sources/interchange.py",
     "sources/retention.py",
     "streaming/crawl_ingest.py",
     "streaming/index_maintenance.py",
     "streaming/ledger_compaction.py",
-    "streaming/media_ingest.py",
     "streaming/quota.py",
     "streaming/sketch_ledger.py",
     "streaming/stat_ledgers.py",
@@ -93,8 +95,6 @@ DRIVER_CONTRACT = {"entry", "queries", "oracle_sql"}
 # tools or prose may); each leaves this list when it is deleted or wired
 # into the product
 PENDING_DEFS = {
-    "bench.py::_merge_min",
-    "bench.py::_timed_once",
     "functions/scale_rules.py::dsir_rowlocal_max_buckets",
     "functions/scale_rules.py::skew_n_salts",
     "operators/asof.py::asof_join_forward",
@@ -110,12 +110,9 @@ PENDING_DEFS = {
     "operators/decontamination.py::decontaminate_corpus",
     "operators/decontamination.py::semantic_contamination_against_table",
     "operators/decontamination.py::semantically_contaminated_ids",
-    "operators/dedup.py::append_to_exact_hash_index",
-    "operators/dedup.py::build_exact_hash_index",
     "operators/dedup.py::build_minhash_index_table",
     "operators/dedup.py::cross_source_dup_matrix",
     "operators/dedup.py::dedup_against_index",
-    "operators/dedup.py::exact_dedup_against_index",
     "operators/dedup.py::minhash_signatures",
     "operators/dedup.py::ngram_containment_pairs",
     "operators/feeds.py::feed_metadata",
@@ -246,6 +243,63 @@ def _reachable_files() -> set[str]:
     return seen
 
 
+def _top_level_names(path: str) -> set[str]:
+    """Names a module binds at import time: its top-level defs,
+    classes, assignments and imports."""
+    with open(os.path.join(ROOT, path)) as f:
+        tree = ast.parse(f.read())
+    names = set()
+    for st in tree.body:
+        if isinstance(
+            st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            names.add(st.name)
+        elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+            targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+            names.update(
+                n.id for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name)
+            )
+        elif isinstance(st, (ast.Import, ast.ImportFrom)):
+            names.update(
+                (a.asname or a.name).partition(".")[0] for a in st.names
+            )
+    return names
+
+
+def unresolved_tool_imports() -> list[str]:
+    """``tool:line: module.name`` for every package import in
+    ``tools/*.py`` whose module does not exist or does not bind the
+    imported name at top level (a submodule counts as bound)."""
+    modules = _package_modules()
+    bad = []
+    for tool in sorted(glob.glob("tools/*.py", root_dir=ROOT)):
+        with open(os.path.join(ROOT, tool)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                wanted = {a.name: [] for a in node.names}
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                wanted = {node.module: [a.name for a in node.names]}
+            else:
+                continue
+            for module, names in wanted.items():
+                if module.split(".")[0] != PKG:
+                    continue
+                if module not in modules:
+                    bad.append(f"{tool}:{node.lineno}: {module}")
+                    continue
+                bound = _top_level_names(modules[module])
+                bad += [
+                    f"{tool}:{node.lineno}: {module}.{name}"
+                    for name in names
+                    if name != "*"
+                    and f"{module}.{name}" not in modules
+                    and name not in bound
+                ]
+    return bad
+
+
 def unreachable_modules() -> list[str]:
     seen = _reachable_files()
     return sorted(p for p in _package_modules().values() if p not in seen)
@@ -314,4 +368,12 @@ def test_every_reachable_def_is_named_or_pending():
         f"{len(new)} defs no product code names:\n" + "\n".join(new)
         + "\ndeleted or now named; drop from PENDING_DEFS:\n"
         + "\n".join(stale)
+    )
+
+
+def test_every_package_import_in_tools_resolves():
+    bad = unresolved_tool_imports()
+    assert not bad, (
+        f"{len(bad)} tool imports name a missing module or def:\n"
+        + "\n".join(bad)
     )

@@ -20,6 +20,7 @@ from data_pipeline_project_using_telegram_and_aws_spark.operators.video import (
     decode_avi_frames,
     decode_video_frames,
     decode_y4m,
+    frames_decodable,
     numpy_video_frame_sampler,
     probe_avi,
     probe_video,
@@ -318,6 +319,11 @@ def test_sniff_and_probe_dispatch():
     assert sniff_video(b"garbage") is None
     assert probe_video(y4m)["major_brand"] == "y4m"
     assert probe_video(avi)["major_brand"] == "avi"
+    assert frames_decodable(y4m) and frames_decodable(avi)
+    with pytest.raises(ValueError, match="avih"):
+        probe_video(b"RIFF\x10\x00\x00\x00AVI corrupt")
+    with pytest.raises(ValueError):
+        probe_video(b"not video at all")
     with pytest.raises(ValueError):
         decode_video_frames(b"\x00\x00\x00\x18ftypisom")
 

@@ -813,13 +813,12 @@ def probe_substr(spark, n_docs: int) -> dict:
 
 
 def probe_video(spark, n_rows: int) -> dict:
-    """The video surface at growing corpus sizes: per-stage wall
-    times for (a) the front door's probe-only triage (header walks,
-    no pixels) and (b) real Y4M frame decode + hashing through
-    `multimodal.sample_frames`. Both are single mapInPandas stages
-    with zero data-dependent shuffles — per-row work is constant
-    (fixed 6-frame 64x32 clips), so the exponent over n_rows is the
-    thing to watch (~1.0 expected; parallelism is rows-per-batch)."""
+    """The video surface at growing corpus sizes: wall time of real
+    Y4M frame decode + hashing through `multimodal.sample_frames`, a
+    single mapInPandas stage with zero data-dependent shuffles —
+    per-row work is constant (fixed 6-frame 64x32 clips), so the
+    exponent over n_rows is the thing to watch (~1.0 expected;
+    parallelism is rows-per-batch)."""
     import numpy as np
 
     from data_pipeline_project_using_telegram_and_aws_spark.operators.multimodal import (
@@ -827,10 +826,6 @@ def probe_video(spark, n_rows: int) -> dict:
     )
     from data_pipeline_project_using_telegram_and_aws_spark.operators.video import (
         numpy_video_frame_sampler,
-    )
-    from data_pipeline_project_using_telegram_and_aws_spark.streaming.media_ingest import (
-        VIDEO_TRIAGE_DDL,
-        _probe_video_or_error,
     )
 
     w, h, n_frames = 64, 32, 6
@@ -852,11 +847,6 @@ def probe_video(spark, n_rows: int) -> dict:
         "media_id long, media binary",
     ).repartition(32).localCheckpoint(eager=True)
 
-    def probe_stage():
-        return df.mapInPandas(
-            _probe_video_or_error, VIDEO_TRIAGE_DDL
-        ).filter("decode_error is null").count()
-
     def decode_stage():
         return sample_frames(
             df, max_frames=3, frame_sampler=numpy_video_frame_sampler
@@ -871,15 +861,12 @@ def probe_video(spark, n_rows: int) -> dict:
             best = dt if best is None else min(best, dt)
         return best
 
-    # warmup both Python-worker pools, then best-of-2 (same method as
+    # warmup the Python-worker pool, then best-of-2 (same method as
     # the other probe families: fixed overhead out of the exponent)
-    assert probe_stage() == n_rows
     assert decode_stage() == 3 * n_rows
-    t_probe = timed_best2(probe_stage)
     t_decode = timed_best2(decode_stage)
     return {
         "n_rows": n_rows,
-        "probe_s": round(t_probe, 3),
         "decode_sample_s": round(t_decode, 3),
     }
 
